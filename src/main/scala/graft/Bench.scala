@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Benchmark main (driver contract): runs every SparkEntry query on
@@ -35,15 +34,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val nCpus = Session.cpus
+    val spark = Session.local(nCpus)
 
     // warmup: exercise scan + shuffle + codegen paths once on the
     // smallest SF so stage-0 JIT/codegen cost doesn't land on the first
@@ -59,10 +51,6 @@ object Bench {
     // is a warmup data ROOT (containing sf0.001/sf0.01), not a single
     // dir — a single dir would collapse the two deliberately different
     // warmup scales onto one dataset.
-    if (sys.env.contains("SPARK_GRAFT_WARMUP_DIR"))
-      System.err.println("[bench] SPARK_GRAFT_WARMUP_DIR is obsolete and " +
-        "IGNORED — set SPARK_GRAFT_WARMUP_ROOT to the data root " +
-        "containing sf0.001/sf0.01")
     val dataRoot = sys.env.get("SPARK_GRAFT_WARMUP_ROOT")
       .map(new java.io.File(_))
       .getOrElse(new java.io.File(sfDir).getAbsoluteFile.getParentFile)
@@ -98,7 +86,6 @@ object Bench {
     // query's cached state (a fresh range each call — nothing to cache,
     // nothing to spill). ~0.2-0.5 s quiet on 32 threads; a host stall
     // inflates it by the same contention factor it inflates the queries.
-    val nCpus = cpus.toInt
     def canaryOnce(): Double = {
       val t0 = System.nanoTime()
       // bit_xor, not sum: 64M xxhash64 values sum past Long.MaxValue

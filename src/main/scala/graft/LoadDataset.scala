@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.catalog.Warehouse
 import graft.datasets.Registry
 import graft.runner.{ConsoleNotifier, DbTool, JobRunner}
@@ -39,16 +37,7 @@ object LoadDataset {
       sys.exit(2)
     }
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-load-dataset")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus)
 
     val wh = new Warehouse(whDir)
     val store = new FileStateStore(

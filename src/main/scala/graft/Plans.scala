@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps formatted physical plans (+ final AQE plans) for the
   * representative queries into PLANS.md — the `.explain("formatted")`
   * audit trail the scale design is iterated against (see PlanSpec for
@@ -14,14 +12,8 @@ import org.apache.spark.sql.SparkSession
 object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val out = args.drop(1).headOption.getOrElse("/root/repo/PLANS.md")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val out = args.drop(1).headOption.getOrElse("PLANS.md")
+    val spark = Session.local(4)
     spark.sparkContext.setLogLevel("ERROR")
 
     val picks = Seq(

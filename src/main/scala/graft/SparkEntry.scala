@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.queries._
+
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
   * Aggregates every implemented operator's named query + DuckDB oracle
@@ -15,85 +17,22 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     graft.queries.Flagship.bldgs(spark, "/root/testdata/sf0.001")
 
+  /** Every query module, listed once; each query name belongs to exactly
+    * one of them.
+    */
+  val modules: Seq[QueryModule] = Seq(
+    Flagship, Relational, Extensions, Analytics, Advanced, Mining, Mining2,
+    Mining3, Eval, Stats, Causal, Behavior, Diverge, Trend, Series, Signals,
+    Growth, Steward, Warp, Journey, Pref, Season, Geo, Shape, Robust, Fit,
+    Panel, Exp, Audit, Guard, Seg, Meta, Strat, Uplift, Curate, Select,
+    Clean)
+
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    graft.queries.Flagship.queries ++
-      graft.queries.Relational.queries ++
-      graft.queries.Extensions.queries ++
-      graft.queries.Analytics.queries ++
-      graft.queries.Advanced.queries ++
-      graft.queries.Mining.queries ++
-      graft.queries.Mining2.queries ++
-      graft.queries.Mining3.queries ++
-      graft.queries.Eval.queries ++
-      graft.queries.Stats.queries ++
-      graft.queries.Causal.queries ++
-      graft.queries.Behavior.queries ++
-      graft.queries.Diverge.queries ++
-      graft.queries.Trend.queries ++
-      graft.queries.Series.queries ++
-      graft.queries.Signals.queries ++
-      graft.queries.Growth.queries ++
-      graft.queries.Steward.queries ++
-      graft.queries.Warp.queries ++
-      graft.queries.Journey.queries ++
-      graft.queries.Pref.queries ++
-      graft.queries.Season.queries ++
-      graft.queries.Geo.queries ++
-      graft.queries.Shape.queries ++
-      graft.queries.Robust.queries ++
-      graft.queries.Fit.queries ++
-      graft.queries.Panel.queries ++
-      graft.queries.Exp.queries ++
-      graft.queries.Audit.queries ++
-      graft.queries.Guard.queries ++
-      graft.queries.Seg.queries ++
-      graft.queries.Meta.queries ++
-      graft.queries.Strat.queries ++
-      graft.queries.Uplift.queries ++
-      graft.queries.Curate.queries ++
-      graft.queries.Select.queries ++
-      graft.queries.Clean.queries
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    modules.map(_.queries).reduce(_ ++ _)
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted keys get a rows-only check.
     */
-  def oracleSql: Map[String, String] =
-    graft.queries.Flagship.oracles ++
-      graft.queries.Relational.oracles ++
-      graft.queries.Extensions.oracles ++
-      graft.queries.Analytics.oracles ++
-      graft.queries.Advanced.oracles ++
-      graft.queries.Mining.oracles ++
-      graft.queries.Mining2.oracles ++
-      graft.queries.Mining3.oracles ++
-      graft.queries.Eval.oracles ++
-      graft.queries.Stats.oracles ++
-      graft.queries.Causal.oracles ++
-      graft.queries.Behavior.oracles ++
-      graft.queries.Diverge.oracles ++
-      graft.queries.Trend.oracles ++
-      graft.queries.Series.oracles ++
-      graft.queries.Signals.oracles ++
-      graft.queries.Growth.oracles ++
-      graft.queries.Steward.oracles ++
-      graft.queries.Warp.oracles ++
-      graft.queries.Journey.oracles ++
-      graft.queries.Pref.oracles ++
-      graft.queries.Season.oracles ++
-      graft.queries.Geo.oracles ++
-      graft.queries.Shape.oracles ++
-      graft.queries.Robust.oracles ++
-      graft.queries.Fit.oracles ++
-      graft.queries.Panel.oracles ++
-      graft.queries.Exp.oracles ++
-      graft.queries.Audit.oracles ++
-      graft.queries.Guard.oracles ++
-      graft.queries.Seg.oracles ++
-      graft.queries.Meta.oracles ++
-      graft.queries.Strat.oracles ++
-      graft.queries.Uplift.oracles ++
-      graft.queries.Curate.oracles ++
-      graft.queries.Select.oracles ++
-      graft.queries.Clean.oracles
+  val oracleSql: Map[String, String] = modules.map(_.oracles).reduce(_ ++ _)
 }

@@ -508,7 +508,7 @@ object Dedup {
     // (~8 B/gram columnar) and both probes reuse the partitions.
     // Opt-in: the materialization (~|corpus| x |set| longs) only pays
     // for itself when the text->set pipeline dominates the verify
-    // join — ScaleProbe measures the band shift at the sf1 replica.
+    // join.
     val hsets0 = sets.select(col("id"),
       sort_array(transform(col("__set"), g0 => xxhash64(g0))).as("__h"))
     val hsets = if (cacheVerifySets) hsets0.localCheckpoint() else hsets0

@@ -226,18 +226,13 @@ object ConnectedComponents {
 
     var (converged, cnt) = probe(e)
     var it = 0
-    val debug = sys.env.contains("GRAFT_CC_DEBUG")
     while (!converged && cnt > driverFinishEdges && it < maxIter) {
-      val t0 = System.nanoTime()
       val next = truncate(smallStar(largeStar(e)))
       release(e) // next is materialized; the prior round's blocks are dead
       e = next
-      val t1 = System.nanoTime()
       val (c2, n2) = probe(e)
       converged = c2; cnt = n2
       it += 1
-      if (debug) System.err.println(
-        f"[cc] round $it: star=${(t1 - t0) / 1e9}%.2fs probe=${(System.nanoTime() - t1) / 1e9}%.2fs converged=$converged edges=$cnt")
     }
     if (!converged && cnt > driverFinishEdges)
       throw new IllegalStateException(
@@ -250,7 +245,6 @@ object ConnectedComponents {
         .select(col("dst").as("node"), col("dst").as("component"))
       members.union(roots)
     } else {
-      if (debug) System.err.println(s"[cc] driver finish at $cnt edges")
       val fin = driverFinish(e) // eager collect; e's blocks are dead after
       release(e)
       fin

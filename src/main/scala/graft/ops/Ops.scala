@@ -43,6 +43,9 @@ object Ops {
     * guide §2.5's round-robin caveat); results are unchanged because
     * every caller's downstream semantics are partitioning-independent
     * (oracle-checked queries by construction).
+    *
+    * Reads through a catalog or temp view (`View` nodes) are not on the
+    * narrow whitelist and come back unchanged.
     */
   def fanOutForCompute(df: DataFrame, key: Column): DataFrame = {
     // SCAN-SHAPED plans only: materializing `.rdd` under AQE runs every
@@ -56,10 +59,15 @@ object Ops {
     // stages, its `.rdd` is pure planning, and it is exactly the
     // narrow-scan shape this helper exists for. Anything else is
     // treated as wide and returned unchanged — already
-    // shuffle-partitions wide, or its author chose its layout.
+    // shuffle-partitions wide, or its author chose its layout. A
+    // whitelisted node can still carry a subquery expression (a Filter
+    // on a scalar subquery over an aggregate), and `exists` does not
+    // descend into it, so any node with one counts as wide too.
+    import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
     import org.apache.spark.sql.catalyst.plans.{logical => lp}
     import org.apache.spark.sql.{execution => ex}
     val narrow = !df.queryExecution.analyzed.exists { // no non-whitelisted node
+      case n if n.expressions.exists(SubqueryExpression.hasSubquery) => true
       case _: lp.Project | _: lp.Filter | _: lp.Generate | _: lp.Union |
            _: lp.SubqueryAlias | _: lp.LocalRelation | _: lp.Range |
            _: lp.OneRowRelation => false

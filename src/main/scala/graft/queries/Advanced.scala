@@ -22,7 +22,7 @@ import graft.functions.StringSimilarity
   * 6 dp and sum as DECIMAL so combine order can't move a digit (acf1,
   * sim1 — the t10/t13 discipline).
   */
-object Advanced {
+object Advanced extends QueryModule {
 
   // ---- tri1: triangle counting / clustering coefficients ------------
 

@@ -21,7 +21,7 @@ import graft.text.{Search, TextFunctions}
   * digit, and exact-DECIMAL sums + identical rational formulas (the
   * a18 pattern) for the regression/drift statistics.
   */
-object Analytics {
+object Analytics extends QueryModule {
 
   // ---- ent1: per-document word entropy ------------------------------
 
@@ -35,7 +35,7 @@ object Analytics {
   def ent1WordEntropy(s: SparkSession, d: String): DataFrame =
     wordEntropyOn(Tables.documents(s, d))
 
-  /** Frame-parameterized core (AnalyticsProbe feeds the sf1 replica). */
+  /** Frame-parameterized core: the query over any documents frame. */
   private[graft] def wordEntropyOn(docs: DataFrame): DataFrame = {
     val toks = docs
       .select(col("doc_id"),

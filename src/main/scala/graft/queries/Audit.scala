@@ -21,7 +21,7 @@ import graft.similarity.Similarity
   * a (label x dim)-bounded centroid aggregate plus one broadcast-join
   * scoring pass.
   */
-object Audit {
+object Audit extends QueryModule {
 
   /** knn2: each vector's 5 nearest non-self neighbors (exact cosine,
     * ann4 tie-break) vote; the plurality label (count DESC, label ASC

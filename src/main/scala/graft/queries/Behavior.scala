@@ -19,7 +19,7 @@ import graft.Tables
   * assembly order, then rounded to 6 dp — the established reg2/tw1
   * discipline.
   */
-object Behavior {
+object Behavior extends QueryModule {
 
   // ---- att1: last-touch attribution -----------------------------------
 

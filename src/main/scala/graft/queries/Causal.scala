@@ -19,7 +19,7 @@ import graft.Tables
   * irrational is ln(N) of an integer (<= 1 ulp in both engines,
   * absorbed by round 6).
   */
-object Causal {
+object Causal extends QueryModule {
 
   // ---- did1: difference-in-differences --------------------------------
 

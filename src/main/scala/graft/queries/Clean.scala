@@ -19,7 +19,7 @@ import graft.Tables
   * is fully two-engine checkable (unlike the seeded xxhash64 dd
   * family, which carries recall gates instead).
   */
-object Clean {
+object Clean extends QueryModule {
 
   /** Winnowing gram length (chars) and window (grams): every window
     * of W consecutive K-grams contributes >= 1 selected fingerprint

@@ -15,7 +15,7 @@ import graft.ops.GlobalRank
   * in-plan by Newton-IRLS over sufficient statistics (the trainable
   * quality-filter component of an LLM data pipeline).
   */
-object Curate {
+object Curate extends QueryModule {
 
   // ---- snm1: sorted-neighborhood near-dup pairs ----------------------
 

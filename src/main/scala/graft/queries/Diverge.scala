@@ -19,7 +19,7 @@ import graft.Tables
   * combine order cannot move a digit. NB scores stay DECIMAL all the
   * way to the argmax — the class comparison is exact, not float.
   */
-object Diverge {
+object Diverge extends QueryModule {
 
   private def toks(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d).select(col("source"), col("lang"),

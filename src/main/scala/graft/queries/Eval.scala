@@ -18,7 +18,7 @@ import graft.Tables
   * rank-picks on distinct-value aggregates (the auc1/ks1/mad1
   * discipline), never from interpolating percentiles.
   */
-object Eval {
+object Eval extends QueryModule {
 
   // ---- auc2: ROC AUC per slice ---------------------------------------
 

@@ -13,7 +13,7 @@ import graft.Tables
   * sample-ratio-mismatch health check every experiment must pass
   * before its metrics mean anything.
   */
-object Exp {
+object Exp extends QueryModule {
 
   /** Deterministic arm assignment: knuth hash of the user id, mod 2
     * (the spl1 portable-split idiom).

@@ -16,7 +16,7 @@ import graft.text.{Bpe, TextFunctions}
   * signatures, LSH buckets) are engine-specific and get the rows-only
   * check plus ScalaTest property coverage (DedupSpec/SimilaritySpec).
   */
-object Extensions {
+object Extensions extends QueryModule {
 
   // ---- text analysis ------------------------------------------------
 
@@ -207,21 +207,6 @@ object Extensions {
       pmod(col("doc_id"), lit(101)) =!= 0)
     Dedup.multiSetContaminationScores(corpus, evalSets,
       "doc_id", "eval_set", "text", k = 3)
-  }
-
-  /** The S-separate-jobs baseline dd18 replaces: one
-    * [[Dedup.contaminationScores]] run per eval slice — used by the
-    * scale probe to put a wall number on the two-pass claim.
-    */
-  private[graft] def dd18SeparateRunsOn(docs: DataFrame): Seq[DataFrame] = {
-    val corpus = docs.filter(pmod(col("doc_id"), lit(89)) =!= 0 &&
-      pmod(col("doc_id"), lit(97)) =!= 0 &&
-      pmod(col("doc_id"), lit(101)) =!= 0)
-    Seq(89, 97, 101).map { m =>
-      Dedup.contaminationScores(corpus,
-        docs.filter(pmod(col("doc_id"), lit(m)) === 0),
-        "doc_id", "text", k = 3)
-    }
   }
 
   /** Driver-visible containment check for the seeded-sketch dd4
@@ -1264,7 +1249,7 @@ object Extensions {
   def mm4AudioNeardup(s: SparkSession, d: String): DataFrame =
     mm4On(s, Tables.documents(s, d))
 
-  /** The frame-parameterized core (ScaleProbe feeds replicas here). */
+  /** The frame-parameterized core: the query over any documents frame. */
   private[graft] def mm4On(s: SparkSession, docs: DataFrame): DataFrame = {
     // same two plan moves as mm3, same reasons — but the fan-out now
     // sits BELOW the fixture projection: the 528 md5 draws per doc
@@ -1352,7 +1337,7 @@ object Extensions {
   def mm5VideoNeardup(s: SparkSession, d: String): DataFrame =
     mm5On(s, Tables.documents(s, d))
 
-  /** The frame-parameterized core (ScaleProbe feeds replicas here). */
+  /** The frame-parameterized core: the query over any documents frame. */
   private[graft] def mm5On(s: SparkSession, docs: DataFrame): DataFrame = {
     // mm3/mm4's two plan moves, same reasons — fan-out BELOW the
     // fixture projection (mm4's round-14 fix): the ~360 per-doc md5
@@ -1475,7 +1460,7 @@ object Extensions {
   def mm6CrossModalNeardup(s: SparkSession, d: String): DataFrame =
     mm6On(s, Tables.documents(s, d))
 
-  /** The frame-parameterized core (ScaleProbe feeds replicas here). */
+  /** The frame-parameterized core: the query over any documents frame. */
   private[graft] def mm6On(s: SparkSession, docsIn: DataFrame): DataFrame = {
     // fan-out at the top so the fixture's 288 per-doc md5 pixel draws
     // AND the caption winnow chain both run wide (mm4's round-14 fix);
@@ -1676,8 +1661,8 @@ object Extensions {
       s: SparkSession, d: String, staging: Staging): DataFrame =
     pipe2TrainingPrepOn(s, Tables.documents(s, d), staging)
 
-  /** The frame-parameterized core (ScaleProbe feeds the sf1 replica
-    * through here; the dir overloads above are the query surface).
+  /** The frame-parameterized core: the pipeline over any documents
+    * frame (the dir overloads above are the query surface).
     */
   private[graft] def pipe2TrainingPrepOn(
       s: SparkSession, docsIn: DataFrame, staging: Staging): DataFrame = {

@@ -12,7 +12,7 @@ import graft.Tables
   * aggregate (ks1's compression discipline), and the exact-Jaccard
   * similarity histogram (the dedup threshold-sensitivity report).
   */
-object Fit {
+object Fit extends QueryModule {
 
   /** Huber tuning constant for hub1 (residual scale of the daily
     * revenue series).

@@ -22,7 +22,7 @@ import graft.ops.Ops._
   * join's build side small and lets AQE broadcast them; the only wide
   * shuffles are the per-key aggregations themselves.
   */
-object Flagship {
+object Flagship extends QueryModule {
 
   def bldgs(s: SparkSession, d: String): DataFrame = {
     val orders = Tables.orders(s, d)

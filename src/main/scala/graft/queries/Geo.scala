@@ -28,7 +28,7 @@ import graft.Tables
   * BroadcastNestedLoop/CartesianProduct and equality with the naive
   * quadratic join). geo2 is two aggregates over the same cell keys.
   */
-object Geo {
+object Geo extends QueryModule {
 
   /** Earth radius (km) for haversine. */
   private val R = 6371.0
@@ -177,10 +177,9 @@ object Geo {
     geo3On(points(s, d), polygons(s, d))
 
   /** The candidate stage alone — (point, polygon) rows sharing a grid
-    * cell, BEFORE the ray-cast verify. Exposed for ScaleProbe: geo3's
-    * scale claim is that cost is candidate-bound (cells × covering
-    * polygons), not point × polygon, so the probe records this count
-    * next to the wall.
+    * cell, BEFORE the ray-cast verify. geo3's scale claim is that cost
+    * is candidate-bound (cells × covering polygons), not point ×
+    * polygon, and this stage's row count is that bound.
     */
   private[graft] def geo3Candidates(pts: DataFrame, polys: DataFrame)
       : DataFrame = {
@@ -211,12 +210,6 @@ object Geo {
       .filter(graft.functions.GeoFunctions.point_in_polygon(
         col("lon"), col("lat"), col("xs"), col("ys")))
       .select(col("id"), col("poly_id"))
-
-  /** Points for an arbitrary id frame (ScaleProbe's replica leg) —
-    * same md5 projection as [[points]], keyed on `id`.
-    */
-  private[graft] def pointsOfKeys(ids: DataFrame): DataFrame =
-    ids.select(col("id"), lat(col("id")).as("lat"), lon(col("id")).as("lon"))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "geo1_radius_pairs" -> (geo1RadiusPairs _),

@@ -18,7 +18,7 @@ import graft.Tables
   * HOF ≡ DuckDB recursive CTE, identical expression trees) is
   * engine-exact with no rounding framework at all.
   */
-object Growth {
+object Growth extends QueryModule {
 
   // ---- ndcg1: nDCG@10 + MRR -------------------------------------------
 

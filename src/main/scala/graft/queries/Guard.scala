@@ -13,7 +13,7 @@ import graft.Tables
   * exact-KS ks1 and KL kld1 detectors). Sits with anon1/dp1 in the
   * stewardship family.
   */
-object Guard {
+object Guard extends QueryModule {
 
   /** fair1: audit of the length-based quality gate (n_chars > 300)
     * across language groups, with the word-count rule (>= 58 spaces)

@@ -22,7 +22,7 @@ import graft.Tables
   * (the hits1/ppr1 iterative rule), so the truncation at 5 rounds and
   * every intermediate digit agree across engines.
   */
-object Journey {
+object Journey extends QueryModule {
 
   def mta1MarkovAttribution(s: SparkSession, d: String): DataFrame = {
     val ev = Tables.events(s, d)

@@ -17,7 +17,7 @@ import graft.Tables
   * expression in both engines, then 6-dp rounded, so ranks and BH
   * decisions agree exactly.
   */
-object Meta {
+object Meta extends QueryModule {
 
   /** Phi(|z|)'s upper tail, two-sided: p = 2(1 - Phi(|z|)) with the
     * A-S 7.1.26 erf approximation (|error| < 1.5e-7, crushed by the

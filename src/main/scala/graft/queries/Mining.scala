@@ -30,7 +30,7 @@ import graft.sampling.Sampling.knuthPriority
   * and [[knuthPriority]] integer hashing for every "random" draw so
   * DuckDB replays the identical randomness (bs1, msk1).
   */
-object Mining {
+object Mining extends QueryModule {
 
   // ---- rec1: item-item co-occurrence recommendations -----------------
 

@@ -24,7 +24,7 @@ import graft.Tables
   * dbs1's cell ids come from float->double widening (exact) and one
   * exact *4 scaling, so floor() agrees bit-for-bit.
   */
-object Mining2 {
+object Mining2 extends QueryModule {
 
   // ---- apr1: frequent triples (apriori level 3) ----------------------
 

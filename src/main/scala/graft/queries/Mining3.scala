@@ -25,7 +25,7 @@ import graft.sampling.Sampling.knuthPriority
   * terms are rounded to 6 dp then DECIMAL-summed before the ratio, so
   * the keep thresholds are bit-identical integers in both engines.
   */
-object Mining3 {
+object Mining3 extends QueryModule {
 
   // ---- imp1: deterministic missingness + group-median imputation -----
 

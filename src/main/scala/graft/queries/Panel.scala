@@ -12,7 +12,7 @@ import graft.Tables
   * STATISTICS (train-on-complement = total sums minus fold sums — no
   * per-fold re-scan of the data, the distributed CV trick).
   */
-object Panel {
+object Panel extends QueryModule {
 
   /** pid1: two-way fixed-effects slope of monthly customer spend on
     * monthly order count. Cells aggregate once; customer means join

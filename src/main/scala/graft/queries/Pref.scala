@@ -13,7 +13,7 @@ import graft.ops.Agreement
   * module derives deterministic duel/label streams from the shared
   * tables so the DuckDB oracle can replay them bit-for-bit.
   */
-object Pref {
+object Pref extends QueryModule {
 
   /** bt1: Bradley–Terry brand ratings. Duels: for every order where
     * two brands both appear (via lineitem->part), the brand with the

@@ -18,7 +18,7 @@ import graft.ops.Ops._
   *    floor() first;
   *  - DuckDB integer sums are cast to BIGINT (DuckDB widens to HUGEINT).
   */
-object Relational {
+object Relational extends QueryModule {
 
   // ---- A1: GROUP BY + count(*)  (wow_original…sql:22-26) ----
   def a1GroupCount(s: SparkSession, d: String): DataFrame =

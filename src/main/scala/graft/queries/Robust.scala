@@ -13,7 +13,7 @@ import graft.Tables
   * estimators in [[Causal]] (did1/surv1/ucb1): these are the
   * no-randomization counterparts.
   */
-object Robust {
+object Robust extends QueryModule {
 
   /** Nearest-control-within-caliper matching (with replacement): for
     * each treated row, the control with minimal |score diff| <=

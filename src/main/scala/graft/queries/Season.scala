@@ -25,7 +25,7 @@ import graft.Tables
   * stl1 is windows + a broadcast 7-row weekday table over the day
   * aggregate.
   */
-object Season {
+object Season extends QueryModule {
 
   // Holt–Winters step, inlined (SQL lambdas cannot bind intermediate
   // level): l' = a(x - s1) + (1-a)(l+b); b' = c*b + (1-c)(l'-l);

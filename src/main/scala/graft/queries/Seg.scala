@@ -12,7 +12,7 @@ import graft.Tables
   * and top-down binary segmentation (the multi-changepoint upgrade of
   * cpt1's single CUSUM shift).
   */
-object Seg {
+object Seg extends QueryModule {
 
   /** rm1: per-arm revenue-per-active-day ratio metric with the
     * delta-method standard error:

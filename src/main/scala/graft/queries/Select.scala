@@ -21,7 +21,7 @@ import graft.ops.GlobalRank
   *    (farthest-first traversal — the classic diverse-subset
   *    selection whose per-round argmax is a distributed aggregate).
   */
-object Select {
+object Select extends QueryModule {
 
   // ---- dsir1: importance weights toward a target distribution --------
 
@@ -52,7 +52,7 @@ object Select {
   def dsir1ImportanceWeights(s: SparkSession, d: String): DataFrame =
     dsirWeightsOn(Tables.documents(s, d))
 
-  /** The frame-parameterized core (ScaleProbe feeds replicas here). */
+  /** The frame-parameterized core: the query over any documents frame. */
   private[graft] def dsirWeightsOn(docs: DataFrame): DataFrame = {
     val toks = docs.select(
       col("doc_id"), col("source"),
@@ -107,7 +107,7 @@ object Select {
   def ccnet1PerplexityBuckets(s: SparkSession, d: String): DataFrame =
     ccnetBucketsOn(Tables.documents(s, d))
 
-  /** The frame-parameterized core (ScaleProbe feeds replicas here). */
+  /** The frame-parameterized core: the query over any documents frame. */
   private[graft] def ccnetBucketsOn(docs: DataFrame): DataFrame = {
     val toks = docs.select(
       col("doc_id"), col("source"),
@@ -484,7 +484,7 @@ object Select {
   def qc1QualityClassifier(s: SparkSession, d: String): DataFrame =
     qc1On(s, Tables.documents(s, d))
 
-  /** The frame-parameterized core (ScaleProbe feeds replicas here). */
+  /** The frame-parameterized core: the query over any documents frame. */
   private[graft] def qc1On(s: SparkSession, docs: DataFrame): DataFrame = {
     val (hdr, featL, wi, w, n, nPos) = qcPrepare(s, docs)
     val thr = nPos.toDouble / n

@@ -19,7 +19,7 @@ import graft.Tables
   * engine supports) — expand the user-day AGGREGATE by the 7 window
   * offsets, dedupe, count.
   */
-object Series {
+object Series extends QueryModule {
 
   // ---- isl1: gaps and islands -----------------------------------------
 

@@ -13,7 +13,7 @@ import graft.Tables
   * identity and the per-group rank windows run on fixed-size
   * aggregates regardless of input scale.
   */
-object Shape {
+object Shape extends QueryModule {
 
   /** iso1: isotonic calibration of P(status = 'O') against binned
     * order value (50 fixed-width bins). Fit uses the minimax identity

@@ -21,7 +21,7 @@ import graft.Tables
   * cumulative moments in fixed IEEE order, argmax by (score DESC, t)
   * rank pick.
   */
-object Signals {
+object Signals extends QueryModule {
 
   private def coPurchaseEdges(s: SparkSession, d: String): DataFrame = {
     val li = Tables.lineitem(s, d)

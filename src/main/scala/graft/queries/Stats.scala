@@ -19,7 +19,7 @@ import graft.sampling.Sampling.knuthPriority
   * resampling with knuth-hash label flips; u5's validity predicate is
   * pure timestamp comparison.
   */
-object Stats {
+object Stats extends QueryModule {
 
   // ---- u5: SCD2 point-in-time lookup ---------------------------------
 

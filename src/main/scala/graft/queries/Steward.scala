@@ -18,7 +18,7 @@ import graft.Tables
   * derived double; survivorship picks are rank-based with total-order
   * tie-breaks — no interpolation anywhere.
   */
-object Steward {
+object Steward extends QueryModule {
 
   // ---- anon1: k-anonymity / l-diversity audit -------------------------
 

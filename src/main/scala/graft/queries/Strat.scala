@@ -14,7 +14,7 @@ import graft.Tables
   * to bounded tables (event days / strata) before any sequential
   * arithmetic; per-time terms are 9-dp DECIMAL summands.
   */
-object Strat {
+object Strat extends QueryModule {
 
   /** lr1: log-rank test of time-to-first-purchase between the two
     * knuth-hash arms (surv1's cohort construction: first event =

@@ -18,7 +18,7 @@ import graft.Tables
   * exact decisions; LPA's per-round mode uses (count DESC, label ASC)
   * — a total order, so every round is deterministic on both engines.
   */
-object Trend {
+object Trend extends QueryModule {
 
   private def dailyRevenue(s: SparkSession, d: String): DataFrame =
     Tables.events(s, d)

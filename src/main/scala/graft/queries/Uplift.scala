@@ -13,7 +13,7 @@ import graft.Tables
   * ranks persuadable users ahead of sure things. All rates are
   * exact-count rationals over the decile-bounded table.
   */
-object Uplift {
+object Uplift extends QueryModule {
 
   /** lift1: arms by knuth hash, outcome = purchased in days 16-30,
     * targeting score = pre-period (days 1-15) spend; deciles over the

@@ -19,7 +19,7 @@ import graft.Tables
   * the weighted median is an integer rank pick over exact cents and
   * integral weights.
   */
-object Warp {
+object Warp extends QueryModule {
 
   // ---- dtw1: dynamic time warping -------------------------------------
 

@@ -15,6 +15,16 @@ class EntrySpec extends SparkSpec {
     assert(missing.isEmpty, s"oracles without queries: $missing")
   }
 
+  test("each query name comes from exactly one module") {
+    // `++` keeps the last of two equal keys, so a name registered twice
+    // would shrink the merged map below the modules' summed sizes
+    val modules = SparkEntry.modules
+    assert(modules.map(_.queries.size).sum === SparkEntry.queries.size)
+    assert(SparkEntry.queries.size === 318)
+    assert(modules.map(_.oracles.size).sum === SparkEntry.oracleSql.size)
+    assert(SparkEntry.oracleSql.size === 307)
+  }
+
   test("approx_count_distinct (rows-only query) is within 5% of exact") {
     val exact = graft.queries.Relational.a13DistinctCounts(spark, sf)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap

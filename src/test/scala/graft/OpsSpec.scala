@@ -250,6 +250,26 @@ class OpsSpec extends SparkSpec {
     }
   }
 
+  test("fanOutForCompute returns a Filter on a scalar subquery UNCHANGED") {
+    // one-slice Range and Filter are both whitelisted and narrower than
+    // the session, so only the subquery's aggregate makes this wide
+    val base = spark.range(0L, 16L, 1L, 1).toDF()
+    val w = base.filter(col("id") > base.select(avg(col("id"))).scalar())
+    assert(graft.ops.Ops.fanOutForCompute(w, col("id")) eq w)
+  }
+
+  test("fanOutForCompute still fans out a plain narrow parquet scan") {
+    val dir = java.nio.file.Files.createTempDirectory("fanout").toString
+    Seq.tabulate(64)(i => (i.toLong, s"t$i")).toDF("id", "text")
+      .coalesce(1).write.mode("overwrite").parquet(dir)
+    val scan = spark.read.parquet(dir).select(col("id"), col("text"))
+    assert(scan.rdd.getNumPartitions === 1)
+    val target = math.max(spark.sparkContext.defaultParallelism,
+      spark.sessionState.conf.numShufflePartitions)
+    assert(graft.ops.Ops.fanOutForCompute(scan, col("id"))
+      .rdd.getNumPartitions === target)
+  }
+
   test("firstOrderedBy survives a user/payload column named __top") {
     val d = Seq(("a", 1, "lo"), ("a", 2, "hi"), ("b", 3, "x"))
       .toDF("k", "v", "__top")

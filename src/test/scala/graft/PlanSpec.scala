@@ -183,7 +183,7 @@ class PlanSpec extends SparkSpec {
 
   test("bloom-pruned contamination: the bloom probe filters the corpus " +
       "gram stream BEFORE any shuffle (scan-adjacent, literal blob)") {
-    import org.apache.spark.sql.execution.FilterExec
+    import org.apache.spark.sql.execution.{FilterExec, GenerateExec}
     val df = graft.queries.Extensions.dd9ContaminationBloom(spark, sf)
     df.collect()
     val all = flattenPlan(df.queryExecution.executedPlan)
@@ -202,10 +202,16 @@ class PlanSpec extends SparkSpec {
       // contamination. (The round-14 scale-adaptive fan-out may
       // repartition the RAW (doc_id, text) rows below the probe — a
       // guarded no-op on warehouse-scale scans and never a gram-stream
-      // shuffle, so it is exempt here.)
-      val gramShuffles = flattenPlan(f).filter(p =>
+      // shuffle, so it is exempt here.) The gram stream is whatever a
+      // generator below the probe emits, matched by exprId, not by name.
+      val below = flattenPlan(f)
+      val generated = below.collect {
+        case g: GenerateExec => g.generatorOutput.map(_.exprId)
+      }.flatten.toSet
+      assert(generated.nonEmpty, f.toString)
+      val gramShuffles = below.filter(p =>
         p.nodeName.toLowerCase.contains("shuffle") &&
-          p.output.exists(_.name == "gram"))
+          p.output.exists(a => generated(a.exprId)))
       assert(gramShuffles.isEmpty, f.toString)
     }
   }

@@ -1,7 +1,10 @@
 #!/bin/bash
 # Dev runner: launch a graft main class without sbt startup cost.
 # Usage: tools/run.sh graft.Verify /root/testdata/sf0.01 /tmp/verify_out
-CP="/root/repo/target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
+REPO="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
+# the Spark jar directory build.sbt compiles against (unmanagedBase)
+JARS="$(sed -n 's/^unmanagedBase := file("\(.*\)")$/\1/p' "$REPO/build.sbt")"
+CP="$REPO/target/scala-2.13/classes:$(ls "$JARS"/*.jar | tr '\n' ':')"
 exec java \
   --add-opens=java.base/java.lang=ALL-UNNAMED \
   --add-opens=java.base/java.lang.invoke=ALL-UNNAMED \
