@@ -1,415 +1,161 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Benchmark main (driver contract): runs every SparkEntry query on
-  * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
-  * A small warmup action first absorbs session/JIT/codegen startup so
-  * query timings measure the queries, not JVM warmup; per-query
-  * progress goes to stderr for diagnosability.
-  *
-  * Host-stall detection: shared-host CPU stalls (not code) produced
-  * 10-60x per-query blowups in two prior runs, reproduced and then
-  * refuted by isolated re-runs minutes later. The bench therefore
-  * self-documents host health: a fixed CPU-bound canary (a
-  * data-independent range->xxhash64->sum, constant work regardless of
-  * SF) is timed three times up front for a reference, then re-timed
-  * every [[canaryEvery]] queries. When a canary reading exceeds
-  * [[stallFactor]]x the reference, every query measured since the
-  * previous canary is flagged `stalled` and excluded from the
-  * `value_quiet` subtotal, so a noisy host yields an annotated run
-  * instead of a silently corrupted total.
+  * SPARK_GRAFT_SF_DIR, times each query's FULL result, and prints ONE
+  * JSON line with the total and a headline subset of per-query seconds.
+  * The out file (SPARK_GRAFT_BENCH_OUT, default ./bench.json) holds
+  * every query's seconds plus a canary reading before and after the
+  * run. A small warmup first absorbs session/JIT/codegen startup;
+  * per-query progress goes to stderr. This main only reports timings:
+  * regressions are judged by perfbench (BENCHMARK.json).
   */
 object Bench {
-  private val canaryEvery = 8
-  private val stallFactor = 3.0
-  // a spike must ALSO exceed the reference by this many absolute
-  // seconds: the quiet canary is ~0.07 s, and a reading right after a
-  // heavy query inherits ~0.1-0.3 s of scheduler/GC residue — 3x the
-  // tiny reference but nothing like a host stall. The stalls this
-  // detector exists for inflated queries 10-60x (BENCH_r04/r06), which
-  // puts the canary well past a second; requiring both conditions
-  // keeps residue noise out without blunting real-stall sensitivity.
-  private val stallMinAbsSec = 1.0
+
+  /** One query's reading: seconds to its full result, or to its failure. */
+  private[graft] case class Timing(name: String, sec: Double, failed: Boolean)
+
+  /** Times `df`'s construction and full result. The `noop` sink runs
+    * the whole plan, every row and column, and discards the rows;
+    * `count()` would let Catalyst prune every column it does not read,
+    * and with them their work and their failures. A throw is logged
+    * under `label` and marks the reading failed.
+    */
+  private[graft] def time(label: String)(df: => DataFrame): Timing = {
+    val t0 = System.nanoTime()
+    val failed =
+      try { df.write.format("noop").mode("overwrite").save(); false }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $label FAILED: ${e.getMessage}"); true
+      }
+    Timing(label, (System.nanoTime() - t0) / 1e9, failed)
+  }
+
+  // the stdout line's per-query subset, one query per operator family:
+  // the log-tail capture that reads the line keeps only its last ~2000
+  // characters, and a map over all 318 queries would not fit
+  private[graft] val headline = Seq(
+    "q0_flagship_bldgs", "a1_group_count", "a5_sum_pricing",
+    "a6_first_ordered", "a7_array_agg", "a12_rollup", "a15_percentiles",
+    "a19_hll_rollup", "j1_left_join_agg", "j5_broadcast_lookup",
+    "j8_range_join", "asof1_backward", "w1_running", "o3_topk_per_group",
+    "d1_distinct_on", "e1_tumbling", "e3_session", "e4_interval_join",
+    "g1_components", "hh1_heavy_hitters", "dd1_exact", "dd2_minhash_pairs",
+    "dd5_embedding_neardup", "dd6_cluster_keep", "dd7_exact_jaccard",
+    "dd18_multiset_contamination", "dd20_tiered_neardup",
+    "asof4_backward_chunked", "ann1_bruteforce",
+    "ann3_ivf", "t1_tokens", "t9_tfidf", "u1_upsert", "pipe1_corpus_clean",
+    "pipe2_training_prep", "hm1_hamming_topk", "km2_lloyd_q",
+    "sem1_semdedup_q", "bpe1_train_merges", "cdc1_content_chunks",
+    "pipe3_curation",
+    "x1_sql_cosine", "sk2_salted_join", "bf1_bloom_prune", "smp3_weighted_k",
+    "dsir1_importance_weights", "clb1_cluster_balanced",
+    "win2_winnow_pairs", "par1_chunk_dedup", "rho1_excess_loss",
+    "pipe4_clean_select", "pipe5_tiered_prep", "dd23_incremental_neardup")
+
+  private def r3(v: Double): String = f"$v%.3f"
+  private def str(s: String): String = "\"" + s + "\""
+
+  /** `value` sums completed queries only; `n` counts every attempt. */
+  private def totals(results: Seq[Timing]): String =
+    s"""{"metric":"total","value":${r3(results.filterNot(_.failed).map(_.sec).sum)},""" +
+      s""""unit":"sec","n":${results.size},"n_failed":${results.count(_.failed)}"""
+
+  /** The stdout line: totals plus the headline's completed queries. */
+  private[graft] def line(results: Seq[Timing], sf: String): String = {
+    val done = results.filterNot(_.failed).map(t => t.name -> t.sec).toMap
+    val qs = headline.flatMap(k => done.get(k).map(v => str(k) + ":" + r3(v)))
+    totals(results) + s""","queries":${qs.mkString("{", ",", "}")},"sf":${str(sf)}}"""
+  }
+
+  /** The out file: totals, both canary readings, every query. */
+  private def record(results: Seq[Timing], sf: String,
+      canaryBefore: Double, canaryAfter: Double): String = {
+    val qs = results.map(t => str(t.name) + ":{\"sec\":" + r3(t.sec) +
+      (if (t.failed) ",\"failed\":true}" else "}"))
+    totals(results) +
+      s""","canary_before":${r3(canaryBefore)},"canary_after":${r3(canaryAfter)},""" +
+      s""""queries":${qs.mkString("{", ",", "}")},"sf":${str(sf)}}"""
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val nCpus = Session.cpus
     val spark = Session.local(nCpus)
 
-    // warmup: exercise scan + shuffle + codegen paths once on the
-    // smallest SF so stage-0 JIT/codegen cost doesn't land on the first
-    // query of each family (joins, minhash/LSH, vector math, as-of).
-    // Warmup dirs are SIBLINGS of the bench dir (…/sfX -> …/sf0.001),
-    // overridable via SPARK_GRAFT_WARMUP_ROOT — a hardcoded path made
-    // warmup silently no-op off this machine, landing dd7's ~2x
-    // first-execution JIT penalty in the measured run. Failures are
-    // LOGGED, never swallowed silently.
-    // absolute-ize first: a bare relative sfDir ("sf0.1") has a null
-    // parent, and falling back to sfDir itself would run ALL warmups
-    // at full bench scale before timing starts. The override env var
-    // is a warmup data ROOT (containing sf0.001/sf0.01), not a single
-    // dir — a single dir would collapse the two deliberately different
-    // warmup scales onto one dataset.
+    // warmup: run each family's scan/shuffle/codegen paths once on a
+    // small SF so first-execution JIT/codegen cost doesn't land on the
+    // first measured query of each family. The warmup data root holds
+    // sf0.001/sf0.01 and defaults to the bench dir's parent (made
+    // absolute: a bare relative "sf0.1" has no parent).
     val dataRoot = sys.env.get("SPARK_GRAFT_WARMUP_ROOT")
       .map(new java.io.File(_))
       .getOrElse(new java.io.File(sfDir).getAbsoluteFile.getParentFile)
-    def sibling(sf: String): String = new java.io.File(dataRoot, sf).getPath
-    def warm(queries: Seq[String], dir: String): Unit =
-      queries.foreach { q =>
-        try SparkEntry.queries(q)(spark, dir).count()
-        catch { case e: Throwable =>
-          System.err.println(
-            s"[bench] WARMUP $q on $dir failed (${e.getClass.getSimpleName}: " +
-              s"${e.getMessage}) — first measured run of this family will " +
-              "include JIT/codegen cost")
-        }
-      }
+    def warm(queries: Seq[String], sf: String): Unit = {
+      val dir = new java.io.File(dataRoot, sf).getPath
+      queries.foreach(q => time(s"WARMUP $q on $dir")(SparkEntry.queries(q)(spark, dir)))
+    }
+    // the multimodal codec chains and the trained-classifier loop each
+    // carry a large unique codegen surface; unwarmed, their first
+    // execution measured 2-5x steady state
     warm(Seq("q0_flagship_bldgs", "dd2_minhash_pairs", "dd5_embedding_neardup",
-      "ann2_lsh", "asof1_backward",
-      // round-14 additions: the multimodal codec chains and the
-      // trained-classifier loop each carry a large unique codegen
-      // surface (md5 fixture expressions, codec mapPartitions, banded
-      // joins; 6 unrolled gradient rounds) — unwarmed, their FIRST
-      // execution measured 2-5x steady state (mm5: 23.4 s cold vs
-      // 4.3 s steady), which is JIT, not the query
-      "mm3_image_dhash_neardup", "mm4_audio_neardup", "mm5_video_neardup",
-      "mm6_crossmodal_neardup", "qc1_quality_classifier"), sibling("sf0.001"))
-    // the exact-similarity join's merge-scan/prefix kernels iterate
-    // ~100M times at sf0.1 and measure ~2x slower on their FIRST
-    // execution (janino compile + C2 ramp: 17s -> 8s steady,
-    // plan-identical — measured). Warm them at sf0.01, where the same
-    // code paths run enough iterations to reach steady state.
-    warm(Seq("dd7_exact_jaccard"), sibling("sf0.01"))
+      "ann2_lsh", "asof1_backward", "mm3_image_dhash_neardup",
+      "mm4_audio_neardup", "mm5_video_neardup", "mm6_crossmodal_neardup",
+      "qc1_quality_classifier"), "sf0.001")
+    // the exact-similarity kernels only reach steady state when they
+    // iterate enough; sf0.01 runs the same code paths long enough
+    warm(Seq("dd7_exact_jaccard"), "sf0.01")
 
     // the canary: fixed CPU-bound work, independent of SF and of any
-    // query's cached state (a fresh range each call — nothing to cache,
-    // nothing to spill). ~0.2-0.5 s quiet on 32 threads; a host stall
-    // inflates it by the same contention factor it inflates the queries.
-    def canaryOnce(): Double = {
+    // cached state; its reading before and after the run records how
+    // loaded the host was. Best of three absorbs its own codegen.
+    def canary(): Double = (1 to 3).map { _ =>
       val t0 = System.nanoTime()
-      // bit_xor, not sum: 64M xxhash64 values sum past Long.MaxValue
-      // and ANSI mode (Spark 4 default) makes that a hard error
+      // bit_xor, not sum: 64M xxhash64 values overflow a Long sum
       spark.range(0L, 64L * 1000 * 1000, 1L, nCpus)
         .select(bit_xor(xxhash64(col("id")))).head()
       (System.nanoTime() - t0) / 1e9
-    }
-    val canaryRef = (1 to 3).map(_ => canaryOnce()).min
-    def isSpike(c: Double): Boolean =
-      c > stallFactor * canaryRef && c > canaryRef + stallMinAbsSec
-    System.err.println(f"[bench] canary ref $canaryRef%.3f s")
+    }.min
 
     // Run order: alphabetical, EXCEPT the heavy exact-similarity pair
-    // (dd7 then dd6) runs FIRST — measured right after its warmup, not
-    // on top of the LSH family's shuffle/GC residue. BENCH_r05 showed
-    // dd6/dd7 at 2.4-2.6x their isolated quiet baseline when sequenced
-    // mid-run; fronting them removes the predecessor-residue term from
-    // the measurement (their own residue lands on cheap early queries
-    // whose baseline band absorbs it, and is bounded by BASELINE.md's
-    // variance notes).
+    // (dd7 then dd6) runs FIRST, right after its warmup and not on top
+    // of the LSH family's shuffle/GC residue. GRAFT_BENCH_ONLY
+    // (comma-separated names) restricts the run for isolated re-reads.
     val front = Seq("dd7_exact_jaccard", "dd6_cluster_keep")
-    // dev-only isolated re-read filter (comma-separated names) for
-    // adjudicating above_band flags without a full run; the driver
-    // never sets it, so round benches always measure the full set
     val only = sys.env.get("GRAFT_BENCH_ONLY")
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    val all = front.flatMap(n => SparkEntry.queries.get(n).map(n -> _)) ++
-      SparkEntry.queries.toSeq.sortBy(_._1).filterNot(kv => front.contains(kv._1))
-    val ordered = only match {
-      case Some(names) => all.filter(kv => names(kv._1))
-      case None => all
-    }
+    val ordered = (front.flatMap(n => SparkEntry.queries.get(n).map(n -> _)) ++
+      SparkEntry.queries.toSeq.sortBy(_._1).filterNot(kv => front.contains(kv._1)))
+      .filter(kv => only.forall(_(kv._1)))
 
-    // segment = queries measured since the previous canary reading; a
-    // spiking canary taints its whole segment (conservative: the stall
-    // may have covered only part of it, but we cannot localize finer
-    // without per-query ground truth)
-    val canaryTimes = collection.mutable.ArrayBuffer.empty[Double]
-    val stalled = collection.mutable.LinkedHashSet.empty[String]
-    // per-query: the canary reading that CLOSES the query's segment —
-    // the contention proxy nearest in time to the measurement, used to
-    // scale band ceilings (host contention below the spike threshold
-    // still inflates readings 2-4x; r08 flagged 5 queries, all later
-    // adjudicated variance/vintage, because ceilings were compared
-    // against readings from a differently-loaded host)
-    val segCanary = collection.mutable.HashMap.empty[String, Double]
-    var segment = collection.mutable.ArrayBuffer.empty[String]
-    def checkCanary(): Unit = {
-      val c = canaryOnce()
-      canaryTimes += c
-      segment.foreach(q => segCanary(q) = c)
-      if (isSpike(c)) {
-        System.err.println(f"[bench] CANARY SPIKE $c%.3f s (ref " +
-          f"$canaryRef%.3f) — flagging ${segment.size} queries as stalled")
-        stalled ++= segment
-      }
-      segment = collection.mutable.ArrayBuffer.empty[String]
+    val canaryBefore = canary()
+    System.err.println(f"[bench] canary before $canaryBefore%.3f s")
+    // no System.gc() between queries: a full GC clears the
+    // soft-referenced codegen cache, so every later query re-compiles
+    // its generated code (t9_tfidf 1.2 s -> 6.4 s)
+    val results = ordered.map { case (name, fn) =>
+      val t = time(name)(fn(spark, sfDir))
+      System.err.println(f"[bench] $name%-28s ${t.sec}%8.2f s")
+      t
     }
+    val canaryAfter = canary()
+    System.err.println(f"[bench] canary after $canaryAfter%.3f s")
 
-    val results = ordered.zipWithIndex.map { case ((name, fn), i) =>
-      // NOTE: no System.gc() between queries — it was tried and made
-      // things WORSE: a full GC clears the soft-referenced codegen
-      // cache, so every subsequent query re-compiles its generated
-      // code (t9_tfidf 1.2s -> 6.4s). Sequencing noise (a heavy
-      // predecessor's GC debt landing on the next query) is instead
-      // bounded in BASELINE.md's variance notes.
-      // JVM uptime stamps let a GRAFT_GC_LOG run correlate per-query
-      // spikes with GC pauses (the log's [uptime] field matches)
-      val up0 = java.lang.management.ManagementFactory.getRuntimeMXBean.getUptime / 1e3
-      val t0 = System.nanoTime()
-      val n = try fn(spark, sfDir).count()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name FAILED: ${e.getMessage}"); -1L
-      }
-      val sec = (System.nanoTime() - t0) / 1e9
-      System.err.println(f"[bench] $name%-28s $sec%8.2f s  ($n rows)  @$up0%.1fs")
-      segment += name
-      if ((i + 1) % canaryEvery == 0) checkCanary()
-      name -> sec
-    }
-    checkCanary() // close the final (possibly partial) segment
-
-    // ONE compact JSON line. The driver records only the LAST ~2000
-    // characters of the run log; a per-query map over the full query
-    // set (111 entries) is ~3000 chars and gets truncated mid-line,
-    // making the metric unparseable. So: value = total seconds across
-    // ALL queries run (n = how many), and "queries" carries a curated
-    // headline subset (one per operator family, 3-decimal seconds)
-    // that keeps the whole line comfortably inside the capture window.
-    // The FULL per-query map (with stall flags and the canary series)
-    // goes to the bench-out file below.
-    val headline = Seq(
-      "q0_flagship_bldgs", "a1_group_count", "a5_sum_pricing",
-      "a6_first_ordered", "a7_array_agg", "a12_rollup", "a15_percentiles",
-      "a19_hll_rollup", "j1_left_join_agg", "j5_broadcast_lookup",
-      "j8_range_join", "asof1_backward", "w1_running", "o3_topk_per_group",
-      "d1_distinct_on", "e1_tumbling", "e3_session", "e4_interval_join",
-      "g1_components", "hh1_heavy_hitters", "dd1_exact", "dd2_minhash_pairs",
-      "dd5_embedding_neardup", "dd6_cluster_keep", "dd7_exact_jaccard",
-      "dd18_multiset_contamination", "dd20_tiered_neardup",
-      "asof4_backward_chunked", "ann1_bruteforce",
-      "ann3_ivf", "t1_tokens", "t9_tfidf", "u1_upsert", "pipe1_corpus_clean",
-      "pipe2_training_prep", "hm1_hamming_topk", "km2_lloyd_q",
-      "sem1_semdedup_q", "bpe1_train_merges", "cdc1_content_chunks",
-      "pipe3_curation",
-      "x1_sql_cosine", "sk2_salted_join", "bf1_bloom_prune", "smp3_weighted_k",
-      "dsir1_importance_weights", "clb1_cluster_balanced",
-      "win2_winnow_pairs", "par1_chunk_dedup", "rho1_excess_loss",
-      "pipe4_clean_select", "pipe5_tiered_prep", "dd23_incremental_neardup")
-    val byName = results.toMap
-    def r3(v: Double): String = f"$v%.3f"
-    // machine-readable regression bands (tools/bench_bands.json,
-    // regenerated by tools/make_bands.py from each committed quiet
-    // baseline): query -> [lo, hi] seconds. A query above its ceiling
-    // in a canary-clean segment is a regression CANDIDATE — the
-    // documented same-morning host variance still applies, so a
-    // candidate needs a quiet re-read before being treated as drift —
-    // but candidates now surface mechanically in the bench JSON
-    // instead of via prose-table cross-reference.
-    // resolve via env override, then CWD, then the location of this
-    // jar/classes dir (../../.. of target/scala-2.13/classes is the
-    // checkout) — no hardcoded absolute path coupling the bench to
-    // one container's layout
-    val codeRoot = try {
-      val uri = getClass.getProtectionDomain
-        .getCodeSource.getLocation.toURI
-      // classes dir: <repo>/target/scala-2.13/classes
-      java.nio.file.Paths.get(uri).getParent.getParent.getParent
-        .resolve("tools/bench_bands.json").toString
-    } catch { case _: Throwable => "tools/bench_bands.json" }
-    val bandsPath = sys.env.get("SPARK_GRAFT_BANDS")
-      .orElse(Seq("tools/bench_bands.json", codeRoot)
-        .find(p => java.nio.file.Files.exists(java.nio.file.Paths.get(p))))
-      .getOrElse("tools/bench_bands.json")
-    val bandHi: Map[String, Double] = try {
-      BenchBands.parse(new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(bandsPath)),
-        java.nio.charset.StandardCharsets.UTF_8))
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] no bands from $bandsPath " +
-        s"(${e.getMessage}) — above_band flags disabled")
-      Map.empty
-    }
-    // canary-normalized ceilings: the bands file records the canary
-    // ref of the quiet run it derives from (__canary_ref, written by
-    // tools/make_bands.py). A query's ceiling scales by how much more
-    // contended ITS segment was than that quiet run — measured by the
-    // canary reading closing its segment (and never below the run's
-    // own start-of-run ref). Floor 1.0: a quieter-than-baseline host
-    // never TIGHTENS a ceiling. This turns "above band" from "slower
-    // than a number measured on a different day's host" into "slower
-    // than the baseline after accounting for measured contention".
-    def bandScale(k: String): Double =
-      BenchBands.scale(segCanary.getOrElse(k, canaryRef), canaryRef,
-        bandHi.get(BenchBands.CanaryKey).filter(_ > 0))
-    def ceilingFor(k: String): Option[Double] =
-      BenchBands.ceiling(bandHi, k,
-        segCanary.getOrElse(k, canaryRef), canaryRef)
-    val flagged = results.collect {
-      case (k, v) if ceilingFor(k).exists(v > _) && !stalled.contains(k) => k
-    }
-    flagged.foreach { k =>
-      System.err.println(f"[bench] ABOVE BAND $k%-28s ${byName(k)}%8.2f s " +
-        f"(ceiling ${ceilingFor(k).get}%.2f = ${bandHi(k)}%.2f x " +
-        f"${bandScale(k)}%.2f)")
-    }
-    // retry-on-flag: re-time each first-pass flag once, same JVM and
-    // data hot, with a fresh canary reading adjacent to the retry; the
-    // flag STANDS only if the retry also exceeds its (re-scaled)
-    // ceiling. The canary normalization under-corrects for heavy
-    // external contention — r09 shipped 10 false regression flags
-    // (dd8 45.6 s flagged, 4.3 s quiet) on a loadavg-20 host — while
-    // a real code regression reproduces on an immediate re-read.
-    // Retry readings are bookkept separately: they do NOT enter
-    // `value`/`value_quiet` (first-pass totals stay comparable across
-    // rounds) and their canary readings do not join the segment series.
-    val retryInfo = collection.mutable.LinkedHashMap
-      .empty[String, (Double, Double, Boolean)] // name -> (retrySec, retryCanary, failed)
-    val aboveBand = flagged.filter { k =>
-      val c = canaryOnce()
-      // dd7 and dd20 are the queries that PAY their shared truth-set
-      // computes (TruthSets exact + tiered); their bands include that
-      // cost, so their retries must recompute, not read the cache —
-      // otherwise a real regression retries in cache-hit time and
-      // self-withdraws. Invalidation is PER FAMILY, not clear():
-      // wiping the whole cache on dd7's retry would force a
-      // later-retried dd20/dd21 to recompute the tiered pair set
-      // against its cache-hit band and falsely STAND (and vice
-      // versa). The downstream consumers (dd6/dd15/dd16/dd19, dd21)
-      // are banded as cache hits, so their retries keep the cache.
-      if (k == "dd7_exact_jaccard")
-        graft.queries.TruthSets.invalidateExact()
-      if (k == "dd20_tiered_neardup")
-        graft.queries.TruthSets.invalidateTiered()
-      val t0 = System.nanoTime()
-      val failed = try { SparkEntry.queries(k)(spark, sfDir).count(); false }
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] RETRY $k FAILED: ${e.getMessage}")
-        true
-      }
-      val sec = (System.nanoTime() - t0) / 1e9
-      retryInfo(k) = (sec, c, failed)
-      // a crashed retry is NOT evidence of health: its time-to-failure
-      // is truncated (an OOM from a real regression can "finish" fast),
-      // so the flag STANDS and the failure is recorded as its own
-      // state instead of adjudicating from the truncated timing
-      val stands = failed ||
-        BenchBands.standsAfterRetry(bandHi, k, sec, c, canaryRef)
-      System.err.println(f"[bench] RETRY $k%-28s $sec%8.2f s (canary " +
-        f"$c%.3f) — flag ${
-          if (failed) "STANDS (retry_failed)"
-          else if (stands) "STANDS" else "withdrawn"}")
-      stands
-    }
-    // adjudication-aware headline: the first-pass total with each
-    // WITHDRAWN flag's contended first-pass seconds replaced by its
-    // clean retry reading. `value` keeps the raw first-pass total for
-    // cross-round continuity; consumers comparing totals should read
-    // value_adjudicated — r10 shipped 814.8 s raw while its own
-    // retries proved ~0 regressions, and every cross-round comparison
-    // silently read 39% contention as a regression. Standing flags
-    // (including retry_failed) keep their first-pass reading: the
-    // slowdown is not adjudicated away.
-    val withdrawnRetrySec: Map[String, Double] = retryInfo.collect {
-      case (k, (sec, _, failed)) if !failed && !aboveBand.contains(k) =>
-        k -> sec
-    }.toMap
-    val valueAdjudicated =
-      BenchBands.adjudicatedTotal(results, withdrawnRetrySec)
-    // vintage check: the bands file records the testdata vintage it
-    // was generated against; a differing live vintage means per-query
-    // costs may have shifted with corpus density, not code — mark the
-    // run so adjudication starts from the right hypothesis
-    val bandsVintage = try {
-      BenchBands.parseVintage(new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(bandsPath)),
-        java.nio.charset.StandardCharsets.UTF_8))
-    } catch { case _: Throwable => None }
-    val liveVintage = BenchBands.vintageHash(sfDir)
-    val vintageStale = (bandsVintage, liveVintage) match {
-      case (Some(b), Some(l)) if b != l =>
-        System.err.println(s"[bench] STALE BANDS VINTAGE: bands=$b " +
-          s"live=$l — ceilings were measured on a different testdata " +
-          "generation; treat above_band as advisory")
-        true
-      case _ => false
-    }
-    val qs = headline.flatMap(k => byName.get(k).map(v => "\"" + k + "\":" + r3(v)))
-      .mkString("{", ",", "}")
-    val total = results.map(_._2).sum
-    val quiet = results.filterNot(kv => stalled.contains(kv._1)).map(_._2).sum
-    val canaryJson =
-      s"""{"ref":${r3(canaryRef)},"max":${r3(canaryTimes.max)},""" +
-        s""""spikes":${canaryTimes.count(isSpike)},""" +
-        s""""n":${canaryTimes.size}}"""
-    // the compact line caps the stalled list at 8 names (n_stalled has
-    // the true count; the bench-out file has the full list) so a
-    // badly stalled run cannot push the line past the driver's ~2000
-    // char log-tail capture window
-    val stalledJson =
-      stalled.take(8).map("\"" + _ + "\"").mkString("[", ",", "]")
-    // same 8-name cap rationale as `stalled`: keep the line inside the
-    // driver's ~2000-char log-tail capture; full list in the out file
-    val aboveJson =
-      aboveBand.take(8).map("\"" + _ + "\"").mkString("[", ",", "]")
-    val json =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","n":${results.size},""" +
-        s""""value_quiet":${r3(quiet)},""" +
-        s""""value_adjudicated":${r3(valueAdjudicated)},""" +
-        s""""n_stalled":${stalled.size},""" +
-        s""""canary":$canaryJson,"stalled":$stalledJson,""" +
-        s""""n_above_band":${aboveBand.size},"above_band":$aboveJson,""" +
-        s""""n_flagged":${flagged.size},"vintage_stale":$vintageStale,""" +
-        s""""queries":$qs,"sf":"$sfDir"}"""
-    // structured capture: the driver's log-tail parse missed the JSON
-    // when sbt noise followed it (BENCH_r05 parsed:null), so a summary
-    // ALSO lands in a file (SPARK_GRAFT_BENCH_OUT, default ./bench.json)
-    // — the FULL record: every query's seconds + stalled flag, plus the
-    // whole canary series — and the stdout line is printed last, after
-    // spark.stop(), so no further output displaces it from the tail.
-    val fullQs = results.map { case (k, v) =>
-      "\"" + k + "\":{\"sec\":" + r3(v) +
-        ",\"stalled\":" + stalled.contains(k) +
-        ceilingFor(k).map(_ =>
-          ",\"band_hi\":" + r3(bandHi(k)) +
-            ",\"band_scale\":" + r3(bandScale(k)) +
-            ",\"above_band\":" + aboveBand.contains(k))
-          .getOrElse("") +
-        retryInfo.get(k).map { case (rs, rc, rf) =>
-          ",\"flagged\":true,\"retry_sec\":" + r3(rs) +
-            ",\"retry_canary\":" + r3(rc) +
-            ",\"retry_failed\":" + rf
-        }.getOrElse("") + "}"
-    }.mkString("{", ",", "}")
-    val fullJson =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","n":${results.size},""" +
-        s""""value_quiet":${r3(quiet)},""" +
-        s""""value_adjudicated":${r3(valueAdjudicated)},""" +
-        s""""n_stalled":${stalled.size},""" +
-        s""""n_above_band":${aboveBand.size},""" +
-        s""""above_band":${aboveBand.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
-        s""""n_flagged":${flagged.size},""" +
-        s""""flagged":${flagged.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
-        s""""vintage_stale":$vintageStale,""" +
-        bandsVintage.map(v => s""""bands_vintage":"$v",""").getOrElse("") +
-        liveVintage.map(v => s""""live_vintage":"$v",""").getOrElse("") +
-        s""""canary_ref":${r3(canaryRef)},""" +
-        s""""canary_times":${canaryTimes.map(r3).mkString("[", ",", "]")},""" +
-        s""""stalled":${stalled.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
-        s""""queries":$fullQs,"sf":"$sfDir"}"""
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench.json")
     try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
-      (fullJson + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      (record(results, sfDir, canaryBefore, canaryAfter) + "\n")
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     catch { case e: Throwable =>
       System.err.println(s"[bench] could not write $outPath: ${e.getMessage}")
     }
-    // quiesce logging before stop: with the raw (unprefixed) output
-    // strategy the driver tails stdout for the JSON line below — a
-    // WARN from SparkContext.stop() or a shutdown hook landing after
-    // it (merged 2>&1 capture) would displace it from the tail
+    // quiesce logging before stop: the JSON line must be the last line
+    // of stdout, and a WARN from SparkContext.stop() or a shutdown hook
+    // landing after it would displace it from the tail
     spark.sparkContext.setLogLevel("ERROR")
     spark.stop()
-    println(json)
+    println(line(results, sfDir))
     Console.out.flush()
   }
 }

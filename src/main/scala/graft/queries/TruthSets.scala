@@ -35,12 +35,8 @@ object TruthSets {
   private val cache =
     new ConcurrentHashMap[(String, Double), DataFrame]()
 
-  /** Key prefix distinguishing the tiered family from the exact one —
-    * the unit of [[invalidateExact]]/[[invalidateTiered]], which
-    * Bench's retry adjudication uses to make ONLY the retried query's
-    * family repay its compute (clearing the whole cache let a
-    * later-retried consumer of the OTHER family recompute against a
-    * cache-hit band and falsely stand its flag).
+  /** Key prefix of the tiered family's entries, so a tiered pair set
+    * and an exact one over the same (dir, threshold) never share a key.
     */
   private val TieredPrefix = "tiered:"
 
@@ -90,19 +86,6 @@ object TruthSets {
       threshold: Double = 0.8, dfCap: Int = 16): DataFrame =
     getOrCompute(s, (s"$TieredPrefix$dfCap:$d", threshold))(
       Clean.tieredNearDupPairsOn(Tables.documents(s, d), threshold, dfCap))
-
-  /** Drop only the EXACT prefix-filter family (dd7's payer key) —
-    * Bench retry hook; tiered entries survive so dd20/dd21 retries
-    * keep their banded cache-hit semantics.
-    */
-  private[graft] def invalidateExact(): Unit =
-    cache.keySet.removeIf(k => !k._1.startsWith(TieredPrefix))
-
-  /** Drop only the TIERED family (dd20's payer key); the exact
-    * entries survive for dd6/dd15/dd16/dd19 retries.
-    */
-  private[graft] def invalidateTiered(): Unit =
-    cache.keySet.removeIf(_._1.startsWith(TieredPrefix))
 
   /** Test hook: drop all cached truth sets. */
   private[graft] def clear(): Unit = cache.clear()
