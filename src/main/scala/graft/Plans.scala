@@ -33,11 +33,10 @@ object Plans {
         "one-pass decontamination: map-side hit flag, single aggregation",
       "pk2_chunk_overlap" ->
         "long-doc chunking: pure per-row window explode, no shuffle",
-      "asof1_backward" -> "as-of join (shuffle+sort+carry)",
+      "asof1_backward" ->
+        "as-of as a CUSTOM PHYSICAL OPERATOR: declared distribution/ordering, planner-owned exchanges (zero when inputs are pre-partitioned/bucketed)",
       "asof4_backward_chunked" ->
         "skew-proof as-of: (key,bucket) spread + winner carry injection",
-      "asof6_exec_backward" ->
-        "as-of as a CUSTOM PHYSICAL OPERATOR: declared distribution/ordering, planner-owned exchanges (zero when inputs are pre-partitioned/bucketed)",
       "dd7_exact_jaccard" ->
         "exact similarity join: prefix filter + sorted-hash verify",
       "o5_global_topk" -> "global top-k as TakeOrderedAndProject",

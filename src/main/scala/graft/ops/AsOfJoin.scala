@@ -1,8 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+
+import graft.plans.AsOfDir
 
 /** As-of joins: for every left row, attach the payload of the right
   * row with the same key that is nearest in time under a direction
@@ -20,31 +21,27 @@ import org.apache.spark.sql.types.StructType
   * can't carry *columns* across rows of different tables without
   * last(ignoreNulls) per payload column (one window function per
   * column, re-sorted). The right physical shape is the classic
-  * streaming-merge: ONE hash shuffle on the key, ONE in-partition sort
-  * by (key, ts, side), then a linear scan carrying the last-seen right
-  * payload — implemented TWICE here, at two tiers of the build rules:
-  * the `mapPartitions` merge scan over the union layout (preference
-  * (d); the original shape, kept as the reference implementation and
-  * for the chunked scan variants), and the CUSTOM CATALYST PHYSICAL
-  * OPERATOR (preference (c); `graft.plans.AsOfJoinExec`, the
-  * `asofJoin*Exec` entry points below) that DECLARES its distribution
-  * and ordering so the planner plants exchanges only where the child
+  * streaming merge: both sides clustered on the key and sorted by
+  * (key, ts), then ONE linear pass carrying the last-seen right
+  * payload. It runs as a custom Catalyst physical operator
+  * (`graft.plans.AsOfJoinExec`) that DECLARES its distribution and
+  * ordering, so the planner plants exchanges only where the child
   * layout doesn't already satisfy them — bucketed or pre-partitioned
-  * inputs join with zero added shuffle, rows stay Unsafe end-to-end,
-  * and the exec adds tolerance bounds, composite keys, and the
-  * skew-proof chunked composition ([[asofJoinChunkedExec]]).
+  * inputs join with zero added shuffle, and rows stay Unsafe
+  * end-to-end.
+  *
+  * Entry points: [[asofJoin]] (the plain operator, one or more key
+  * columns), [[asofJoinChunked]] (the same operator behind a
+  * (key, time-bucket) spread for hot keys) and [[asofJoinAuto]]
+  * (picks between the two from [[maxKeyTimelineRows]]).
   *
   * Scale: cost is shuffle(left+right) + sort, identical to a
-  * sort-merge join. In the plain variants skewed keys concentrate in
-  * one partition (the stateful carry needs each key's full timeline,
-  * and AQE's skew splitting does not apply to this custom exchange) —
-  * for hot keys use [[asofJoinBackwardChunked]]/
-  * [[asofJoinForwardChunked]], which range-chunk each key's timeline
-  * with boundary carry so one key spreads over numBuckets tasks.
-  * `nearest` additionally buffers
-  * the left rows between two consecutive right rows of one key (it
-  * must see the next-future right before deciding) — bounded by the
-  * left:right arrival ratio, not the partition size.
+  * sort-merge join. In the plain tier a skewed key concentrates in one
+  * partition (the stateful carry needs each key's full timeline, and
+  * AQE's skew splitting does not apply to this operator) — for hot
+  * keys use [[asofJoinChunked]], which range-chunks each key's
+  * timeline with boundary carry so one key spreads over numBuckets
+  * tasks.
   *
   * Ties: right rows sort BEFORE left rows at equal (key, ts), so a
   * right row taking effect at t matches a left row at the same t.
@@ -54,116 +51,37 @@ import org.apache.spark.sql.types.StructType
   *
   * NULL keys never match (SQL equi-join semantics, as DuckDB ASOF):
   * null-keyed left rows get a null payload, null-keyed right rows are
-  * dropped.
+  * dropped. NULL timestamps never match either.
+  *
+  * Output: the left columns, then the right columns minus the keys
+  * and the right ts, all payload columns nullable.
   */
 object AsOfJoin {
 
-  def asofJoinBackward(
-      left: DataFrame,
-      right: DataFrame,
-      keyCol: String,
-      leftTsCol: String,
-      rightTsCol: String,
-      rightTiebreak: Seq[String] = Nil): DataFrame =
-    asofScan(left, right, keyCol, leftTsCol, rightTsCol, rightTiebreak,
-      forward = false)
-
-  def asofJoinForward(
-      left: DataFrame,
-      right: DataFrame,
-      keyCol: String,
-      leftTsCol: String,
-      rightTsCol: String,
-      rightTiebreak: Seq[String] = Nil): DataFrame =
-    asofScan(left, right, keyCol, leftTsCol, rightTsCol, rightTiebreak,
-      forward = true)
-
-  // ---- physical-operator variants (graft.plans.AsOfJoinExec) --------
-
-  /** Backward as-of through the CUSTOM CATALYST OPERATOR
-    * ([[graft.plans.AsOfJoinNode]] → `AsOfJoinExec`): identical
-    * semantics and output shape to [[asofJoinBackward]] (AsOfExecSpec
-    * property-checks them against each other), but the exchange and
-    * sort are DECLARED (`requiredChildDistribution`/`Ordering`)
-    * rather than hand-inserted — inputs already bucketed or
-    * repartitioned by the key join with zero added shuffle, and the
-    * planner/AQE keep control of the exchanges they do insert.
-    *
-    * `toleranceMicros` (all three exec directions): a candidate only
-    * matches within `|leftTs - rightTs| <= tolerance`. The unit is
-    * MICROSECONDS for Timestamp/TimestampNTZ/Date ts columns; for a
-    * LONG or INT ts column the comparison runs in the column's NATIVE
-    * unit (the raw value is the timeline), so pass the tolerance in
-    * that same unit — e.g. a ts column holding epoch-SECONDS takes a
-    * tolerance in seconds.
-    */
-  def asofJoinBackwardExec(
-      left: DataFrame,
-      right: DataFrame,
-      keyCol: String,
-      leftTsCol: String,
-      rightTsCol: String,
-      rightTiebreak: Seq[String] = Nil,
-      toleranceMicros: Option[Long] = None): DataFrame =
-    asofExecPlan(left, right, keyCol, leftTsCol, rightTsCol, rightTiebreak,
-      graft.plans.AsOfDir.Backward, toleranceMicros)
-
-  /** Forward mirror of [[asofJoinBackwardExec]]. */
-  def asofJoinForwardExec(
-      left: DataFrame,
-      right: DataFrame,
-      keyCol: String,
-      leftTsCol: String,
-      rightTsCol: String,
-      rightTiebreak: Seq[String] = Nil,
-      toleranceMicros: Option[Long] = None): DataFrame =
-    asofExecPlan(left, right, keyCol, leftTsCol, rightTsCol, rightTiebreak,
-      graft.plans.AsOfDir.Forward, toleranceMicros)
-
-  /** Nearest-in-time through the custom operator (ties -> backward).
-    * In the two-iterator merge the forward candidate is FREE — it's
-    * the right stream's lookahead row — where [[asofJoinNearest]]'s
-    * single-stream scan buffers lefts between consecutive rights.
-    */
-  def asofJoinNearestExec(
-      left: DataFrame,
-      right: DataFrame,
-      keyCol: String,
-      leftTsCol: String,
-      rightTsCol: String,
-      rightTiebreak: Seq[String] = Nil,
-      toleranceMicros: Option[Long] = None): DataFrame =
-    asofExecPlan(left, right, keyCol, leftTsCol, rightTsCol, rightTiebreak,
-      graft.plans.AsOfDir.Nearest, toleranceMicros)
-
-  private def asofExecPlan(
-      left: DataFrame,
-      right: DataFrame,
-      keyCol: String,
-      leftTsCol: String,
-      rightTsCol: String,
-      rightTiebreak: Seq[String],
-      dir: graft.plans.AsOfDir,
-      toleranceMicros: Option[Long] = None): DataFrame =
-    asofJoinExecMulti(left, right, Seq(keyCol), leftTsCol, rightTsCol,
-      dir, rightTiebreak, toleranceMicros)
-
-  /** Composite-key entry (symbol+venue style): equality on EVERY key
-    * column plus the one time inequality — DuckDB's
+  /** As-of join through the custom operator
+    * ([[graft.plans.AsOfJoinNode]] → `AsOfJoinExec`): equality on EVERY
+    * key column plus the one time inequality — DuckDB's
     * `ASOF JOIN ... ON a = a AND b = b AND l.ts >= r.ts` shape. Key
-    * columns must carry the same names on both sides.
+    * columns must carry the same names and types on both sides.
+    *
+    * `toleranceMicros`: a candidate only matches within
+    * `|leftTs - rightTs| <= tolerance`. The unit is MICROSECONDS for
+    * Timestamp/TimestampNTZ/Date ts columns; for a LONG or INT ts column
+    * the comparison runs in the column's NATIVE unit (the raw value is
+    * the timeline), so pass the tolerance in that same unit — e.g. a ts
+    * column holding epoch-SECONDS takes a tolerance in seconds.
     */
-  def asofJoinExecMulti(
+  def asofJoin(
       left: DataFrame,
       right: DataFrame,
       keyCols: Seq[String],
       leftTsCol: String,
       rightTsCol: String,
-      dir: graft.plans.AsOfDir,
+      dir: AsOfDir,
       rightTiebreak: Seq[String] = Nil,
       toleranceMicros: Option[Long] = None): DataFrame = {
     import org.apache.spark.sql.graftshim.ColumnBridge
-    require(keyCols.nonEmpty, "asofJoinExec: need at least one key column")
+    require(keyCols.nonEmpty, "asofJoin: need at least one key column")
     val spark = left.sparkSession
     ColumnBridge.addPlannerStrategy(spark, graft.plans.AsOfJoinStrategy)
     val lPlan = ColumnBridge.analyzed(left)
@@ -174,7 +92,7 @@ object AsOfJoin {
     def attr(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
         name: String, side: String) =
       p.output.find(_.name == name).getOrElse(throw new IllegalArgumentException(
-        s"asofJoinExec: no column '$name' on the $side side " +
+        s"asofJoin: no column '$name' on the $side side " +
           s"(have: ${p.output.map(_.name).mkString(", ")})"))
     val lks = keyCols.map(attr(lPlan, _, "left"))
     val rks = keyCols.map(attr(rPlan, _, "right"))
@@ -184,12 +102,12 @@ object AsOfJoin {
     // one ordering — the types must agree exactly (cast upstream)
     lks.zip(rks).foreach { case (lk, rk) =>
       require(lk.dataType == rk.dataType,
-        s"asofJoinExec: key type mismatch ${lk.dataType} vs ${rk.dataType}")
+        s"asofJoin: key type mismatch ${lk.dataType} vs ${rk.dataType}")
     }
     require(lt.dataType == rt.dataType,
-      s"asofJoinExec: ts type mismatch ${lt.dataType} vs ${rt.dataType}")
+      s"asofJoin: ts type mismatch ${lt.dataType} vs ${rt.dataType}")
     require(toleranceMicros.forall(_ >= 0),
-      "asofJoinExec: tolerance must be >= 0")
+      "asofJoin: tolerance must be >= 0")
     ColumnBridge.ofRows(spark, graft.plans.AsOfJoinNode(
       lPlan, rPlan, lks, rks, lt, rt, dir,
       rightTiebreak.map(attr(rPlan, _, "right")), toleranceMicros))
@@ -214,9 +132,7 @@ object AsOfJoin {
     * straggler statistic [[asofJoinAuto]] dispatches on. One extra
     * scan of each side, but the aggregate is partial-aggregable
     * (map-side combine), so the exchange carries at most
-    * distinct-keys rows per partition, never the data. Callers that
-    * already know their key stats (a warehouse table profile, a
-    * previous run) pass `knownMaxKeyRows` to skip the probe entirely.
+    * distinct-keys rows per partition, never the data.
     *
     * NULL keys COUNT as a group: they never match, but the plain
     * exec's hash distribution still funnels every null-key row into
@@ -242,25 +158,21 @@ object AsOfJoin {
       }
   }
 
-  /** AUTO-DISPATCHING as-of through the custom operator — the dd11
-    * pattern applied to the plain-vs-chunked exec choice: one cheap
-    * key-cardinality probe ([[maxKeyTimelineRows]], or a caller-
-    * supplied stat) picks the plain exec ([[asofJoinBackwardExec]]
-    * family) when no key's timeline exceeds `hotKeyRowThreshold`, and
-    * the skew-chunked composition ([[asofJoinChunkedExec]]) when one
-    * does — so a 100×-scale user gets the measured-best tier without
-    * reading the break-even tables. Both tiers are row-identical
-    * (AsOfExecSpec), so the dispatch NEVER changes the result, only
-    * the physical spread; AsOfExecSpec proves the plan flip on both
-    * regimes (uniform keys → single-key exec node in the plan;
-    * adversarial hot key → the (key, bucket) two-key exec).
+  /** AUTO-DISPATCHING as-of — the dd11 pattern applied to the
+    * plain-vs-chunked choice: one key-cardinality probe
+    * ([[maxKeyTimelineRows]]) picks the plain operator ([[asofJoin]])
+    * when no key's timeline exceeds `hotKeyRowThreshold`, and the
+    * skew-chunked composition ([[asofJoinChunked]]) when one does — so
+    * a 100×-scale user gets the measured-best tier without reading the
+    * break-even tables. Both tiers are row-identical (AsOfExecSpec), so
+    * the dispatch NEVER changes the result, only the physical spread;
+    * AsOfExecSpec proves the plan flip on both regimes (uniform keys →
+    * single-key exec node in the plan; adversarial hot key → the
+    * (key, bucket) two-key exec).
     *
-    * Probe cost: when `knownMaxKeyRows` is NOT supplied, the dispatch
-    * statistic costs one full scan + partial-agg exchange of BOTH
-    * inputs per call (the exchange carries distinct-keys rows, never
-    * the data, but the scans are real). Repeated callers over large
-    * inputs should pass `knownMaxKeyRows` from a table profile or a
-    * prior run — it skips the probe entirely.
+    * Probe cost: one full scan + partial-agg exchange of BOTH inputs
+    * per call (the exchange carries distinct-keys rows, never the
+    * data, but the scans are real).
     */
   def asofJoinAuto(
       left: DataFrame,
@@ -268,51 +180,55 @@ object AsOfJoin {
       keyCol: String,
       leftTsCol: String,
       rightTsCol: String,
-      dir: graft.plans.AsOfDir = graft.plans.AsOfDir.Backward,
+      dir: AsOfDir = AsOfDir.Backward,
       rightTiebreak: Seq[String] = Nil,
       hotKeyRowThreshold: Long = DefaultHotKeyRowThreshold,
-      knownMaxKeyRows: Option[Long] = None,
       numBuckets: Int = 64,
       toleranceMicros: Option[Long] = None): DataFrame = {
     require(hotKeyRowThreshold > 0,
       s"hotKeyRowThreshold must be > 0, got $hotKeyRowThreshold")
-    val maxKey = knownMaxKeyRows
-      .getOrElse(maxKeyTimelineRows(left, right, keyCol))
-    if (maxKey > hotKeyRowThreshold)
-      asofJoinChunkedExec(left, right, keyCol, leftTsCol, rightTsCol,
+    if (maxKeyTimelineRows(left, right, keyCol) > hotKeyRowThreshold)
+      asofJoinChunked(left, right, keyCol, leftTsCol, rightTsCol,
         dir, rightTiebreak, numBuckets, toleranceMicros)
     else
-      asofExecPlan(left, right, keyCol, leftTsCol, rightTsCol,
-        rightTiebreak, dir, toleranceMicros)
+      asofJoin(left, right, Seq(keyCol), leftTsCol, rightTsCol, dir,
+        rightTiebreak, toleranceMicros)
   }
 
-  /** SKEW-PROOF as-of through the custom operator: the
-    * [[asofJoinBackwardChunked]] (key, time-bucket) spread composed
-    * with [[asofJoinExecMulti]] — each key's timeline is cut into
-    * `numBuckets` equal time ranges, the per-(key, bucket) winning
-    * right rows are injected across bucket boundaries (the same
-    * boundary-carry argument as the scan variant: a non-winner from an
-    * earlier bucket is dominated by its bucket's winner for every
-    * later left), and the join itself runs as the PHYSICAL OPERATOR
-    * keyed on (key, bucket) — so a hot key's buckets hash to many
-    * tasks while the planner still owns the exchanges. `nearest`
-    * injects winners in BOTH directions (the forward candidate must be
-    * visible inside the bucket). Row-identical to the chunked scan
-    * variants (AsOfExecSpec proves it on 90%-one-key skew).
+  /** SKEW-PROOF as-of: each key's timeline is cut into `numBuckets`
+    * equal time ranges, the per-(key, bucket) winning right rows are
+    * injected across bucket boundaries, and the join itself runs as
+    * [[asofJoin]] keyed on (key, bucket) — so a hot key's buckets hash
+    * to many tasks while the planner still owns the exchanges.
+    *
+    * Correct carry across the cut: for every (key, bucket) the WINNING
+    * right row (max (ts, tiebreak) for backward, min for forward) is
+    * injected into each LATER (backward) or EARLIER (forward) bucket
+    * that has left rows. Injecting only winners is sufficient: a
+    * non-winner from an earlier bucket is dominated by its bucket's
+    * winner for every left row of any later bucket. `nearest` injects
+    * winners in BOTH directions (the forward candidate must be visible
+    * inside the bucket).
+    *
+    * Cost: one extra pass for the (min, max) ts bounds, a partial-agg
+    * per-bucket winner reduction, and <= occupiedBuckets^2 injected
+    * rows per key — O(numBuckets^2) tiny rows against a hot key's
+    * millions. Row-identical to [[asofJoin]] (AsOfExecSpec proves it on
+    * 90%-one-key skew).
     */
-  def asofJoinChunkedExec(
+  def asofJoinChunked(
       left: DataFrame,
       right: DataFrame,
       keyCol: String,
       leftTsCol: String,
       rightTsCol: String,
-      dir: graft.plans.AsOfDir,
+      dir: AsOfDir,
       rightTiebreak: Seq[String] = Nil,
       numBuckets: Int = 64,
       toleranceMicros: Option[Long] = None): DataFrame = {
     // tolerance composes with the spread for free: the chunked layout
     // presents each left row the SAME candidate rights as the plain
-    // exec (boundary-winner injection preserves per-key candidate
+    // operator (boundary-winner injection preserves per-key candidate
     // structure — the row-identity proof), and the tolerance test
     // reads only (leftTs, candidateTs), so nulling happens identically
     require(numBuckets >= 1, s"numBuckets must be >= 1, got $numBuckets")
@@ -320,12 +236,11 @@ object AsOfJoin {
     // time bucket on both sides), '__tgt_b' (the occupied-bucket carry
     // target), '__w' (the per-bucket winner struct) — an input column
     // with any of these names would collide in carriedRows' rename
-    // (the normalized scan variants are immune; they re-frame columns)
     for (c <- Seq("__b", "__tgt_b", "__w"))
       require(!right.columns.contains(c) && !left.columns.contains(c),
-        s"asofJoinChunkedExec: column name '$c' is reserved")
-    def plain() = asofExecPlan(left, right, keyCol, leftTsCol, rightTsCol,
-      rightTiebreak, dir, toleranceMicros)
+        s"asofJoinChunked: column name '$c' is reserved")
+    def plain() = asofJoin(left, right, Seq(keyCol), leftTsCol, rightTsCol,
+      dir, rightTiebreak, toleranceMicros)
     // numeric timeline for range bucketing (seconds for temporal types)
     def tsD(c: org.apache.spark.sql.Column) =
       left.schema(leftTsCol).dataType match {
@@ -370,9 +285,9 @@ object AsOfJoin {
         .select(rB.columns.map(col): _*)
     }
     val carried = dir match {
-      case graft.plans.AsOfDir.Backward => Seq(carriedRows(takeMin = false))
-      case graft.plans.AsOfDir.Forward => Seq(carriedRows(takeMin = true))
-      case graft.plans.AsOfDir.Nearest =>
+      case AsOfDir.Backward => Seq(carriedRows(takeMin = false))
+      case AsOfDir.Forward => Seq(carriedRows(takeMin = true))
+      case AsOfDir.Nearest =>
         Seq(carriedRows(takeMin = false), carriedRows(takeMin = true))
     }
     val r2 = carried.foldLeft(rB)(_.unionByName(_))
@@ -384,437 +299,11 @@ object AsOfJoin {
     // reuse path AsOfExecSpec proves for pre-partitioned inputs)
     val nPart = left.sparkSession.conf
       .get("spark.sql.shuffle.partitions").toInt
-    asofJoinExecMulti(
+    asofJoin(
       lB.repartition(nPart, col(keyCol), col("__b")),
       r2.repartition(nPart, col(keyCol), col("__b")),
       Seq(keyCol, "__b"), leftTsCol, rightTsCol, dir, rightTiebreak,
       toleranceMicros)
       .drop("__b")
-  }
-
-  /** Shared one-shuffle merge scan. `forward = true` sweeps time
-    * DESCENDING, so "last seen right" is the earliest right at-or-after
-    * the left row — the exact mirror of the backward carry.
-    */
-  private def asofScan(
-      left: DataFrame,
-      right: DataFrame,
-      keyCol: String,
-      leftTsCol: String,
-      rightTsCol: String,
-      rightTiebreak: Seq[String],
-      forward: Boolean): DataFrame = {
-    val (sorted, outSchema, nLeft, nPayload) =
-      normalize(left, right, keyCol, leftTsCol, rightTsCol, rightTiebreak,
-        descendingTs = forward)
-    mergeScan(sorted, outSchema, nLeft, nPayload)
-  }
-
-  /** The linear carry scan over a (key, ts, side)-sorted layout.
-    * Row positions: 0 = scan key (any type; rows of one key must be
-    * contiguous), 1 = ts, 2 = side (0 right / 1 left), then nLeft left
-    * columns and nPayload payload columns.
-    */
-  private def mergeScan(
-      sorted: DataFrame,
-      outSchema: StructType,
-      nLeft: Int,
-      nPayload: Int): DataFrame = {
-    val rowEncoder = org.apache.spark.sql.Encoders.row(outSchema)
-
-    val joined = sorted.mapPartitions { it =>
-      var curKey: Any = null
-      var lastPayload: Array[Any] = null
-      it.flatMap { r =>
-        val k = r.get(0)
-        if (k != curKey) { curKey = k; lastPayload = null }
-        if (k == null || r.isNullAt(1)) {
-          // SQL comparison semantics: NULL keys and NULL timestamps
-          // never satisfy the as-of predicate — suppress the stateful
-          // carry (null-ts rights are dropped regardless of where the
-          // sweep direction sorts them) so such lefts get null payload
-          if (r.getInt(2) == 0) Iterator.empty
-          else {
-            val leftVals = Array.tabulate(nLeft)(i => r.get(3 + i))
-            Iterator.single(Row.fromSeq(
-              leftVals.toIndexedSeq ++ Seq.fill[Any](nPayload)(null)))
-          }
-        } else if (r.getInt(2) == 0) {
-          // right row: update carried payload
-          lastPayload = Array.tabulate(nPayload)(i => r.get(3 + nLeft + i))
-          Iterator.empty
-        } else {
-          val leftVals = Array.tabulate(nLeft)(i => r.get(3 + i))
-          val payload =
-            if (lastPayload != null) lastPayload
-            else Array.fill[Any](nPayload)(null)
-          Iterator.single(Row.fromSeq(
-            leftVals.toIndexedSeq ++ payload.toIndexedSeq))
-        }
-      }
-    }(rowEncoder)
-    joined.toDF()
-  }
-
-  // ---- skew-proof range-chunked variants -----------------------------
-
-  /** Backward as-of join that spreads a HOT KEY over many tasks — the
-    * answer to the plain scan's skew ceiling (one key = one partition,
-    * and AQE cannot split a custom exchange).
-    *
-    * Each key's timeline is cut into `numBuckets` equal time ranges
-    * and the merge scan partitions by (key, bucket). Correct carry
-    * across the cut: for every (key, bucket) the WINNING right row
-    * (the one the carry would hold at bucket end — max (ts, tiebreak))
-    * is injected into each LATER bucket that has left rows, where it
-    * sorts before the bucket's native rows and seeds the scan state.
-    * Injecting only winners is sufficient: a non-winner from an
-    * earlier bucket is dominated by its bucket's winner for every left
-    * row of any later bucket.
-    *
-    * Cost: one extra pass for the (min, max) ts bounds, a partial-agg
-    * per-bucket winner reduction, and <= occupiedBuckets^2 injected
-    * rows per key — O(numBuckets^2) tiny rows against a hot key's
-    * millions. Output is row-identical to [[asofJoinBackward]]
-    * (AsOfJoinSpec asserts it on 90%-one-key data).
-    */
-  def asofJoinBackwardChunked(
-      left: DataFrame,
-      right: DataFrame,
-      keyCol: String,
-      leftTsCol: String,
-      rightTsCol: String,
-      rightTiebreak: Seq[String] = Nil,
-      numBuckets: Int = 64): DataFrame =
-    chunkedScan(left, right, keyCol, leftTsCol, rightTsCol, rightTiebreak,
-      forward = false, numBuckets)
-
-  /** Forward mirror of [[asofJoinBackwardChunked]]: winners are the
-    * MIN (ts, tiebreak) rights, injected into earlier buckets.
-    */
-  def asofJoinForwardChunked(
-      left: DataFrame,
-      right: DataFrame,
-      keyCol: String,
-      leftTsCol: String,
-      rightTsCol: String,
-      rightTiebreak: Seq[String] = Nil,
-      numBuckets: Int = 64): DataFrame =
-    chunkedScan(left, right, keyCol, leftTsCol, rightTsCol, rightTiebreak,
-      forward = true, numBuckets)
-
-  private def chunkedScan(
-      left: DataFrame,
-      right: DataFrame,
-      keyCol: String,
-      leftTsCol: String,
-      rightTsCol: String,
-      rightTiebreak: Seq[String],
-      forward: Boolean,
-      numBuckets: Int): DataFrame = {
-    val (lNorm, rNorm, outSchema, nLeft, nPayload, _) =
-      normCols(left, right, keyCol, leftTsCol, rightTsCol)
-    chunkedSorted(lNorm, rNorm, rightTiebreak, numBuckets,
-      carryBackward = !forward, carryForward = forward,
-      descendingTs = forward) match {
-      case Some(sorted) => mergeScan(sorted, outSchema, nLeft, nPayload)
-      case None => asofScan(left, right, keyCol, leftTsCol, rightTsCol,
-        rightTiebreak, forward)
-    }
-  }
-
-  /** The (key, time-bucket) framing shared by every chunked variant:
-    * bucket both sides by equal time ranges, inject per-(key, bucket)
-    * winning right rows into occupied buckets on the requested carry
-    * side(s), and return the (key,bucket)-partitioned sorted layout
-    * for a scan — or None when the timeline is degenerate (empty or a
-    * single instant) and chunking has nothing to split.
-    *
-    * carryBackward injects each bucket's MAX (ts, tiebreak) right into
-    * later occupied buckets (seeds "latest right so far"); carryForward
-    * injects each bucket's MIN into earlier ones (provides the "next
-    * future right"). The nearest scan needs both.
-    */
-  private def chunkedSorted(
-      lNorm: DataFrame,
-      rNorm: DataFrame,
-      rightTiebreak: Seq[String],
-      numBuckets: Int,
-      carryBackward: Boolean,
-      carryForward: Boolean,
-      descendingTs: Boolean): Option[DataFrame] = {
-    require(numBuckets >= 1, s"numBuckets must be >= 1, got $numBuckets")
-    // numeric timeline for range bucketing (seconds for temporal types)
-    def tsD = lNorm.schema("__ts").dataType match {
-      case org.apache.spark.sql.types.DateType =>
-        col("__ts").cast("timestamp").cast("double")
-      case _ => col("__ts").cast("double")
-    }
-    val mm = lNorm.select(tsD.as("t")).unionAll(rNorm.select(tsD.as("t")))
-      .agg(min(col("t")), max(col("t"))).head()
-    if (mm.isNullAt(0) || mm.getDouble(0) == mm.getDouble(1)) return None
-    val lo = mm.getDouble(0)
-    val width = (mm.getDouble(1) - lo) / numBuckets
-    val bucket = coalesce(
-      least(lit(numBuckets - 1), greatest(lit(0),
-        floor((tsD - lit(lo)) / lit(width)).cast("int"))),
-      lit(0)) // null ts: bucket 0 (never matches; scan nulls it anyway)
-
-    val lB = lNorm.withColumn("__b", bucket)
-    val rB = rNorm.withColumn("__b", bucket)
-
-    // per-(key, bucket) winners — partial aggregation, skew-safe
-    val ordStruct = struct(
-      (col("__ts") +: rightTiebreak.map(c => col(s"__p_$c"))): _*)
-    val rowStruct = struct(rB.columns.map(col): _*)
-    val validRights = rB.filter(col("__k").isNotNull && col("__ts").isNotNull)
-    val occupied = lB.filter(col("__k").isNotNull && col("__ts").isNotNull)
-      .select(col("__k"), col("__b").as("__tgt_b")).distinct()
-    def carriedRows(takeMin: Boolean): DataFrame = {
-      val winners = validRights
-        .groupBy(col("__k"), col("__b"))
-        .agg((if (takeMin) min_by(rowStruct, ordStruct)
-              else max_by(rowStruct, ordStruct)).as("__w"))
-        .select(col("__w.*"))
-      winners.join(occupied, Seq("__k"))
-        .filter(if (takeMin) col("__tgt_b") < col("__b")
-                else col("__tgt_b") > col("__b"))
-        .drop("__b").withColumnRenamed("__tgt_b", "__b")
-        .select(lB.columns.map(col): _*)
-    }
-    val carried =
-      (if (carryBackward) Seq(carriedRows(takeMin = false)) else Nil) ++
-        (if (carryForward) Seq(carriedRows(takeMin = true)) else Nil)
-
-    // composite scan key (key, bucket); whole-struct NULL for null keys
-    // so the scan's null semantics apply unchanged
-    val kb = when(col("__k").isNotNull, struct(col("__k"), col("__b")))
-    val dataCols = lB.columns.filterNot(c => c == "__k" || c == "__b")
-      .map(col).toSeq
-    def framed(df: DataFrame) = df.select((kb.as("__k") +: dataCols): _*)
-
-    val tsOrder = if (descendingTs) col("__ts").desc else col("__ts").asc
-    val tieCols = rightTiebreak.map { c =>
-      if (descendingTs) col(s"__p_$c").desc else col(s"__p_$c").asc
-    }
-    // explicit partition count: AQE would otherwise coalesce the
-    // (key, bucket) shuffle back together, undoing exactly the spread
-    // this operator exists to create
-    val nPart = lB.sparkSession.conf
-      .get("spark.sql.shuffle.partitions").toInt
-    Some(carried.foldLeft(framed(lB).unionByName(framed(rB)))(
-        (acc, c) => acc.unionByName(framed(c)))
-      .repartition(nPart, col("__k"))
-      .sortWithinPartitions(
-        (col("__k") +: tsOrder +: col("__side") +: tieCols): _*))
-  }
-
-  /** Nearest-in-time as-of: per left row, the closer of the backward
-    * and forward matches (ties -> backward). Single ascending merge
-    * scan: left rows buffer until the next right row of their key
-    * arrives (which fixes their forward candidate), then flush.
-    */
-  def asofJoinNearest(
-      left: DataFrame,
-      right: DataFrame,
-      keyCol: String,
-      leftTsCol: String,
-      rightTsCol: String,
-      rightTiebreak: Seq[String] = Nil): DataFrame = {
-    val (sorted, outSchema, nLeft, nPayload) =
-      normalize(left, right, keyCol, leftTsCol, rightTsCol, rightTiebreak,
-        descendingTs = false)
-    nearestScan(sorted, outSchema, nLeft, nPayload)
-  }
-
-  /** Skew-proof nearest as-of: the (key, time-bucket) spread of
-    * [[asofJoinBackwardChunked]] with boundary carry in BOTH
-    * directions — each bucket receives the latest earlier right (seeds
-    * the backward state) AND every later bucket's earliest right (so
-    * lefts with no native future right in their bucket still flush
-    * against the true next-future right; the ascending scan meets the
-    * nearest injected one first). Row-identical to [[asofJoinNearest]]
-    * (AsOfJoinSpec asserts it on 90%-one-key data).
-    */
-  def asofJoinNearestChunked(
-      left: DataFrame,
-      right: DataFrame,
-      keyCol: String,
-      leftTsCol: String,
-      rightTsCol: String,
-      rightTiebreak: Seq[String] = Nil,
-      numBuckets: Int = 64): DataFrame = {
-    val (lNorm, rNorm, outSchema, nLeft, nPayload, _) =
-      normCols(left, right, keyCol, leftTsCol, rightTsCol)
-    chunkedSorted(lNorm, rNorm, rightTiebreak, numBuckets,
-      carryBackward = true, carryForward = true,
-      descendingTs = false) match {
-      case Some(sorted) => nearestScan(sorted, outSchema, nLeft, nPayload)
-      case None => asofJoinNearest(left, right, keyCol, leftTsCol,
-        rightTsCol, rightTiebreak)
-    }
-  }
-
-  /** The buffering nearest merge scan over an ASCENDING (key, ts,
-    * side)-sorted layout (same row positions as [[mergeScan]]).
-    */
-  private def nearestScan(
-      sorted: DataFrame,
-      outSchema: StructType,
-      nLeft: Int,
-      nPayload: Int): DataFrame = {
-    val rowEncoder = org.apache.spark.sql.Encoders.row(outSchema)
-
-    val joined = sorted.mapPartitions { it =>
-      var curKey: Any = null
-      var lastPayload: Array[Any] = null
-      var lastTs: Long = 0L
-      // lefts since the previous right of this key: (vals, backDist or -1)
-      val pending = scala.collection.mutable.ArrayBuffer
-        .empty[(Array[Any], Long)]
-      val out = scala.collection.mutable.Queue.empty[Row]
-
-      def flush(fwdPayload: Array[Any], fwdTs: Long, haveFwd: Boolean): Unit = {
-        pending.foreach { case (leftVals, backDist) =>
-          val useBack =
-            if (backDist < 0) false
-            else if (!haveFwd) true
-            else backDist <= fwdTs - tsOf(leftVals) // tie -> backward
-          val payload =
-            if (useBack) lastPayloadAt(leftVals) // captured below
-            else if (haveFwd) fwdPayload
-            else Array.fill[Any](nPayload)(null)
-          out += Row.fromSeq(leftVals.take(nLeft).toIndexedSeq ++
-            payload.toIndexedSeq)
-        }
-        pending.clear()
-      }
-      // leftVals layout: [left cols..., backPayload..., leftTsMicros]
-      def tsOf(v: Array[Any]): Long = v(v.length - 1).asInstanceOf[Long]
-      def lastPayloadAt(v: Array[Any]): Array[Any] =
-        v.slice(nLeft, nLeft + nPayload)
-
-      new Iterator[Row] {
-        private var done = false
-        private def fill(): Unit = {
-          while (out.isEmpty && !done) {
-            if (!it.hasNext) {
-              flush(null, 0L, haveFwd = false)
-              done = true
-            } else {
-              val r = it.next()
-              val k = r.get(0)
-              if (k != curKey) {
-                flush(null, 0L, haveFwd = false)
-                curKey = k; lastPayload = null; lastTs = 0L
-              }
-              if (k == null || r.isNullAt(1)) {
-                // NULL keys/timestamps never satisfy the distance
-                // predicate (SQL comparison semantics): lefts emit a
-                // null payload immediately, rights are dropped
-                if (r.getInt(2) != 0) {
-                  val leftVals = Array.tabulate(nLeft)(i => r.get(3 + i))
-                  out += Row.fromSeq(leftVals.toIndexedSeq ++
-                    Seq.fill[Any](nPayload)(null))
-                }
-              } else if (r.getInt(2) == 0) {
-                val ts = toMicros(r.get(1))
-                val payload = Array.tabulate(nPayload)(i => r.get(3 + nLeft + i))
-                flush(payload, ts, haveFwd = true)
-                lastPayload = payload
-                lastTs = ts
-              } else {
-                val ts = toMicros(r.get(1))
-                val backDist = if (lastPayload != null) ts - lastTs else -1L
-                val vals = new Array[Any](nLeft + nPayload + 1)
-                var i = 0
-                while (i < nLeft) { vals(i) = r.get(3 + i); i += 1 }
-                val bp = if (lastPayload != null) lastPayload
-                  else Array.fill[Any](nPayload)(null)
-                System.arraycopy(bp, 0, vals, nLeft, nPayload)
-                vals(nLeft + nPayload) = ts
-                pending += ((vals, backDist))
-              }
-            }
-          }
-        }
-        override def hasNext: Boolean = { fill(); out.nonEmpty }
-        override def next(): Row = { fill(); out.dequeue() }
-      }
-    }(rowEncoder)
-    joined.toDF()
-  }
-
-  /** Common layout: key, ts, side(0=right,1=left), left..., payload...,
-    * hash-partitioned by key and sorted within partitions so a linear
-    * scan sees each key's timeline in order (rights before lefts at
-    * equal ts, in both sweep directions).
-    */
-  /** Normalized side layouts: key, ts, side(0=right,1=left), left...,
-    * payload... — the common column frame for every scan variant.
-    */
-  private def normCols(
-      left: DataFrame,
-      right: DataFrame,
-      keyCol: String,
-      leftTsCol: String,
-      rightTsCol: String) = {
-    val leftCols = left.columns.toSeq
-    val payloadCols = right.columns.toSeq
-      .filterNot(c => c == keyCol || c == rightTsCol)
-
-    val lNorm = left.select(
-      col(keyCol).as("__k") +: col(leftTsCol).as("__ts") +: lit(1).as("__side") +:
-        (leftCols.map(col) ++
-          payloadCols.map(c => lit(null).cast(
-            right.schema(c).dataType).as(s"__p_$c"))): _*)
-    val rNorm = right.select(
-      col(keyCol).as("__k") +: col(rightTsCol).as("__ts") +: lit(0).as("__side") +:
-        (leftCols.map(c => lit(null).cast(left.schema(c).dataType).as(c)) ++
-          payloadCols.map(c => col(c).as(s"__p_$c"))): _*)
-    val outSchema = StructType(
-      left.schema.fields ++
-        payloadCols.map(c => right.schema(c).copy(nullable = true)))
-    (lNorm, rNorm, outSchema, leftCols.length, payloadCols.length, payloadCols)
-  }
-
-  private def normalize(
-      left: DataFrame,
-      right: DataFrame,
-      keyCol: String,
-      leftTsCol: String,
-      rightTsCol: String,
-      rightTiebreak: Seq[String],
-      descendingTs: Boolean) = {
-    val (lNorm, rNorm, outSchema, nLeft, nPayload, _) =
-      normCols(left, right, keyCol, leftTsCol, rightTsCol)
-    val tsOrder = if (descendingTs) col("__ts").desc else col("__ts").asc
-    // carry semantics: the LAST right processed at equal (key, ts)
-    // wins. Backward promises the last in tiebreak order, forward the
-    // FIRST (mirroring the nearest scan, whose forward candidate is
-    // the first right it meets) — so the descending sweep sorts the
-    // tiebreak descending to make the first-in-order right land last.
-    val tieCols = rightTiebreak.map { c =>
-      if (descendingTs) col(s"__p_$c").desc else col(s"__p_$c").asc
-    }
-    val sorted = lNorm.unionByName(rNorm)
-      .repartition(col("__k"))
-      .sortWithinPartitions(
-        (col("__k") +: tsOrder +: col("__side") +: tieCols): _*)
-    (sorted, outSchema, nLeft, nPayload)
-  }
-
-  /** Event-time as micros for distance arithmetic (nearest). */
-  private def toMicros(v: Any): Long = v match {
-    case t: java.sql.Timestamp =>
-      Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
-    case i: java.time.Instant =>
-      i.getEpochSecond * 1000000L + i.getNano / 1000L
-    case l: java.lang.Long => l.longValue()
-    case i: java.lang.Integer => i.longValue()
-    case d: java.sql.Date => d.getTime * 1000L
-    case d: java.time.LocalDate => d.toEpochDay * 86400L * 1000000L
-    case other => throw new IllegalArgumentException(
-      s"asofJoinNearest: unsupported ts type ${other.getClass}")
   }
 }

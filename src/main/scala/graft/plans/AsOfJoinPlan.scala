@@ -17,8 +17,7 @@ import org.apache.spark.sql.types.{
   * latest-at-or-before / earliest-at-after right is closer in time
   * (ties -> backward) — in the two-iterator merge it costs nothing
   * extra: the right stream's lookahead row IS the next-future
-  * candidate, where the single-stream scan implementation has to
-  * buffer lefts between consecutive rights.
+  * candidate, so no left row is buffered.
   */
 sealed trait AsOfDir extends Serializable
 object AsOfDir {
@@ -33,11 +32,11 @@ object AsOfDir {
   * express without blow-up; see `graft.ops.AsOfJoin` for why the
   * compositional encodings are wrong).
   *
-  * Why a physical operator when the `mapPartitions` merge scan
-  * (`AsOfJoin.asofScan`) is already correct: the scan pays its
-  * repartition + sort UNCONDITIONALLY and hides the operator from the
-  * planner behind an opaque RDD boundary. Declaring the requirement
-  * instead ([[AsOfJoinExec.requiredChildDistribution]] /
+  * Why a physical operator rather than a hand-placed repartition +
+  * sort feeding a `mapPartitions` scan: such a scan pays its shuffle
+  * and sort UNCONDITIONALLY and hides the join from the planner behind
+  * an opaque RDD boundary. Declaring the requirement instead
+  * ([[AsOfJoinExec.requiredChildDistribution]] /
   * [[AsOfJoinExec.requiredChildOrdering]]) lets `EnsureRequirements`
   * plant the exchange and sort ONLY where the child's existing layout
   * doesn't already satisfy them — a bucketed 100 TB quote table
@@ -45,12 +44,12 @@ object AsOfDir {
   * sort on that side, and a frame the user already repartitioned by
   * the key is reused as-is (AsOfExecSpec proves both on the physical
   * plan). The children stay inside whole-stage codegen up to the
-  * operator boundary, rows stay Unsafe end-to-end (the Row-codec
-  * `mapPartitions` scan deserializes every field), and AQE can still
-  * re-plan the exchanges it did insert.
+  * operator boundary, rows stay Unsafe end-to-end (no Row codec
+  * deserializes the fields), and AQE can still re-plan the exchanges
+  * it did insert.
   *
-  * Semantics (identical to the `AsOfJoin.asofJoin*` scan variants,
-  * property-checked against them in AsOfExecSpec):
+  * Semantics (property-checked in AsOfExecSpec against a plain-Scala
+  * reference written from this definition):
   *  - backward: LATEST right with rightTs <= leftTs, per key
   *  - forward:  EARLIEST right with rightTs >= leftTs, per key
   *  - nearest:  the closer of the two; ties -> backward
@@ -63,8 +62,9 @@ object AsOfDir {
   * merge per partition carrying the last-seen valid right payload
   * (for nearest, the right lookahead row doubles as the forward
   * candidate), exactly a sort-merge join's cost with an O(1)-state
-  * scan instead of buffered key groups. The skew-chunked variants
-  * stay on the scan implementation (they re-key the exchange itself).
+  * scan instead of buffered key groups. The skew-chunked tier
+  * (`AsOfJoin.asofJoinChunked`) runs this same operator keyed on
+  * (key, time bucket).
   */
 case class AsOfJoinNode(
     left: LogicalPlan,
@@ -81,7 +81,7 @@ case class AsOfJoinNode(
     "asofJoin: need >= 1 key and matching key counts on both sides")
 
   /** Left columns, then the right payload (right minus keys/ts),
-    * nullable — the scan implementations' exact output shape.
+    * nullable.
     */
   override def output: Seq[Attribute] = {
     val dropped = rightKeys.map(_.exprId).toSet + rightTs.exprId
@@ -169,15 +169,14 @@ case class AsOfJoinExec(
       newLeft: SparkPlan, newRight: SparkPlan): AsOfJoinExec =
     copy(left = newLeft, right = newRight)
 
-  /** Timeline reader for the nearest-distance and tolerance tests —
-    * matches the scan implementation's `toMicros` (external types)
+  /** Timeline reader for the nearest-distance and tolerance tests,
     * over the INTERNAL representations. For Timestamp/TimestampNTZ
     * (stored as Long micros) and Date (Int days, scaled here) the
     * returned value — and therefore `toleranceMicros` and the nearest
     * distance — is in MICROSECONDS. For LongType/IntegerType ts
     * columns the raw column value IS the timeline, so tolerance and
-    * distance are in the column's NATIVE unit (documented on the
-    * `asofJoin*Exec` entry points).
+    * distance are in the column's NATIVE unit (documented on
+    * `AsOfJoin.asofJoin`).
     */
   private def microsReader(dt: DataType): (InternalRow, Int) => Long =
     dt match {
@@ -186,7 +185,7 @@ case class AsOfJoinExec(
       case LongType => (r, i) => r.getLong(i)
       case IntegerType => (r, i) => r.getInt(i).toLong
       case other => throw new IllegalArgumentException(
-        s"asofJoinNearestExec: unsupported ts type $other")
+        s"asofJoin: unsupported ts type $other")
     }
 
   protected override def doExecute(): RDD[InternalRow] = {

@@ -1616,13 +1616,7 @@ object Extensions extends QueryModule {
     pipe1CorpusCleanOn(s, Tables.documents(s, d), staging)
 
   private[graft] def pipe1CorpusCleanOn(
-      s: SparkSession, docsIn: DataFrame, staging: Staging): DataFrame = {
-    // fan-out at the pipeline TOP (guide §2): every downstream stage —
-    // quality filter, exact-dedup hashes, the near-dup kernel's n-gram
-    // passes — inherits this layout (the staged frame pins it), and
-    // the staged `exactKept` would otherwise carry the scan's
-    // few-partition layout into the kernel's per-doc set builds
-    val docs = graft.ops.Ops.fanOutForCompute(docsIn, col("doc_id"))
+      s: SparkSession, docs: DataFrame, staging: Staging): DataFrame = {
     val quality = docs.filter(TextFunctions.qualityScore(col("text")) > 0.3)
     // stage materialization: the downstream near-dup pass references
     // this frame several times (gram explode + per-side set fetches +
@@ -1778,29 +1772,32 @@ object Extensions extends QueryModule {
 
   def asof1Backward(s: SparkSession, d: String): DataFrame = {
     val (left, right) = asofSides(s, d)
-    graft.ops.AsOfJoin.asofJoinBackward(left, right, "user_id", "ts", "ts")
+    graft.ops.AsOfJoin.asofJoin(left, right, Seq("user_id"), "ts", "ts",
+      graft.plans.AsOfDir.Backward)
   }
 
   /** The skew-proof range-chunked backward as-of — identical semantics
     * to [[asof1Backward]] (same DuckDB oracle), executed with the
     * (key, time-bucket) partitioning that spreads a hot key over many
-    * tasks ([[graft.ops.AsOfJoin.asofJoinBackwardChunked]]).
+    * tasks ([[graft.ops.AsOfJoin.asofJoinChunked]]); the pinned-count
+    * (key, bucket) repartition is REUSED by the operator's declared
+    * distribution (zero added exchanges).
     */
   def asof4BackwardChunked(s: SparkSession, d: String): DataFrame = {
     val (left, right) = asofSides(s, d)
-    graft.ops.AsOfJoin.asofJoinBackwardChunked(
-      left, right, "user_id", "ts", "ts")
+    graft.ops.AsOfJoin.asofJoinChunked(left, right, "user_id", "ts", "ts",
+      graft.plans.AsOfDir.Backward)
   }
 
   /** Skew-proof nearest as-of — identical semantics to [[asof3Nearest]]
     * (same composed DuckDB oracle), executed with (key, time-bucket)
     * spread and BOTH-direction boundary carry
-    * ([[graft.ops.AsOfJoin.asofJoinNearestChunked]]).
+    * ([[graft.ops.AsOfJoin.asofJoinChunked]]).
     */
   def asof5NearestChunked(s: SparkSession, d: String): DataFrame = {
     val (left, right) = asofSides(s, d)
-    graft.ops.AsOfJoin.asofJoinNearestChunked(
-      left, right, "user_id", "ts", "ts")
+    graft.ops.AsOfJoin.asofJoinChunked(left, right, "user_id", "ts", "ts",
+      graft.plans.AsOfDir.Nearest)
   }
 
   /** Earliest signup value at-or-after each event (forward as-of).
@@ -1808,34 +1805,8 @@ object Extensions extends QueryModule {
     */
   def asof2Forward(s: SparkSession, d: String): DataFrame = {
     val (left, right) = asofSides(s, d)
-    graft.ops.AsOfJoin.asofJoinForward(left, right, "user_id", "ts", "ts")
-  }
-
-  /** Backward as-of through the CUSTOM CATALYST PHYSICAL OPERATOR
-    * ([[graft.plans.AsOfJoinExec]]): identical semantics to
-    * [[asof1Backward]] (same DuckDB ASOF oracle), but the exchange and
-    * sort are declared via requiredChildDistribution/Ordering, so
-    * pre-partitioned or bucketed inputs join with zero added shuffle
-    * (AsOfExecSpec proves it on the plan).
-    */
-  def asof6ExecBackward(s: SparkSession, d: String): DataFrame = {
-    val (left, right) = asofSides(s, d)
-    graft.ops.AsOfJoin.asofJoinBackwardExec(left, right, "user_id", "ts", "ts")
-  }
-
-  /** Forward mirror of [[asof6ExecBackward]] (same oracle as asof2). */
-  def asof7ExecForward(s: SparkSession, d: String): DataFrame = {
-    val (left, right) = asofSides(s, d)
-    graft.ops.AsOfJoin.asofJoinForwardExec(left, right, "user_id", "ts", "ts")
-  }
-
-  /** Nearest mirror through the custom operator (same composed oracle
-    * as asof3) — the forward candidate rides the right iterator's
-    * lookahead, no left buffering.
-    */
-  def asof8ExecNearest(s: SparkSession, d: String): DataFrame = {
-    val (left, right) = asofSides(s, d)
-    graft.ops.AsOfJoin.asofJoinNearestExec(left, right, "user_id", "ts", "ts")
+    graft.ops.AsOfJoin.asofJoin(left, right, Seq("user_id"), "ts", "ts",
+      graft.plans.AsOfDir.Forward)
   }
 
   /** Tolerance-bounded backward as-of (pandas merge_asof semantics):
@@ -1846,22 +1817,8 @@ object Extensions extends QueryModule {
     */
   def asof9ExecTolerance(s: SparkSession, d: String): DataFrame = {
     val (left, right) = asofSides(s, d)
-    graft.ops.AsOfJoin.asofJoinBackwardExec(left, right, "user_id",
-      "ts", "ts", toleranceMicros = Some(86400L * 1000000L))
-  }
-
-  /** SKEW-PROOF as-of through the custom operator: the (key,
-    * time-bucket) spread of asof4 composed with the physical operator
-    * keyed on (user_id, bucket) — identical semantics to
-    * [[asof1Backward]] (same DuckDB oracle); a hot user's timeline
-    * hashes to many tasks, and the pinned-count (key, bucket)
-    * repartition is REUSED by the exec's declared distribution (zero
-    * added exchanges).
-    */
-  def asof11ExecChunked(s: SparkSession, d: String): DataFrame = {
-    val (left, right) = asofSides(s, d)
-    graft.ops.AsOfJoin.asofJoinChunkedExec(left, right, "user_id",
-      "ts", "ts", graft.plans.AsOfDir.Backward)
+    graft.ops.AsOfJoin.asofJoin(left, right, Seq("user_id"), "ts", "ts",
+      graft.plans.AsOfDir.Backward, toleranceMicros = Some(86400L * 1000000L))
   }
 
   /** COMPOSITE-KEY as-of through the custom operator (symbol+venue
@@ -1880,7 +1837,7 @@ object Extensions extends QueryModule {
         col("event_type"), col("ts"), col("value").as("ref_value"))
       .distinctOn(Seq(col("cohort"), col("event_type"), col("ts")),
         Seq(col("ref_value").desc))
-    graft.ops.AsOfJoin.asofJoinExecMulti(left, right,
+    graft.ops.AsOfJoin.asofJoin(left, right,
       Seq("cohort", "event_type"), "ts", "ts",
       graft.plans.AsOfDir.Backward)
   }
@@ -1903,7 +1860,8 @@ object Extensions extends QueryModule {
     */
   def asof3Nearest(s: SparkSession, d: String): DataFrame = {
     val (left, right) = asofSides(s, d)
-    graft.ops.AsOfJoin.asofJoinNearest(left, right, "user_id", "ts", "ts")
+    graft.ops.AsOfJoin.asofJoin(left, right, Seq("user_id"), "ts", "ts",
+      graft.plans.AsOfDir.Nearest)
   }
 
   // ---- graph clustering (the reference's portfolio build:
@@ -2233,12 +2191,8 @@ object Extensions extends QueryModule {
     "asof3_nearest" -> (asof3Nearest _),
     "asof4_backward_chunked" -> (asof4BackwardChunked _),
     "asof5_nearest_chunked" -> (asof5NearestChunked _),
-    "asof6_exec_backward" -> (asof6ExecBackward _),
-    "asof7_exec_forward" -> (asof7ExecForward _),
-    "asof8_exec_nearest" -> (asof8ExecNearest _),
     "asof9_exec_tolerance" -> (asof9ExecTolerance _),
     "asof10_exec_multikey" -> (asof10ExecMultikey _),
-    "asof11_exec_chunked" -> (asof11ExecChunked _),
     "asof12_auto" -> (asof12Auto _),
     "pipe1_corpus_clean" -> ((s, d) => pipe1CorpusClean(s, d)),
     "pipe2_training_prep" -> ((s, d) => pipe2TrainingPrep(s, d)),
@@ -3616,15 +3570,9 @@ object Extensions extends QueryModule {
     "asof1_backward" -> asofBackwardOracle,
     // identical semantics, skew-proof execution — same oracle
     "asof4_backward_chunked" -> asofBackwardOracle,
-    // identical semantics, custom Catalyst physical operator — same oracles
-    "asof6_exec_backward" -> asofBackwardOracle,
-    // skew-proof (key, bucket) spread THROUGH the exec — same oracle
-    "asof11_exec_chunked" -> asofBackwardOracle,
     // auto-dispatcher: both tiers row-identical — same oracle covers
     // whichever tier the key-cardinality probe picks at each scale
     "asof12_auto" -> asofBackwardOracle,
-    "asof7_exec_forward" -> asofForwardOracle,
-    "asof8_exec_nearest" -> asofNearestOracle,
     "asof9_exec_tolerance" ->
       """WITH r AS (
            SELECT user_id, ts, signup_value FROM (

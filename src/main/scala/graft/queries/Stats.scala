@@ -82,7 +82,8 @@ object Stats extends QueryModule {
     val right = dim.select(col("c_custkey").as("o_custkey"),
       col("valid_from").as("__ts"), col("c_acctbal"))
     graft.ops.AsOfJoin
-      .asofJoinBackwardExec(left, right, "o_custkey", "__ts", "__ts")
+      .asofJoin(left, right, Seq("o_custkey"), "__ts", "__ts",
+        graft.plans.AsOfDir.Backward)
       .filter(col("c_acctbal").isNotNull)
       .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"),
         round(col("c_acctbal").cast("decimal(18,4)"), 2)
@@ -136,13 +137,8 @@ object Stats extends QueryModule {
     * |obs|}) / (B+1), the standard add-one permutation p-value.
     */
   def perm1PermutationTest(s: SparkSession, d: String): DataFrame = {
-    // fan-out below the 132 replicate aggregates (guide §2): the
-    // map-side partials otherwise run single-core over the scan
-    val ev = graft.ops.Ops.fanOutForCompute(
-        Tables.events(s, d)
-          .filter(col("event_type").isin("purchase", "view"))
-          .select(col("event_id"), col("value"), col("event_type")),
-        col("event_id"))
+    val ev = Tables.events(s, d)
+      .filter(col("event_type").isin("purchase", "view"))
       .select(col("event_id"), col("value"),
         (col("event_type") === "purchase").cast("int").as("lab"))
     def meanDiff(lab: org.apache.spark.sql.Column) = (

@@ -26,9 +26,7 @@ import graft.plans.AsOfDir
   * exchange only on the (small) arriving batch — the persisted
   * right's `HashPartitioning` already satisfies the operator's
   * `ClusteredDistribution`, so the 100 TB side is never reshuffled
-  * (AsOfExecSpec/StreamingSpec assert the single-exchange plan). The
-  * mapPartitions scan variant cannot express this: its union+
-  * repartition re-shuffles BOTH sides every batch.
+  * (AsOfExecSpec/StreamingSpec assert the single-exchange plan).
   */
 object StreamingAsOf {
 
@@ -126,12 +124,6 @@ object StreamingAsOf {
       keyCol: String,
       leftTsCol: String,
       rightTsCol: String,
-      dir: AsOfDir): DataFrame = dir match {
-    case AsOfDir.Backward =>
-      AsOfJoin.asofJoinBackwardExec(batch, right, keyCol, leftTsCol, rightTsCol)
-    case AsOfDir.Forward =>
-      AsOfJoin.asofJoinForwardExec(batch, right, keyCol, leftTsCol, rightTsCol)
-    case AsOfDir.Nearest =>
-      AsOfJoin.asofJoinNearestExec(batch, right, keyCol, leftTsCol, rightTsCol)
-  }
+      dir: AsOfDir): DataFrame =
+    AsOfJoin.asofJoin(batch, right, Seq(keyCol), leftTsCol, rightTsCol, dir)
 }

@@ -7,22 +7,35 @@ import org.apache.spark.sql.functions._
 
 import graft.catalog.BucketedCatalog
 import graft.ops.AsOfJoin
+import graft.plans.AsOfDir
 
 /** The custom Catalyst as-of operator (graft.plans.AsOfJoinNode /
-  * AsOfJoinStrategy / AsOfJoinExec): semantics proven equal to the
-  * mapPartitions merge scan on fixtures, nulls, ties, and randomized
-  * data; the PHYSICAL value proven on the plan — exchanges appear
-  * only where the child layout doesn't already satisfy the declared
-  * distribution (repartitioned and bucketed inputs join with zero
-  * added shuffle).
+  * AsOfJoinStrategy / AsOfJoinExec) and its chunked and auto tiers:
+  * semantics proven equal to the plain-Scala [[AsOfReference]] on
+  * fixtures, nulls, ties, tolerance and randomized data; the PHYSICAL
+  * value proven on the plan — exchanges appear only where the child
+  * layout doesn't already satisfy the declared distribution
+  * (repartitioned and bucketed inputs join with zero added shuffle).
   */
 class AsOfExecSpec extends SparkSpec {
   import spark.implicits._
 
   private def ts(min: Int) = new Timestamp(1700000000000L + min * 60000L)
 
+  private def sorted(rs: Seq[Seq[Any]]): Seq[Seq[Any]] =
+    rs.sortBy(_.mkString("|"))
+
   private def rows(df: DataFrame): Seq[Seq[Any]] =
-    df.collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
+    sorted(df.collect().map(_.toSeq).toSeq)
+
+  /** The reference's rows, in [[rows]]' order. */
+  private def ref(left: DataFrame, right: DataFrame, keys: Seq[String],
+      dir: AsOfDir, tol: Option[Long] = None,
+      tiebreak: Seq[String] = Nil): Seq[Seq[Any]] =
+    sorted(AsOfReference.join(left, right, keys, "ts", "ts", dir, tiebreak,
+      tol))
+
+  private val dirs = Seq(AsOfDir.Backward, AsOfDir.Forward, AsOfDir.Nearest)
 
   test("backward exec: fixture semantics match the merge scan") {
     val left = Seq(
@@ -34,11 +47,11 @@ class AsOfExecSpec extends SparkSpec {
       ("u2", ts(2), 50.0), ("u3", ts(0), 9.0)
     ).toDF("user", "ts", "quote")
 
-    val exec = AsOfJoin.asofJoinBackwardExec(left, right, "user", "ts", "ts")
-    val scan = AsOfJoin.asofJoinBackward(left, right, "user", "ts", "ts")
+    val exec = AsOfJoin.asofJoin(left, right, Seq("user"), "ts", "ts",
+      AsOfDir.Backward)
     assert(exec.schema.fieldNames.toSeq ===
       Seq("event_id", "user", "ts", "quote"))
-    assert(rows(exec) === rows(scan))
+    assert(rows(exec) === ref(left, right, Seq("user"), AsOfDir.Backward))
     val out = exec.orderBy("event_id").collect()
     assert(out.map(r => (r.getLong(0), if (r.isNullAt(3)) null else r.getDouble(3)))
       .toSeq === Seq(
@@ -50,9 +63,9 @@ class AsOfExecSpec extends SparkSpec {
       .toDF("id", "user", "ts")
     val right = Seq(("u", ts(5), 1.0), ("u", ts(10), 2.0))
       .toDF("user", "ts", "v")
-    val exec = AsOfJoin.asofJoinForwardExec(left, right, "user", "ts", "ts")
-    val scan = AsOfJoin.asofJoinForward(left, right, "user", "ts", "ts")
-    assert(rows(exec) === rows(scan))
+    val exec = AsOfJoin.asofJoin(left, right, Seq("user"), "ts", "ts",
+      AsOfDir.Forward)
+    assert(rows(exec) === ref(left, right, Seq("user"), AsOfDir.Forward))
     val byId = exec.orderBy("id").collect()
       .map(r => if (r.isNullAt(3)) null else r.getDouble(3)).toSeq
     assert(byId === Seq(1.0, 1.0, null))
@@ -61,12 +74,15 @@ class AsOfExecSpec extends SparkSpec {
   test("tiebreak pins the winner at equal (key, ts) — both directions") {
     val left = Seq((1L, "u", ts(5))).toDF("id", "user", "ts")
     val right = Seq(("u", ts(5), 1.0), ("u", ts(5), 9.0)).toDF("user", "ts", "v")
-    val b = AsOfJoin.asofJoinBackwardExec(left, right, "user", "ts", "ts",
-      rightTiebreak = Seq("v"))
+    val b = AsOfJoin.asofJoin(left, right, Seq("user"), "ts", "ts",
+      AsOfDir.Backward, rightTiebreak = Seq("v"))
     assert(b.head().getDouble(3) === 9.0) // last in (ts, v) order
-    val f = AsOfJoin.asofJoinForwardExec(left, right, "user", "ts", "ts",
-      rightTiebreak = Seq("v"))
+    val f = AsOfJoin.asofJoin(left, right, Seq("user"), "ts", "ts",
+      AsOfDir.Forward, rightTiebreak = Seq("v"))
     assert(f.head().getDouble(3) === 1.0) // first in (ts, v) order
+    for ((df, d) <- Seq(b -> AsOfDir.Backward, f -> AsOfDir.Forward))
+      assert(rows(df) === ref(left, right, Seq("user"), d,
+        tiebreak = Seq("v")), s"dir=$d")
   }
 
   test("null keys and null timestamps never match") {
@@ -80,13 +96,11 @@ class AsOfExecSpec extends SparkSpec {
       (Option.empty[String], Option(ts(0)), 666.0), // null-key right: dropped
       (Option("u"), Option.empty[Timestamp], 667.0) // null-ts right: dropped
     ).toDF("user", "ts", "v")
-    for (dir <- Seq("b", "f")) {
-      val exec =
-        if (dir == "b") AsOfJoin.asofJoinBackwardExec(left, right, "user", "ts", "ts")
-        else AsOfJoin.asofJoinForwardExec(left, right, "user", "ts", "ts")
+    for ((dir, want) <- Seq(AsOfDir.Backward -> Seq(1.0, null, null),
+        AsOfDir.Forward -> Seq(null, null, null))) {
+      val exec = AsOfJoin.asofJoin(left, right, Seq("user"), "ts", "ts", dir)
       val got = exec.orderBy("id").collect()
         .map(r => if (r.isNullAt(3)) null else r.getDouble(3)).toSeq
-      val want = if (dir == "b") Seq(1.0, null, null) else Seq(null, null, null)
       assert(got === want, s"direction=$dir")
       assert(!got.contains(666.0) && !got.contains(667.0))
     }
@@ -106,12 +120,9 @@ class AsOfExecSpec extends SparkSpec {
     // dedup per (k, ts) so both impls see a deterministic winner
     val r1 = right.groupBy("k", "ts").agg(max("payload").as("payload"))
 
-    val eb = AsOfJoin.asofJoinBackwardExec(left, r1, "k", "ts", "ts")
-    val sb = AsOfJoin.asofJoinBackward(left, r1, "k", "ts", "ts")
-    assert(rows(eb) === rows(sb), "backward")
-    val ef = AsOfJoin.asofJoinForwardExec(left, r1, "k", "ts", "ts")
-    val sf2 = AsOfJoin.asofJoinForward(left, r1, "k", "ts", "ts")
-    assert(rows(ef) === rows(sf2), "forward")
+    for (d <- Seq(AsOfDir.Backward, AsOfDir.Forward))
+      assert(rows(AsOfJoin.asofJoin(left, r1, Seq("k"), "ts", "ts", d)) ===
+        ref(left, r1, Seq("k"), d), s"dir=$d")
   }
 
   test("nearest exec: closer side wins, tie -> backward, equal to scan") {
@@ -125,9 +136,9 @@ class AsOfExecSpec extends SparkSpec {
     val right = Seq(
       ("u", ts(0), 10.0), ("u", ts(5), 20.0), ("u", ts(15), 30.0)
     ).toDF("user", "ts", "v")
-    val exec = AsOfJoin.asofJoinNearestExec(left, right, "user", "ts", "ts")
-    val scan = AsOfJoin.asofJoinNearest(left, right, "user", "ts", "ts")
-    assert(rows(exec) === rows(scan))
+    val exec = AsOfJoin.asofJoin(left, right, Seq("user"), "ts", "ts",
+      AsOfDir.Nearest)
+    assert(rows(exec) === ref(left, right, Seq("user"), AsOfDir.Nearest))
     val got = exec.orderBy("id").collect()
       .map(r => if (r.isNullAt(3)) null else r.getDouble(3)).toSeq
     assert(got === Seq(20.0, 10.0, 20.0, 30.0, null))
@@ -136,7 +147,8 @@ class AsOfExecSpec extends SparkSpec {
   test("nearest exec: left before first right takes the forward side") {
     val left = Seq((1L, "u", ts(0))).toDF("id", "user", "ts")
     val right = Seq(("u", ts(7), 1.5)).toDF("user", "ts", "v")
-    val out = AsOfJoin.asofJoinNearestExec(left, right, "user", "ts", "ts")
+    val out = AsOfJoin.asofJoin(left, right, Seq("user"), "ts", "ts",
+      AsOfDir.Nearest)
     assert(out.head().getDouble(3) === 1.5)
   }
 
@@ -151,9 +163,9 @@ class AsOfExecSpec extends SparkSpec {
     val right = Seq.tabulate(300)(i => (mkKey(), mkTs(), i.toDouble))
       .toDF("k", "ts", "payload")
       .groupBy("k", "ts").agg(max("payload").as("payload"))
-    val e = AsOfJoin.asofJoinNearestExec(left, right, "k", "ts", "ts")
-    val s = AsOfJoin.asofJoinNearest(left, right, "k", "ts", "ts")
-    assert(rows(e) === rows(s))
+    val e = AsOfJoin.asofJoin(left, right, Seq("k"), "ts", "ts",
+      AsOfDir.Nearest)
+    assert(rows(e) === ref(left, right, Seq("k"), AsOfDir.Nearest))
   }
 
   test("tolerance bounds the match window (backward/forward/nearest)") {
@@ -164,20 +176,16 @@ class AsOfExecSpec extends SparkSpec {
       val r = df.head(); if (r.isNullAt(3)) null else r.getDouble(3)
     }
     val min = 60L * 1000000L
+    def within(d: AsOfDir, tol: Long) = payload(AsOfJoin.asofJoin(left,
+      right, Seq("user"), "ts", "ts", d, toleranceMicros = Some(tol)))
     // backward cand @0 (dist 10m), forward cand @12 (dist 2m)
-    assert(payload(AsOfJoin.asofJoinBackwardExec(left, right, "user",
-      "ts", "ts", toleranceMicros = Some(10 * min))) === 1.0)
-    assert(payload(AsOfJoin.asofJoinBackwardExec(left, right, "user",
-      "ts", "ts", toleranceMicros = Some(5 * min))) === null)
-    assert(payload(AsOfJoin.asofJoinForwardExec(left, right, "user",
-      "ts", "ts", toleranceMicros = Some(2 * min))) === 2.0)
-    assert(payload(AsOfJoin.asofJoinForwardExec(left, right, "user",
-      "ts", "ts", toleranceMicros = Some(1 * min))) === null)
+    assert(within(AsOfDir.Backward, 10 * min) === 1.0)
+    assert(within(AsOfDir.Backward, 5 * min) === null)
+    assert(within(AsOfDir.Forward, 2 * min) === 2.0)
+    assert(within(AsOfDir.Forward, 1 * min) === null)
     // nearest picks the nearer IN-TOLERANCE side: fwd in, back out
-    assert(payload(AsOfJoin.asofJoinNearestExec(left, right, "user",
-      "ts", "ts", toleranceMicros = Some(3 * min))) === 2.0)
-    assert(payload(AsOfJoin.asofJoinNearestExec(left, right, "user",
-      "ts", "ts", toleranceMicros = Some(1 * min))) === null)
+    assert(within(AsOfDir.Nearest, 3 * min) === 2.0)
+    assert(within(AsOfDir.Nearest, 1 * min) === null)
   }
 
   test("tolerance == post-filter of the unbounded match (randomized)") {
@@ -193,14 +201,20 @@ class AsOfExecSpec extends SparkSpec {
     // unbounded join with the right ts smuggled through the payload,
     // post-filtered by distance — must equal the in-operator tolerance
     val withTs = right.withColumn("rts", col("ts"))
-    val post = AsOfJoin.asofJoinBackwardExec(left, withTs, "k", "ts", "ts")
+    val post = AsOfJoin.asofJoin(left, withTs, Seq("k"), "ts", "ts",
+        AsOfDir.Backward)
       .withColumn("payload", when(
         col("ts").cast("long") - col("rts").cast("long") <= tol / 1000000L,
         col("payload")))
       .drop("rts")
-    val inOp = AsOfJoin.asofJoinBackwardExec(left, right, "k", "ts", "ts",
-      toleranceMicros = Some(tol))
+    val inOp = AsOfJoin.asofJoin(left, right, Seq("k"), "ts", "ts",
+      AsOfDir.Backward, toleranceMicros = Some(tol))
     assert(rows(inOp) === rows(post))
+    // and every direction equals the reference's candidate filter
+    for (d <- dirs)
+      assert(rows(AsOfJoin.asofJoin(left, right, Seq("k"), "ts", "ts", d,
+        toleranceMicros = Some(tol))) ===
+        ref(left, right, Seq("k"), d, Some(tol)), s"dir=$d")
   }
 
   test("composite keys: equality on every key column + one inequality") {
@@ -214,8 +228,8 @@ class AsOfExecSpec extends SparkSpec {
       ("AAPL", "ARCA", ts(2), 102.0),
       ("MSFT", "ARCA", ts(0), 201.0) // venue mismatch for id=3
     ).toDF("symbol", "venue", "ts", "px")
-    val out = AsOfJoin.asofJoinExecMulti(left, right,
-      Seq("symbol", "venue"), "ts", "ts", graft.plans.AsOfDir.Backward)
+    val out = AsOfJoin.asofJoin(left, right,
+      Seq("symbol", "venue"), "ts", "ts", AsOfDir.Backward)
       .orderBy("id").collect()
       .map(r => if (r.isNullAt(4)) null else r.getDouble(4)).toSeq
     assert(out === Seq(101.0, 102.0, null))
@@ -233,16 +247,10 @@ class AsOfExecSpec extends SparkSpec {
       ("s" + rnd.nextInt(3), "v" + rnd.nextInt(3), mkTs(), i.toDouble))
       .toDF("sym", "ven", "ts", "px")
       .groupBy("sym", "ven", "ts").agg(max("px").as("px"))
-    val multi = AsOfJoin.asofJoinExecMulti(left, right,
-      Seq("sym", "ven"), "ts", "ts", graft.plans.AsOfDir.Backward)
-      .select("id", "px")
-    // reference: fuse the two keys into one column, use the scan
-    val fused = AsOfJoin.asofJoinBackward(
-      left.withColumn("k", concat_ws("|", col("sym"), col("ven"))),
-      right.withColumn("k", concat_ws("|", col("sym"), col("ven")))
-        .drop("sym", "ven"),
-      "k", "ts", "ts").select("id", "px")
-    assert(rows(multi) === rows(fused))
+    // the reference matches on the (sym, ven) tuple
+    for (d <- dirs)
+      assert(rows(AsOfJoin.asofJoin(left, right, Seq("sym", "ven"), "ts",
+        "ts", d)) === ref(left, right, Seq("sym", "ven"), d), s"dir=$d")
   }
 
   test("chunked exec on 90%-one-key skew: row-identical to the " +
@@ -257,31 +265,13 @@ class AsOfExecSpec extends SparkSpec {
     val right = Seq.tabulate(400)(i => (key(), ts(rnd.nextInt(120)), i.toDouble))
       .toDF("k", "ts", "px")
       .groupBy("k", "ts").agg(max("px").as("px"))
-    for (d <- Seq(graft.plans.AsOfDir.Backward, graft.plans.AsOfDir.Forward,
-        graft.plans.AsOfDir.Nearest)) {
-      val chunkedExec = AsOfJoin.asofJoinChunkedExec(
-        left, right, "k", "ts", "ts", d, numBuckets = 8)
-      val plain = d match {
-        case graft.plans.AsOfDir.Backward =>
-          AsOfJoin.asofJoinBackwardExec(left, right, "k", "ts", "ts")
-        case graft.plans.AsOfDir.Forward =>
-          AsOfJoin.asofJoinForwardExec(left, right, "k", "ts", "ts")
-        case graft.plans.AsOfDir.Nearest =>
-          AsOfJoin.asofJoinNearestExec(left, right, "k", "ts", "ts")
-      }
-      assert(rows(chunkedExec) === rows(plain), s"dir=$d vs plain exec")
-      val chunkedScan = d match {
-        case graft.plans.AsOfDir.Backward =>
-          AsOfJoin.asofJoinBackwardChunked(left, right, "k", "ts", "ts",
-            numBuckets = 8)
-        case graft.plans.AsOfDir.Forward =>
-          AsOfJoin.asofJoinForwardChunked(left, right, "k", "ts", "ts",
-            numBuckets = 8)
-        case graft.plans.AsOfDir.Nearest =>
-          AsOfJoin.asofJoinNearestChunked(left, right, "k", "ts", "ts",
-            numBuckets = 8)
-      }
-      assert(rows(chunkedExec) === rows(chunkedScan), s"dir=$d vs scan")
+    for (d <- dirs) {
+      val want = ref(left, right, Seq("k"), d)
+      assert(rows(AsOfJoin.asofJoinChunked(
+        left, right, "k", "ts", "ts", d, numBuckets = 8)) === want,
+        s"dir=$d chunked")
+      assert(rows(AsOfJoin.asofJoin(left, right, Seq("k"), "ts", "ts", d)) ===
+        want, s"dir=$d plain")
     }
   }
 
@@ -290,19 +280,16 @@ class AsOfExecSpec extends SparkSpec {
       .toDF("id", "k", "ts")
     val right = Seq.tabulate(100)(i => ("hot", ts(i), i.toDouble))
       .toDF("k", "ts", "px")
-    val joined = AsOfJoin.asofJoinChunkedExec(
-      left, right, "k", "ts", "ts", graft.plans.AsOfDir.Backward,
-      numBuckets = 8)
+    val joined = AsOfJoin.asofJoinChunked(
+      left, right, "k", "ts", "ts", AsOfDir.Backward, numBuckets = 8)
     // one key, 8 buckets: the left side of the exec must occupy > 1
     // partition (the plain exec would put the whole key in ONE task)
     import org.apache.spark.sql.functions.spark_partition_id
     val parts = joined.withColumn("p", spark_partition_id())
       .select("p").distinct().count()
     assert(parts > 1, s"hot key not spread: $parts partition(s)")
-    // and the result is still the plain answer
-    assert(rows(joined.select("id", "px")) ===
-      rows(AsOfJoin.asofJoinBackward(left, right, "k", "ts", "ts")
-        .select("id", "px")))
+    // and the result is still the reference answer
+    assert(rows(joined) === ref(left, right, Seq("k"), AsOfDir.Backward))
   }
 
   test("tolerance composes with the chunked spread: chunked exec == " +
@@ -316,21 +303,15 @@ class AsOfExecSpec extends SparkSpec {
       .toDF("k", "ts", "px")
       .groupBy("k", "ts").agg(max("px").as("px"))
     val tol = Some(7L * 60L * 1000000L) // 7 minutes
-    for (d <- Seq(graft.plans.AsOfDir.Backward, graft.plans.AsOfDir.Forward,
-        graft.plans.AsOfDir.Nearest)) {
-      val chunked = AsOfJoin.asofJoinChunkedExec(left, right, "k", "ts",
+    for (d <- dirs) {
+      val chunked = AsOfJoin.asofJoinChunked(left, right, "k", "ts",
         "ts", d, numBuckets = 8, toleranceMicros = tol)
-      val plain = d match {
-        case graft.plans.AsOfDir.Backward => AsOfJoin.asofJoinBackwardExec(
-          left, right, "k", "ts", "ts", toleranceMicros = tol)
-        case graft.plans.AsOfDir.Forward => AsOfJoin.asofJoinForwardExec(
-          left, right, "k", "ts", "ts", toleranceMicros = tol)
-        case graft.plans.AsOfDir.Nearest => AsOfJoin.asofJoinNearestExec(
-          left, right, "k", "ts", "ts", toleranceMicros = tol)
-      }
+      val plain = AsOfJoin.asofJoin(left, right, Seq("k"), "ts", "ts", d,
+        toleranceMicros = tol)
       assert(rows(chunked) === rows(plain), s"dir=$d")
+      assert(rows(chunked) === ref(left, right, Seq("k"), d, tol), s"dir=$d")
       // the bound must bite on this fixture, or the test is vacuous
-      val unbounded = AsOfJoin.asofJoinChunkedExec(left, right, "k", "ts",
+      val unbounded = AsOfJoin.asofJoinChunked(left, right, "k", "ts",
         "ts", d, numBuckets = 8)
       assert(chunked.filter(col("px").isNull).count() >
         unbounded.filter(col("px").isNull).count(), s"dir=$d vacuous")
@@ -366,19 +347,14 @@ class AsOfExecSpec extends SparkSpec {
     assert(execKeyCounts(autoHot) === Seq(2),
       "hot key must dispatch to the chunked (key, bucket) exec")
     // the dispatch never changes the result — both regimes equal the
-    // plain exec's rows
+    // reference's rows
     for ((l, auto) <- Seq((uniform, autoUniform), (hot, autoHot)))
-      assert(rows(auto) === rows(AsOfJoin.asofJoinBackwardExec(
-        l, rightOf(l), "k", "ts", "ts")))
-    // the caller-supplied stat skips the probe and pins the tier
-    assert(execKeyCounts(AsOfJoin.asofJoinAuto(uniform, rightOf(uniform),
-      "k", "ts", "ts", hotKeyRowThreshold = thr,
-      knownMaxKeyRows = Some(1000L))) === Seq(2))
+      assert(rows(auto) === ref(l, rightOf(l), Seq("k"), AsOfDir.Backward))
     // NULL keys count as a straggler group: the plain exec's hash
     // distribution puts every null-key row in ONE partition, so a
     // null-heavy input must dispatch to the chunked spread — and the
-    // chunked tier's rows must still equal the plain exec's (null
-    // lefts keep null payload in both)
+    // chunked tier's rows must still equal the reference's (null
+    // lefts keep null payload)
     val nullHeavy = Seq.tabulate(300)(i =>
       (i.toLong, if (i % 5 == 0) "k" + (i % 7) else null, ts(i % 90)))
       .toDF("id", "k", "ts")
@@ -387,8 +363,8 @@ class AsOfExecSpec extends SparkSpec {
     val autoNull = AsOfJoin.asofJoinAuto(nullHeavy, rightOf(nullHeavy),
       "k", "ts", "ts", hotKeyRowThreshold = thr)
     assert(execKeyCounts(autoNull) === Seq(2))
-    assert(rows(autoNull) === rows(AsOfJoin.asofJoinBackwardExec(
-      nullHeavy, rightOf(nullHeavy), "k", "ts", "ts")))
+    assert(rows(autoNull) ===
+      ref(nullHeavy, rightOf(nullHeavy), Seq("k"), AsOfDir.Backward))
     // mismatched key types fail the PROBE with the join's own clear
     // message, not a union-schema error from inside maxKeyTimelineRows
     val intKeyed = uniform.withColumn("k", lit(7))
@@ -402,10 +378,10 @@ class AsOfExecSpec extends SparkSpec {
   test("self-join: same frame on both sides (fresh right exprIds)") {
     val ev = Seq((1L, "u", ts(1), 1.0), (2L, "u", ts(3), 2.0))
       .toDF("id", "user", "ts", "v")
-    val out = AsOfJoin.asofJoinBackwardExec(
+    val out = AsOfJoin.asofJoin(
       ev.select("id", "user", "ts"),
       ev.select(col("user"), col("ts"), col("v").as("prior_v")),
-      "user", "ts", "ts")
+      Seq("user"), "ts", "ts", AsOfDir.Backward)
     assert(out.orderBy("id").collect().map(_.getDouble(3)).toSeq ===
       Seq(1.0, 2.0))
   }
@@ -417,7 +393,8 @@ class AsOfExecSpec extends SparkSpec {
     val right = Tables.events(spark, sf)
       .filter(col("event_type") === "signup")
       .select(col("user_id"), col("ts"), col("value").as("sv"))
-    val joined = AsOfJoin.asofJoinBackwardExec(left, right, "user_id", "ts", "ts")
+    val joined = AsOfJoin.asofJoin(left, right, Seq("user_id"), "ts", "ts",
+      AsOfDir.Backward)
     joined.collect()
     // AQE's toString carries both the final and the initial plan;
     // count exchanges in the final section only
@@ -435,19 +412,15 @@ class AsOfExecSpec extends SparkSpec {
     val right = ev.filter(col("event_type") === "signup")
       .select(col("user_id"), col("ts"), col("value").as("sv"))
       .repartition(4, col("user_id"))
-    val joined = AsOfJoin.asofJoinBackwardExec(left, right, "user_id", "ts", "ts")
+    val joined = AsOfJoin.asofJoin(left, right, Seq("user_id"), "ts", "ts",
+      AsOfDir.Backward)
     joined.collect()
     val plan = joined.queryExecution.executedPlan.toString
     assert(plan.contains("AsOfJoin"), plan)
     assert(!plan.contains("ENSURE_REQUIREMENTS"),
       s"declared distribution should reuse the user's partitioning:\n$plan")
     // semantics unchanged by the layout
-    val base = AsOfJoin.asofJoinBackward(
-      ev.select(col("event_id"), col("ts"), col("user_id")),
-      ev.filter(col("event_type") === "signup")
-        .select(col("user_id"), col("ts"), col("value").as("sv")),
-      "user_id", "ts", "ts")
-    assert(rows(joined) === rows(base))
+    assert(rows(joined) === ref(left, right, Seq("user_id"), AsOfDir.Backward))
   }
 
   test("plan: bucketed tables as-of join with ZERO exchanges") {
@@ -461,16 +434,16 @@ class AsOfExecSpec extends SparkSpec {
     cat.publishBucketed("b_asof_r", right, Seq("user_id"), 4,
       Seq("user_id", "ts"))
     try {
-      val joined = AsOfJoin.asofJoinBackwardExec(
-        cat.table("b_asof_l"), cat.table("b_asof_r"), "user_id", "ts", "ts")
+      val joined = AsOfJoin.asofJoin(cat.table("b_asof_l"),
+        cat.table("b_asof_r"), Seq("user_id"), "ts", "ts", AsOfDir.Backward)
       joined.collect()
       val plan = joined.queryExecution.executedPlan.toString
       assert(plan.contains("AsOfJoin"), plan)
       assert(!plan.contains("Exchange hashpartitioning"),
         s"bucketed as-of should not shuffle either side:\n$plan")
-      // row-identical to the scan implementation on unbucketed reads
+      // row-identical to the reference on unbucketed reads
       assert(rows(joined) ===
-        rows(AsOfJoin.asofJoinBackward(left, right, "user_id", "ts", "ts")))
+        ref(left, right, Seq("user_id"), AsOfDir.Backward))
     } finally {
       cat.drop("b_asof_l"); cat.drop("b_asof_r")
     }
@@ -487,11 +460,8 @@ class AsOfExecSpec extends SparkSpec {
         .distinctOn(Seq(col("user_id"), col("ts")),
           Seq(col("signup_value").desc))
     }
-    assert(rows(AsOfJoin.asofJoinBackwardExec(left, right, "user_id", "ts", "ts"))
-      === rows(AsOfJoin.asofJoinBackward(left, right, "user_id", "ts", "ts")))
-    assert(rows(AsOfJoin.asofJoinForwardExec(left, right, "user_id", "ts", "ts"))
-      === rows(AsOfJoin.asofJoinForward(left, right, "user_id", "ts", "ts")))
-    assert(rows(AsOfJoin.asofJoinNearestExec(left, right, "user_id", "ts", "ts"))
-      === rows(AsOfJoin.asofJoinNearest(left, right, "user_id", "ts", "ts")))
+    for (d <- dirs)
+      assert(rows(AsOfJoin.asofJoin(left, right, Seq("user_id"), "ts", "ts", d))
+        === ref(left, right, Seq("user_id"), d), s"dir=$d")
   }
 }

@@ -2,14 +2,22 @@ package graft
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.DataFrame
+
 import graft.ops.AsOfJoin
+import graft.plans.AsOfDir
 
 class AsOfJoinSpec extends SparkSpec {
   import spark.implicits._
 
   private def ts(min: Int) = new Timestamp(1700000000000L + min * 60000L)
 
-  test("backward as-of: latest right at-or-before; null before first right") {
+  private def join(l: DataFrame, r: DataFrame, dir: AsOfDir,
+      tiebreak: Seq[String] = Nil): DataFrame =
+    AsOfJoin.asofJoin(l, r, Seq("user"), "ts", "ts", dir, tiebreak)
+
+  /** The first hand-computed fixture and its backward answer. */
+  private def backwardFixture = {
     val left = Seq(
       (1L, "u1", ts(0)),   // before any quote -> null
       (2L, "u1", ts(5)),   // quote@5 applies (equal ts matches)
@@ -23,23 +31,37 @@ class AsOfJoinSpec extends SparkSpec {
       ("u2", ts(2), 50.0),
       ("u3", ts(0), 9.0)   // key with no left rows
     ).toDF("user", "ts", "quote")
+    val want = Seq(
+      (1L, null), (2L, 100.0), (3L, 100.0), (4L, 200.0), (5L, 50.0))
+    (left, right, want)
+  }
 
-    val out = AsOfJoin.asofJoinBackward(left, right, "user", "ts", "ts")
+  test("backward as-of: latest right at-or-before; null before first right") {
+    val (left, right, want) = backwardFixture
+    val out = join(left, right, AsOfDir.Backward)
       .orderBy("event_id").collect()
     assert(out.map(r => (r.getLong(0), if (r.isNullAt(3)) null else r.getDouble(3)))
-      .toSeq === Seq(
-      (1L, null), (2L, 100.0), (3L, 100.0), (4L, 200.0), (5L, 50.0)))
+      .toSeq === want)
     // schema: left columns then payload
     assert(out.head.schema.fieldNames.toSeq ===
       Seq("event_id", "user", "ts", "quote"))
+  }
+
+  test("the plain-Scala reference reproduces the hand-computed backward fixture") {
+    // the specs compare the operator against AsOfReference; this pins
+    // the reference itself to an answer computed by hand
+    val (left, right, want) = backwardFixture
+    val got = AsOfReference.join(left, right, Seq("user"), "ts", "ts",
+      AsOfDir.Backward)
+    assert(got.map(r => (r(0), r(3))).sortBy(_._1.asInstanceOf[Long]) === want)
+    assert(got.forall(_.length == 4))
   }
 
   test("multiple right rows at the same ts: tiebreak pins the winner") {
     val left = Seq((1L, "u", ts(5))).toDF("id", "user", "ts")
     val right = Seq(("u", ts(5), 1.0), ("u", ts(5), 9.0))
       .toDF("user", "ts", "v")
-    val out = AsOfJoin.asofJoinBackward(left, right, "user", "ts", "ts",
-      rightTiebreak = Seq("v"))
+    val out = join(left, right, AsOfDir.Backward, tiebreak = Seq("v"))
     assert(out.head().getDouble(3) === 9.0) // last in (ts, v) order
   }
 
@@ -53,8 +75,7 @@ class AsOfJoinSpec extends SparkSpec {
       (Option("u"), ts(1), 7.0),
       (Option.empty[String], ts(1), 666.0) // null-keyed right: never carried
     ).toDF("user", "ts", "v")
-    val out = AsOfJoin.asofJoinBackward(left, right, "user", "ts", "ts")
-      .orderBy("id").collect()
+    val out = join(left, right, AsOfDir.Backward).orderBy("id").collect()
     assert(out.map(r => (r.getLong(0), if (r.isNullAt(3)) null else r.getDouble(3)))
       .toSeq === Seq((1L, 7.0), (2L, null), (3L, null)))
   }
@@ -62,7 +83,7 @@ class AsOfJoinSpec extends SparkSpec {
   test("empty right side leaves all payloads null") {
     val left = Seq((1L, "u", ts(1))).toDF("id", "user", "ts")
     val right = Seq.empty[(String, Timestamp, Double)].toDF("user", "ts", "v")
-    val out = AsOfJoin.asofJoinBackward(left, right, "user", "ts", "ts")
+    val out = join(left, right, AsOfDir.Backward)
     assert(out.count() === 1)
     assert(out.head().isNullAt(3))
   }
@@ -81,8 +102,7 @@ class AsOfJoinSpec extends SparkSpec {
       ("u2", ts(2), 50.0)
     ).toDF("user", "ts", "quote")
 
-    val out = AsOfJoin.asofJoinForward(left, right, "user", "ts", "ts")
-      .orderBy("event_id").collect()
+    val out = join(left, right, AsOfDir.Forward).orderBy("event_id").collect()
     assert(out.map(r => (r.getLong(0), if (r.isNullAt(3)) null else r.getDouble(3)))
       .toSeq === Seq(
       (1L, 100.0), (2L, 100.0), (3L, 200.0), (4L, null), (5L, 50.0)))
@@ -101,8 +121,7 @@ class AsOfJoinSpec extends SparkSpec {
       ("u1", ts(10), 200.0)
     ).toDF("user", "ts", "quote")
 
-    val out = AsOfJoin.asofJoinNearest(left, right, "user", "ts", "ts")
-      .orderBy("event_id").collect()
+    val out = join(left, right, AsOfDir.Nearest).orderBy("event_id").collect()
     assert(out.map(r => (r.getLong(0), if (r.isNullAt(3)) null else r.getDouble(3)))
       .toSeq === Seq(
       (1L, 100.0), (2L, 100.0), (3L, 200.0), (4L, 200.0), (5L, null)))
@@ -114,7 +133,7 @@ class AsOfJoinSpec extends SparkSpec {
     val left = Seq((1L, "u", ts(7))).toDF("id", "user", "ts") // 2 back, 2 fwd
     val right = Seq(("u", ts(5), 1.0), ("u", ts(9), 2.0))
       .toDF("user", "ts", "v")
-    val out = AsOfJoin.asofJoinNearest(left, right, "user", "ts", "ts")
+    val out = join(left, right, AsOfDir.Nearest)
     assert(out.head().getDouble(3) === 1.0)
   }
 
@@ -130,11 +149,11 @@ class AsOfJoinSpec extends SparkSpec {
     def payloads(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("id").collect()
         .map(r => (r.getLong(0), if (r.isNullAt(3)) null else r.getDouble(3))).toSeq
-    assert(payloads(AsOfJoin.asofJoinBackward(left, right, "user", "ts", "ts"))
+    assert(payloads(join(left, right, AsOfDir.Backward))
       === Seq((1L, 7.0), (2L, null)))
-    assert(payloads(AsOfJoin.asofJoinForward(left, right, "user", "ts", "ts"))
+    assert(payloads(join(left, right, AsOfDir.Forward))
       === Seq((1L, null), (2L, null))) // no right at-or-after ts(5)
-    assert(payloads(AsOfJoin.asofJoinNearest(left, right, "user", "ts", "ts"))
+    assert(payloads(join(left, right, AsOfDir.Nearest))
       === Seq((1L, 7.0), (2L, null)))
   }
 
@@ -142,12 +161,10 @@ class AsOfJoinSpec extends SparkSpec {
     val left = Seq((1L, "u", ts(3))).toDF("id", "user", "ts")
     val right = Seq(("u", ts(5), 1.0), ("u", ts(5), 9.0))
       .toDF("user", "ts", "v")
-    val fwd = AsOfJoin.asofJoinForward(left, right, "user", "ts", "ts",
-      rightTiebreak = Seq("v"))
+    val fwd = join(left, right, AsOfDir.Forward, tiebreak = Seq("v"))
     assert(fwd.head().getDouble(3) === 1.0) // first in (ts, v) order
     // and nearest's forward candidate agrees
-    val near = AsOfJoin.asofJoinNearest(left, right, "user", "ts", "ts",
-      rightTiebreak = Seq("v"))
+    val near = join(left, right, AsOfDir.Nearest, tiebreak = Seq("v"))
     assert(near.head().getDouble(3) === 1.0)
   }
 
@@ -164,14 +181,14 @@ class AsOfJoinSpec extends SparkSpec {
     val left = lefts.toDF("id", "user", "ts")
     val right = rights.toDF("user", "ts", "v")
 
-    val near = AsOfJoin.asofJoinNearest(left, right, "user", "ts", "ts")
+    val near = join(left, right, AsOfDir.Nearest)
       .collect().map(r => r.getLong(0) ->
         (if (r.isNullAt(3)) null else r.getDouble(3))).toMap
 
-    val back = AsOfJoin.asofJoinBackward(left, right, "user", "ts", "ts")
+    val back = join(left, right, AsOfDir.Backward)
       .collect().map(r => r.getLong(0) ->
         (if (r.isNullAt(3)) null else (r.getDouble(3), r.getTimestamp(2)))).toMap
-    val fwd = AsOfJoin.asofJoinForward(left, right, "user", "ts", "ts")
+    val fwd = join(left, right, AsOfDir.Forward)
       .collect().map(r => r.getLong(0) ->
         (if (r.isNullAt(3)) null else (r.getDouble(3), r.getTimestamp(2)))).toMap
 
@@ -213,19 +230,20 @@ class AsOfJoinSpec extends SparkSpec {
       df.select("id", "payload").collect()
         .map(r => (r.getLong(0), Option(r.getString(1)))).sortBy(_._1).toSeq
 
-    val plainB = AsOfJoin.asofJoinBackward(lefts, rights, "k", "lts", "rts")
-    val chunkB = AsOfJoin.asofJoinBackwardChunked(
-      lefts, rights, "k", "lts", "rts", numBuckets = 8)
+    def plain(d: AsOfDir) =
+      AsOfJoin.asofJoin(lefts, rights, Seq("k"), "lts", "rts", d)
+    def chunked(d: AsOfDir) = AsOfJoin.asofJoinChunked(
+      lefts, rights, "k", "lts", "rts", d, numBuckets = 8)
+
+    val plainB = plain(AsOfDir.Backward)
+    val chunkB = chunked(AsOfDir.Backward)
     assert(canon(chunkB) === canon(plainB))
     assert(canon(plainB).count(_._2.nonEmpty) > 2000) // matches actually happen
 
-    val plainF = AsOfJoin.asofJoinForward(lefts, rights, "k", "lts", "rts")
-    val chunkF = AsOfJoin.asofJoinForwardChunked(
-      lefts, rights, "k", "lts", "rts", numBuckets = 8)
-    assert(canon(chunkF) === canon(plainF))
+    assert(canon(chunked(AsOfDir.Forward)) === canon(plain(AsOfDir.Forward)))
 
     // the skew claim itself: with range bucketing, hot-key left rows
-    // execute in >1 scan task (the plain variant pins them to exactly 1)
+    // execute in >1 task (the plain operator pins them to exactly 1)
     def hotTasks(df: org.apache.spark.sql.DataFrame) = df
       .filter(col("k") === "H")
       .select(spark_partition_id().as("p")).distinct().count()
@@ -246,9 +264,10 @@ class AsOfJoinSpec extends SparkSpec {
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.select("id", "payload").collect()
         .map(r => (r.getLong(0), Option(r.getString(1)))).sortBy(_._1).toSeq
-    val plain = AsOfJoin.asofJoinNearest(lefts, rights, "k", "lts", "rts")
-    val chunk = AsOfJoin.asofJoinNearestChunked(
-      lefts, rights, "k", "lts", "rts", numBuckets = 8)
+    val plain = AsOfJoin.asofJoin(lefts, rights, Seq("k"), "lts", "rts",
+      AsOfDir.Nearest)
+    val chunk = AsOfJoin.asofJoinChunked(
+      lefts, rights, "k", "lts", "rts", AsOfDir.Nearest, numBuckets = 8)
     assert(canon(chunk) === canon(plain))
     // forward-only coverage: a left in the LAST bucket with its only
     // match far in the past, and a left in the FIRST bucket whose only
@@ -258,8 +277,8 @@ class AsOfJoinSpec extends SparkSpec {
       .toDF("id", "k", "lts")
     val r2 = Seq(("Z", new Timestamp(1700000400000000L / 1000L), "mid"))
       .toDF("k", "rts", "payload")
-    val got = canon(AsOfJoin.asofJoinNearestChunked(
-      l2, r2, "k", "lts", "rts", numBuckets = 8))
+    val got = canon(AsOfJoin.asofJoinChunked(
+      l2, r2, "k", "lts", "rts", AsOfDir.Nearest, numBuckets = 8))
     assert(got === Seq((1L, Some("mid")), (2L, Some("mid"))))
   }
 
@@ -270,8 +289,8 @@ class AsOfJoinSpec extends SparkSpec {
     // single right at the very start: every later bucket relies on carry
     val rights = Seq(("H", new Timestamp(1700000000000L), "first"))
       .toDF("k", "rts", "payload")
-    val out = AsOfJoin.asofJoinBackwardChunked(
-      lefts, rights, "k", "lts", "rts", numBuckets = 8)
+    val out = AsOfJoin.asofJoinChunked(
+      lefts, rights, "k", "lts", "rts", AsOfDir.Backward, numBuckets = 8)
     assert(out.count() === 100)
     assert(out.filter(org.apache.spark.sql.functions.col("payload") === "first")
       .count() === 100)

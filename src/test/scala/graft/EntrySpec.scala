@@ -20,9 +20,9 @@ class EntrySpec extends SparkSpec {
     // would shrink the merged map below the modules' summed sizes
     val modules = SparkEntry.modules
     assert(modules.map(_.queries.size).sum === SparkEntry.queries.size)
-    assert(SparkEntry.queries.size === 318)
+    assert(SparkEntry.queries.size === 314)
     assert(modules.map(_.oracles.size).sum === SparkEntry.oracleSql.size)
-    assert(SparkEntry.oracleSql.size === 307)
+    assert(SparkEntry.oracleSql.size === 303)
   }
 
   test("approx_count_distinct (rows-only query) is within 5% of exact") {

@@ -56,8 +56,8 @@ class StreamingAsOfSpec extends SparkSpec {
     def canon(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
     val streamed = canon(spark.read.parquet(s"$out/rows").drop("batch_id"))
-    val batch = canon(AsOfJoin.asofJoinBackwardExec(
-      left, right, "user_id", "ts", "ts"))
+    val batch = canon(AsOfJoin.asofJoin(
+      left, right, Seq("user_id"), "ts", "ts", AsOfDir.Backward))
     assert(streamed === batch)
     assert(streamed.nonEmpty)
     prepared.unpersist()
@@ -110,7 +110,8 @@ class StreamingAsOfSpec extends SparkSpec {
     def canon(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
     assert(canon(spark.read.parquet(s"$out/rows").drop("batch_id")) ===
-      canon(AsOfJoin.asofJoinNearest(left, right, "user_id", "ts", "ts")))
+      canon(AsOfJoin.asofJoin(left, right, Seq("user_id"), "ts", "ts",
+        AsOfDir.Nearest)))
     prepared.unpersist()
   }
 
@@ -152,8 +153,8 @@ class StreamingAsOfSpec extends SparkSpec {
       assert(ids.length === ids.distinct.length, "event duplicated")
       def canon(df: org.apache.spark.sql.DataFrame): Seq[String] =
         df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
-      assert(canon(rows) === canon(AsOfJoin.asofJoinBackwardExec(
-        left, right, "user_id", "ts", "ts")))
+      assert(canon(rows) === canon(AsOfJoin.asofJoin(
+        left, right, Seq("user_id"), "ts", "ts", AsOfDir.Backward)))
       assert(ids.nonEmpty)
     } finally prepared.unpersist()
   }
