@@ -1,7 +1,7 @@
 package graft.catalog
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -63,11 +63,7 @@ final class Warehouse(val root: Path) {
   }
 
   /** Current table -> relative data dir bindings. */
-  def manifest: Map[String, String] =
-    if (Files.exists(manifestPath))
-      JsonCodec.parseObject(new String(
-        Files.readAllBytes(manifestPath), StandardCharsets.UTF_8)).toMap
-    else Map.empty
+  def manifest: Map[String, String] = JsonCodec.read(manifestPath).toMap
 
   def tableNames: Seq[String] = manifest.keys.toSeq.sorted
 
@@ -143,8 +139,7 @@ final class Warehouse(val root: Path) {
     val p = snapshotsDir.resolve(s"manifest-$snapshot.json")
     if (!Files.exists(p)) throw new NoSuchElementException(
       s"no such snapshot: $snapshot (have: ${snapshots.mkString(",")})")
-    JsonCodec.parseObject(
-      new String(Files.readAllBytes(p), StandardCharsets.UTF_8)).toMap
+    JsonCodec.read(p).toMap
   }
 
   /** Time-travel read: the table as of `snapshot`. Valid as long as
@@ -191,10 +186,7 @@ final class Warehouse(val root: Path) {
     * the metadata binding simply outlives every generation.
     */
   def tableProperties(name: String): Map[String, String] =
-    if (Files.exists(propsPath(name)))
-      JsonCodec.parseObject(new String(
-        Files.readAllBytes(propsPath(name)), StandardCharsets.UTF_8)).toMap
-    else Map.empty
+    JsonCodec.read(propsPath(name)).toMap
 
   /** Merge `props` into the table's properties (same-key overwrite),
     * atomically (tmp + ATOMIC_MOVE, like the manifest flip).
@@ -206,16 +198,9 @@ final class Warehouse(val root: Path) {
   def unsetTableProperties(name: String, keys: Seq[String]): Unit =
     writeProps(name, tableProperties(name) -- keys)
 
-  private def writeProps(name: String, all: Map[String, String]): Unit = {
-    Files.createDirectories(propertiesDir)
-    val sorted = collection.mutable.LinkedHashMap.empty[String, String]
-    all.toSeq.sortBy(_._1).foreach { case (k, v) => sorted.update(k, v) }
-    val tmp = propertiesDir.resolve(s"$name.json.tmp")
-    Files.write(tmp,
-      JsonCodec.renderObject(sorted).getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, propsPath(name), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
+  private def writeProps(name: String, all: Map[String, String]): Unit =
+    JsonCodec.write(propsPath(name),
+      collection.immutable.ListMap.from(all.toSeq.sortBy(_._1)))
 
   /** GRANT-style sugar over the property store (`grant:` keyspace,
     * like the StateStore's `etag:`/`last_modified:` convention):
@@ -378,11 +363,8 @@ final class Warehouse(val root: Path) {
         val next = collection.mutable.LinkedHashMap.empty[String, String]
         live.toSeq.sortBy(_._1).foreach { case (k, v) => next.update(k, v) }
         written.foreach { case (k, v) => next.update(k, v) }
+        JsonCodec.write(manifestPath, next)
         nextJson = JsonCodec.renderObject(next)
-        val tmp = manifestPath.resolveSibling("manifest.json.tmp")
-        Files.write(tmp, nextJson.getBytes(StandardCharsets.UTF_8))
-        Files.move(tmp, manifestPath, StandardCopyOption.ATOMIC_MOVE,
-          StandardCopyOption.REPLACE_EXISTING)
         flipped = true
       }
     } catch {

@@ -42,8 +42,4 @@ object Scheduling {
   val EvenDays = "0 1 2-30/2 * *"
   val OddDays = "0 1 1-29/2 * *"
   val Yearly = "0 0 1 1 *"
-
-  /** Dataset -> cron string (shape of `scheduling.py:63-100`). */
-  def scheduleFor(registry: Seq[DatasetSpec]): Map[String, String] =
-    registry.map(d => d.name -> d.schedule).toMap
 }

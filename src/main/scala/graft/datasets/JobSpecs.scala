@@ -19,27 +19,35 @@ object JobSpecs {
   /** `k8s_build_jobs.py:38-39`. */
   def slugify(name: String): String = name.replace("_", "-")
 
-  /** Env vars forwarded into each job container, resolved at render
+  /** One CronJob spec for one dataset. Settings resolve at render
     * time like the reference's `get_env` (`k8s_build_jobs.py:33-34`,
-    * CONTAINER_ENV_VARS) — absent vars render as empty values.
+    * CONTAINER_ENV_VARS), each into the form its reader takes:
+    * `SPARK_DRIVER_MEM` into spark-submit's `--driver-memory`,
+    * `GRAFT_WAREHOUSE_DIR` and `GRAFT_SF_DIR` into LoadDataset's
+    * `--warehouse` and `--sf-dir`, and `SPARK_GRAFT_CPUS` into the
+    * container env that [[graft.Session.cpus]] reads. An unset
+    * setting is left out, so its reader keeps its default.
     */
-  val ContainerEnvVars: Seq[String] = Seq(
-    "GRAFT_WAREHOUSE_DIR",
-    "GRAFT_SF_DIR",
-    "SPARK_GRAFT_CPUS",
-    "SPARK_DRIVER_MEM",
-    "GRAFT_WEBHOOK_URL")
-
-  /** One CronJob spec for one dataset. */
   def render(
       ds: DatasetSpec,
       image: String,
       env: String => Option[String]): String = {
     val name = s"load-dataset-${slugify(ds.name)}"
-    val envLines = ContainerEnvVars.map { v =>
-      s"""            - name: $v
-         |              value: "${escape(env(v).getOrElse(""))}"""".stripMargin
-    }.mkString("\n")
+    def arg(flag: String, v: String) = env(v).toSeq.flatMap(Seq(flag, _))
+    val command = Seq("spark-submit") ++
+      arg("--driver-memory", "SPARK_DRIVER_MEM") ++
+      Seq("--class", "graft.LoadDataset", "local:///opt/graft/graft.jar",
+        ds.name) ++
+      arg("--warehouse", "GRAFT_WAREHOUSE_DIR") ++
+      arg("--sf-dir", "GRAFT_SF_DIR")
+    val commandLines = command
+      .map(a => s"""            - "${escape(a)}"""").mkString("\n")
+    val envLines = env("SPARK_GRAFT_CPUS").map { v =>
+      s"""
+         |            env:
+         |            - name: SPARK_GRAFT_CPUS
+         |              value: "${escape(v)}"""".stripMargin
+    }.getOrElse("")
     s"""apiVersion: batch/v1
        |kind: CronJob
        |metadata:
@@ -57,13 +65,7 @@ object JobSpecs {
        |          - name: $name
        |            image: $image
        |            command:
-       |            - spark-submit
-       |            - --class
-       |            - graft.LoadDataset
-       |            - local:///opt/graft/graft.jar
-       |            - ${ds.name}
-       |            env:
-       |$envLines
+       |$commandLines$envLines
        |""".stripMargin
   }
 

@@ -3,8 +3,8 @@ package graft.export
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Corpus export: write a cleaned dataset as sharded JSONL or parquet
-  * with controlled shard sizes — the delivery end of a training-data
+/** Corpus export: write a cleaned dataset as sharded JSONL with
+  * controlled shard sizes — the delivery end of a training-data
   * pipeline (downstream loaders want many same-sized shards, not one
   * file per reducer of whatever size the last shuffle produced).
   *
@@ -30,20 +30,6 @@ object CorpusExport {
       .option("compression", compression)
     (if (partitionByCols.nonEmpty) writer.partitionBy(partitionByCols: _*)
      else writer).json(path)
-  }
-
-  def writeParquetShards(
-      df: DataFrame,
-      path: String,
-      maxRecordsPerShard: Long,
-      partitionByCols: Seq[String] = Nil,
-      numTasks: Option[Int] = None): Unit = {
-    val shaped = numTasks.map(df.repartition).getOrElse(df)
-    val writer = shaped.write
-      .mode("overwrite")
-      .option("maxRecordsPerFile", maxRecordsPerShard)
-    (if (partitionByCols.nonEmpty) writer.partitionBy(partitionByCols: _*)
-     else writer).parquet(path)
   }
 
   /** Deterministic weighted interleave of several corpora (e.g. 3

@@ -41,12 +41,9 @@ object GraftExtensions {
     "array_match_frac" -> 2, "sorted_intersect_count" -> 2,
     "normalize_unicode" -> 2,
     "bounded_topn" -> 2, "freq_items" -> 2, "split_frames" -> 3,
-    "kll_sketch_agg" -> 2, "kll_merge_agg" -> 2, "kll_quantiles" -> 2,
     "bloom_agg" -> 3, "might_contain" -> 2,
     "zorder_key" -> -1, // -1 = variadic; the expression checks 2..8
-    "zorder_i64" -> 2,
-    "theta_sketch_agg" -> 2, "theta_union_agg" -> 2,
-    "theta_intersect" -> 2, "theta_a_not_b" -> 2, "theta_estimate" -> 1)
+    "zorder_i64" -> 2)
 
   private[functions] def guarded(
       name: String,
@@ -126,23 +123,6 @@ object GraftExtensions {
           case other => throw new IllegalArgumentException(
             s"freq_items: k must be an integer literal, got $other")
         }),
-    "kll_sketch_agg" ->
-      ("kll_sketch_agg(dbl, k) - mergeable KLL quantile sketch bytes (aggregate)",
-        (exprs: Seq[Expression]) => exprs(1) match {
-          case Literal(n: Int, _) => KllSketchAgg(exprs(0), n)
-          case other => throw new IllegalArgumentException(
-            s"kll_sketch_agg: k must be an integer literal, got $other")
-        }),
-    "kll_merge_agg" ->
-      ("kll_merge_agg(sketch, k) - union of KLL sketch bytes (aggregate)",
-        (exprs: Seq[Expression]) => exprs(1) match {
-          case Literal(n: Int, _) => KllMergeAgg(exprs(0), n)
-          case other => throw new IllegalArgumentException(
-            s"kll_merge_agg: k must be an integer literal, got $other")
-        }),
-    "kll_quantiles" ->
-      ("kll_quantiles(sketch, ranks) - quantile values at the given ranks",
-        (exprs: Seq[Expression]) => KllQuantiles(exprs(0), exprs(1))),
     "bloom_agg" ->
       ("bloom_agg(key, numBits, numHashes) - mergeable bloom-filter blob over integral keys (aggregate)",
         (exprs: Seq[Expression]) => (exprs(1), exprs(2)) match {
@@ -160,29 +140,6 @@ object GraftExtensions {
     "zorder_i64" ->
       ("zorder_i64(x, y) - two-column Morton layout key as an order-equivalent BIGINT",
         (exprs: Seq[Expression]) => ZOrderKey64(exprs(0), exprs(1))),
-    "theta_sketch_agg" ->
-      ("theta_sketch_agg(key, lgK) - mergeable theta sketch blob (aggregate)",
-        (exprs: Seq[Expression]) => exprs(1) match {
-          case Literal(k: Int, _) => ThetaSketchAgg(exprs(0), k)
-          case other => throw new IllegalArgumentException(
-            s"theta_sketch_agg: lgK must be an integer literal, got $other")
-        }),
-    "theta_union_agg" ->
-      ("theta_union_agg(sketch, lgK) - union of theta sketch blobs (aggregate)",
-        (exprs: Seq[Expression]) => exprs(1) match {
-          case Literal(k: Int, _) => ThetaUnionAgg(exprs(0), k)
-          case other => throw new IllegalArgumentException(
-            s"theta_union_agg: lgK must be an integer literal, got $other")
-        }),
-    "theta_intersect" ->
-      ("theta_intersect(a, b) - theta sketch of the set intersection",
-        (exprs: Seq[Expression]) => ThetaIntersect(exprs(0), exprs(1))),
-    "theta_a_not_b" ->
-      ("theta_a_not_b(a, b) - theta sketch of the set difference A \\ B",
-        (exprs: Seq[Expression]) => ThetaANotB(exprs(0), exprs(1))),
-    "theta_estimate" ->
-      ("theta_estimate(sketch) - estimated distinct count of a theta sketch",
-        (exprs: Seq[Expression]) => ThetaEstimate(exprs(0))),
     "split_frames" ->
       ("split_frames(payload, frameBytes, everyNth) - sampled (frame_idx, frame) rows (generator)",
         (exprs: Seq[Expression]) => (exprs(1), exprs(2)) match {

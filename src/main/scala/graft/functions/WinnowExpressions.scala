@@ -29,7 +29,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * order == UTF8 binary order == DuckDB byte order — the selection is
   * cross-engine exact (md5 is the one hash both engines share).
   *
-  * Positions count UTF-16 code units (the EditDistance convention):
+  * Positions count UTF-16 code units:
   * exact for the BMP; astral-plane characters would shift gram
   * boundaries by one vs a code-point engine. The DuckDB dual agrees
   * on BMP text, which is the entire gate corpus.

@@ -25,7 +25,4 @@ object Fetcher {
     } finally in.close()
     dest
   }
-
-  def downloadAll(urls: Seq[String], destDir: Path): Seq[Path] =
-    urls.map(download(_, destDir))
 }

@@ -102,9 +102,6 @@ object Ops {
   /** `min(x) FILTER (WHERE cond)` — reference `wow_2021…sql:116-117`. */
   def minWhere(cond: Column, c: Column): Column = min(when(cond, c))
 
-  /** `max(x) FILTER (WHERE cond)`. */
-  def maxWhere(cond: Column, c: Column): Column = max(when(cond, c))
-
   /** `sum(x) FILTER (WHERE cond)`. */
   def sumWhere(cond: Column, c: Column): Column = sum(when(cond, c))
 

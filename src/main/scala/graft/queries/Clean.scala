@@ -114,8 +114,7 @@ object Clean extends QueryModule {
     * the self-join would otherwise re-run the whole winnow +
     * distinct + window chain per side: the r17 plan dump showed the
     * broadcast side as a full recompute, ReuseExchange never fires
-    * across a BroadcastExchange/shuffle pair); at warehouse scale the
-    * same boundary goes through the parquet staging seam.
+    * across a BroadcastExchange/shuffle pair).
     */
   def win2WinnowPairs(s: SparkSession, d: String,
       dfCap: Int = 16, minShared: Int = 5): DataFrame =
@@ -1025,26 +1024,16 @@ object Clean extends QueryModule {
     * piped into the SAME rho chain the standalone rho1 oracle uses),
     * so composition cannot drift from the pieces.
     *
-    * Staging: the cleaned corpus is referenced by four downstream
-    * scans (unigram stream, bigram stream, vocabulary, join-back), so
-    * the phase boundary materializes once — [[Staging.Memory]] at
-    * gate scale, [[Staging.Parquet]] at 100 TB (the pipe1/pipe2
-    * contract; memory==parquet rows asserted in CleanSpec).
+    * Phase boundary: the cleaned corpus is referenced by four
+    * downstream scans (unigram stream, bigram stream, vocabulary,
+    * join-back), so it is persisted once (the pipe1/pipe2 contract).
     */
-  def pipe4CleanSelect(s: SparkSession, d: String): DataFrame =
-    pipe4CleanSelect(s, d, Staging.Memory)
-
-  def pipe4CleanSelect(
-      s: SparkSession, d: String, staging: Staging): DataFrame =
-    pipe4CleanSelectOn(Tables.documents(s, d), staging)
-
-  private[graft] def pipe4CleanSelectOn(
-      docs: DataFrame, staging: Staging): DataFrame = {
-    val cleaned = staging.stage(
-      par1ChunkDedupOn(docs).filter(col("n_kept") > 0)
-        .select(col("doc_id"), col("cleaned").as("text"))
-        .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id")),
-      "pipe4_cleaned")
+  def pipe4CleanSelect(s: SparkSession, d: String): DataFrame = {
+    val docs = Tables.documents(s, d)
+    val cleaned = par1ChunkDedupOn(docs).filter(col("n_kept") > 0)
+      .select(col("doc_id"), col("cleaned").as("text"))
+      .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id"))
+      .persist()
     Select.rhoExcessOn(cleaned)
   }
 

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.functions.EditDistance
 import graft.ops.GlobalRank
 
 /** Corpus-curation batch: sorted-neighborhood dedup (the classic
@@ -21,9 +20,9 @@ object Curate extends QueryModule {
 
   /** Sorted-neighborhood pairs over `docs`: normalize, sort the corpus
     * by a `bkLen`-char blocking prefix (doc_id tiebreak), and compare
-    * each doc against its next `w` neighbors in sorted order with the
-    * native banded [[EditDistance.lev_within]] (exact when <= k, k+1
-    * the moment the band exceeds k — O(k·min) per pair).
+    * each doc against its next `w` neighbors in sorted order with
+    * Spark's banded `levenshtein(a, b, k)` (exact when <= k, −1 above
+    * — O(k·min) per pair).
     *
     * Scale shape: the global sort rank comes from
     * [[GlobalRank.prefixScan]] (range-repartition + per-partition
@@ -52,8 +51,8 @@ object Curate extends QueryModule {
       .join(ranked.select(col("doc_id").as("id_b"), col("s").as("sb"),
         col("r").as("tr")), Seq("tr"))
       .select(col("id_a"), col("id_b"),
-        EditDistance.lev_within(col("sa"), col("sb"), k).as("lev"))
-      .filter(col("lev") <= k)
+        levenshtein(col("sa"), col("sb"), k).as("lev"))
+      .filter(col("lev") >= 0)
   }
 
   /** snm1: sorted-neighborhood near-dup pairs on the documents table
@@ -136,8 +135,7 @@ object Curate extends QueryModule {
     * row — the map-side-combined aggregate is the entire shuffle; no
     * per-row state, no driver collect of anything row-scaling. The
     * caller stages the feature frame once (here: eager
-    * localCheckpoint; at warehouse scale the parquet staging seam,
-    * `queries/Staging.scala`).
+    * localCheckpoint).
     */
   def logisticTrain(feat: DataFrame, rounds: Int = 3): DataFrame = {
     val spark = feat.sparkSession
@@ -401,31 +399,30 @@ object Curate extends QueryModule {
     * exact integer ceiling).
     *
     * Scale shape: one map-only blocklist scan (zero Exchange), the
-    * survivors staged once behind the [[Staging]] seam (the excision
-    * chain references them three times), dd27's two linear token
+    * survivors persisted once (the excision chain references them
+    * three times), dd27's two linear token
     * shuffles, then two bounded per-language aggregates joined on the
     * 5-row language domain. Nothing pairwise, nothing windowed.
     */
   def pipe7BlocklistCurate(s: SparkSession, d: String): DataFrame =
-    pipe7BlocklistCurateOn(Tables.documents(s, d), Staging.Memory)
+    pipe7BlocklistCurateOn(Tables.documents(s, d))
 
-  private[graft] def pipe7BlocklistCurateOn(
-      docs: DataFrame, staging: Staging): DataFrame = {
-    // staged BEFORE it forks: inStats and the kept filter both consume
-    // the blocked flag, and the AC scan is the cost this stage exists
-    // to pay once — unstaged, each branch would re-scan the corpus
-    val flagged = staging.stage(
-      docs.select(col("doc_id"), col("lang"), col("text"),
+  private[graft] def pipe7BlocklistCurateOn(docs: DataFrame): DataFrame = {
+    // persisted BEFORE it forks: inStats and the kept filter both
+    // consume the blocked flag, and the AC scan is the cost this stage
+    // exists to pay once — unpersisted, each branch would re-scan the
+    // corpus
+    val flagged = docs.select(col("doc_id"), col("lang"), col("text"),
         (size(graft.functions.PhraseMatch.phrase_matches(col("text"),
-          BlocklistPhrases)) > 0).as("blocked")),
-      "pipe7_flagged")
+          BlocklistPhrases)) > 0).as("blocked"))
+      .persist()
     val inStats = flagged.groupBy(col("lang")).agg(
       count(lit(1)).as("n_docs_in"),
       count(when(col("blocked"), 1)).as("n_blocked"))
-    val kept = staging.stage(flagged.filter(!col("blocked"))
+    val kept = flagged.filter(!col("blocked"))
       .select(col("doc_id"), col("lang"), col("text"),
-        size(split(lower(trim(col("text"))), "\\s+")).as("nw")),
-      "pipe7_kept")
+        size(split(lower(trim(col("text"))), "\\s+")).as("nw"))
+      .persist()
     val cleaned = graft.dedup.Dedup
       .spanExciseClean(kept, "doc_id", "text", k = 8)
       .withColumnRenamed("id", "doc_id")

@@ -148,10 +148,9 @@ object Diverge extends QueryModule {
     * distance 3, plus the nearest distance. The quadratic metric runs
     * on the distinct-name domain (64 names — bounded by the catalog,
     * not the row count) and broadcasts back over one fact scan. The
-    * distance is the native banded `lev_within` expression
-    * ([[graft.functions.EditDistance]]): exact when ≤ k, abandons a
-    * pair the moment the band exceeds k — O(k·min) per pair vs the
-    * builtin's full O(n·m) DP, the difference that matters when the
+    * distance is Spark's thresholded `levenshtein(a, b, k)`: exact when
+    * ≤ k, −1 above, and banded, so a far pair costs O(k·min) rather
+    * than the full O(n·m) DP — the difference that matters when the
     * blocked candidate set is billions of mostly-far pairs. DuckDB's
     * plain `levenshtein` stays a valid oracle (values ≤ k agree).
     */
@@ -160,9 +159,8 @@ object Diverge extends QueryModule {
     val pairs = names.as("a").crossJoin(broadcast(names.as("b")))
       .filter(col("a.p_name") =!= col("b.p_name"))
       .select(col("a.p_name").as("p_name"),
-        graft.functions.EditDistance.lev_within(
-          col("a.p_name"), col("b.p_name"), 3).as("dist"))
-      .filter(col("dist") <= 3)
+        levenshtein(col("a.p_name"), col("b.p_name"), 3).as("dist"))
+      .filter(col("dist") >= 0)
     val near = pairs.groupBy(col("p_name"))
       .agg(count(lit(1)).as("n_near"), min(col("dist")).as("min_dist"))
     Tables.part(s, d).select(col("p_partkey"), col("p_name"))

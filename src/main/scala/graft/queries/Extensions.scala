@@ -1159,7 +1159,7 @@ object Extensions extends QueryModule {
     // checkpoint the 20 B/row band frame: four join branches reference
     // it (slim ×2, verify ×2) and each is a distinct exchange — without
     // the cut, every image pays the PNG encode + ImageIO decode once
-    // PER BRANCH (at warehouse scale this is the parquet staging seam)
+    // PER BRANCH
     val bands = Multimodal.imageDhashBands(s, media.toDF()).toDF()
       .localCheckpoint(true)
     bandedHammingPairs(bands, maxHamming = 10)
@@ -1603,30 +1603,15 @@ object Extensions extends QueryModule {
     * same chain remains available via [[Dedup.minhashPairs]]; its
     * hash-specific pair set is covered by DedupSpec recall gates.)
     */
-  def pipe1CorpusClean(s: SparkSession, d: String): DataFrame =
-    pipe1CorpusClean(s, d, Staging.Memory)
-
-  /** The staged form: `staging` picks how phase boundaries
-    * materialize — [[Staging.Memory]] (gate scale, the default above)
-    * or [[Staging.Parquet]] (the 100 TB path; same rows either way,
-    * asserted in ExportSpec).
-    */
-  def pipe1CorpusClean(
-      s: SparkSession, d: String, staging: Staging): DataFrame =
-    pipe1CorpusCleanOn(s, Tables.documents(s, d), staging)
-
-  private[graft] def pipe1CorpusCleanOn(
-      s: SparkSession, docs: DataFrame, staging: Staging): DataFrame = {
-    val quality = docs.filter(TextFunctions.qualityScore(col("text")) > 0.3)
-    // stage materialization: the downstream near-dup pass references
-    // this frame several times (gram explode + per-side set fetches +
-    // the final anti-join); staging it turns the recomputes of the
-    // filter+semi-join subtree into 1 — see [[Staging]] for the
-    // memory-vs-parquet scale tradeoff.
-    val exactKept = staging.stage(
-      quality.join(
-        Dedup.exactKeepIds(quality, "doc_id", "text"), Seq("doc_id"), "left_semi"),
-      "pipe1_exact_kept")
+  def pipe1CorpusClean(s: SparkSession, d: String): DataFrame = {
+    val quality = Tables.documents(s, d).filter(TextFunctions.qualityScore(col("text")) > 0.3)
+    // phase boundary: the downstream near-dup pass references this
+    // frame several times (gram explode + per-side set fetches + the
+    // final anti-join); persisting it turns the recomputes of the
+    // filter+semi-join subtree into 1
+    val exactKept = quality.join(
+        Dedup.exactKeepIds(quality, "doc_id", "text"), Seq("doc_id"), "left_semi")
+      .persist()
     val nearPairs = Dedup.exactJaccardPairs(exactKept, "doc_id", "text",
       threshold = 0.9)
     Dedup.keepAfterPairs(exactKept, "doc_id", nearPairs)
@@ -1648,18 +1633,13 @@ object Extensions extends QueryModule {
     * (chunk_id < 2^20 by the corpus length bound).
     */
   def pipe2TrainingPrep(s: SparkSession, d: String): DataFrame =
-    pipe2TrainingPrep(s, d, Staging.Memory)
-
-  /** The staged form — see [[pipe1CorpusClean]]. */
-  def pipe2TrainingPrep(
-      s: SparkSession, d: String, staging: Staging): DataFrame =
-    pipe2TrainingPrepOn(s, Tables.documents(s, d), staging)
+    pipe2TrainingPrepOn(s, Tables.documents(s, d))
 
   /** The frame-parameterized core: the pipeline over any documents
-    * frame (the dir overloads above are the query surface).
+    * frame (the dir form above is the query surface).
     */
   private[graft] def pipe2TrainingPrepOn(
-      s: SparkSession, docsIn: DataFrame, staging: Staging): DataFrame = {
+      s: SparkSession, docsIn: DataFrame): DataFrame = {
     // pipeline-top fan-out, pipe1's rationale: the staged `clean`
     // frame pins its layout for the exact near-dup stage (~90% of this
     // pipeline's wall at the 10x replica)
@@ -1668,13 +1648,12 @@ object Extensions extends QueryModule {
     val eval_ = docs.filter(pmod(col("doc_id"), lit(97)) === 0)
     val scores = Dedup.contaminationScores(corpus, eval_, "doc_id", "text",
       k = 3)
-    // stage materialization, same rationale as pipe1: the near-dup
-    // join references this frame several times
-    val clean = staging.stage(
-      corpus.join(
+    // phase boundary, same rationale as pipe1: the near-dup join
+    // references this frame several times
+    val clean = corpus.join(
         scores.filter(col("contamination") > 0.2).select("doc_id"),
-        Seq("doc_id"), "left_anti"),
-      "pipe2_clean")
+        Seq("doc_id"), "left_anti")
+      .persist()
     val pairs = Dedup.exactJaccardPairs(clean, "doc_id", "text",
       threshold = 0.8)
     val kept = Dedup.keepAfterPairs(clean, "doc_id", pairs)
@@ -1702,25 +1681,20 @@ object Extensions extends QueryModule {
     * identical.
     */
   def pipe5TieredPrep(s: SparkSession, d: String): DataFrame =
-    pipe5TieredPrep(s, d, Staging.Memory)
-
-  def pipe5TieredPrep(
-      s: SparkSession, d: String, staging: Staging): DataFrame =
-    pipe5TieredPrepOn(s, Tables.documents(s, d), staging)
+    pipe5TieredPrepOn(s, Tables.documents(s, d))
 
   private[graft] def pipe5TieredPrepOn(
-      s: SparkSession, docsIn: DataFrame, staging: Staging): DataFrame = {
+      s: SparkSession, docsIn: DataFrame): DataFrame = {
     // pipeline-top fan-out, pipe2's rationale
     val docs = graft.ops.Ops.fanOutForCompute(docsIn, col("doc_id"))
     val corpus = docs.filter(pmod(col("doc_id"), lit(97)) =!= 0)
     val eval_ = docs.filter(pmod(col("doc_id"), lit(97)) === 0)
     val scores = Dedup.contaminationScores(corpus, eval_, "doc_id", "text",
       k = 3)
-    val clean = staging.stage(
-      corpus.join(
+    val clean = corpus.join(
         scores.filter(col("contamination") > 0.2).select("doc_id"),
-        Seq("doc_id"), "left_anti"),
-      "pipe5_clean")
+        Seq("doc_id"), "left_anti")
+      .persist()
     val pairs = graft.queries.Clean.tieredNearDupPairsOn(
       clean, threshold = 0.8, dfCap = 16)
     val kept = Dedup.keepAfterPairs(clean, "doc_id", pairs)
@@ -1744,13 +1718,13 @@ object Extensions extends QueryModule {
     */
   def pipe6AutoPrep(s: SparkSession, d: String): DataFrame =
     pipe6AutoPrepOn(s, Tables.documents(s, d),
-      graft.queries.Clean.DefaultMaxExactCandidates, Staging.Memory)
+      graft.queries.Clean.DefaultMaxExactCandidates)
 
   private[graft] def pipe6AutoPrepOn(s: SparkSession, docs: DataFrame,
-      maxExactCandidates: Long, staging: Staging): DataFrame = {
+      maxExactCandidates: Long): DataFrame = {
     val est = graft.queries.Clean.exactTierCandidateEstimate(docs)
-    if (est <= maxExactCandidates) pipe2TrainingPrepOn(s, docs, staging)
-    else pipe5TieredPrepOn(s, docs, staging)
+    if (est <= maxExactCandidates) pipe2TrainingPrepOn(s, docs)
+    else pipe5TieredPrepOn(s, docs)
   }
 
   // ---- as-of join (operator Spark lacks; graft.ops.AsOfJoin) --------

@@ -235,8 +235,7 @@ object Mining extends QueryModule {
     * key exactly as there). Pure projection via a positional
     * `transform` — zero shuffles. The index key j*131+i stays far
     * below knuth's 2^31 input bound for any realistic doc count x
-    * length product; past it, the 64-bit [[graft.sampling.Sampling
-    * .hashPriority]] variant swaps in at the cost of the SQL dual.
+    * length product.
     */
   def msk1TokenMask(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)

@@ -460,18 +460,19 @@ object Relational extends QueryModule {
     * conditional aggregate — no sort, no window.
     */
   def kll2RankAccuracy(s: SparkSession, d: String): DataFrame = {
-    import graft.functions.KllExpressions._
     val li = Tables.lineitem(s, d)
       .select(col("l_returnflag"), col("l_extendedprice")
         .cast("double").as("x"))
     val perFlag = li.groupBy(col("l_returnflag"))
-      .agg(kll_sketch_agg(col("x")).as("sk"), count(lit(1)).as("n"))
+      .agg(kll_sketch_agg_double(col("x")).as("sk"), count(lit(1)).as("n"))
       .localCheckpoint(true)
     val ranks = array(lit(0.5), lit(0.95))
     val ests = perFlag
-      .select(col("l_returnflag"), kll_quantiles(col("sk"), ranks).as("qs"))
+      .select(col("l_returnflag"),
+        kll_sketch_get_quantile_double(col("sk"), ranks).as("qs"))
       .unionByName(perFlag
-        .agg(kll_quantiles(kll_merge_agg(col("sk")), ranks).as("qs"))
+        .agg(kll_sketch_get_quantile_double(
+          kll_merge_agg_double(col("sk")), ranks).as("qs"))
         .select(lit("__ALL__").as("l_returnflag"), col("qs")))
       .select(col("l_returnflag").as("est_flag"),
         col("qs").getItem(0).as("p50"), col("qs").getItem(1).as("p95"))
@@ -485,15 +486,15 @@ object Relational extends QueryModule {
           .cast("double") / count(lit(1)) - 0.95) <= 0.05).as("p95_ok"))
   }
 
-  /** Theta-sketch set algebra ([[graft.functions.ThetaFunctions]]):
-    * distinct customers ordering at BOTH priority extremes, and
-    * urgent-only — intersection/difference over KB-sized sketch blobs
-    * instead of an exact distinct-join. HLL cannot do this (its union
-    * is register-max only). Below 2^lgK distinct values theta sketches
-    * are in exact mode, so at gate scale the estimates are exact and
-    * the DuckDB oracle checks them as plain distinct-set SQL; at
-    * estimation scale the same query degrades to ~1/sqrt(2^lgK) RSE
-    * per operand (ThetaSpec asserts both regimes).
+  /** Theta-sketch set algebra (Spark's built-in DataSketches Theta
+    * functions): distinct customers ordering at BOTH priority
+    * extremes, and urgent-only — intersection/difference over KB-sized
+    * sketch blobs instead of an exact distinct-join. HLL cannot do this
+    * (its union is register-max only). Below 2^lgK distinct values
+    * theta sketches are in exact mode, so at gate scale the estimates
+    * are exact and the DuckDB oracle checks them as plain distinct-set
+    * SQL; at estimation scale the same query degrades to
+    * ~1/sqrt(2^lgK) RSE per operand.
     *
     * ORACLE VALIDITY BOUND: the exact-SQL oracle holds only while each
     * side's distinct o_custkey count stays below 2^lgK. lgK=16 here
@@ -502,24 +503,23 @@ object Relational extends QueryModule {
     * demote this query to rows-only rather than raising lgK further.
     */
   def th1ThetaSetAlgebra(s: SparkSession, d: String): DataFrame = {
-    import graft.functions.ThetaFunctions._
     val orders = Tables.orders(s, d)
     def side(p: String, as: String) =
       orders.filter(col("o_orderpriority") === p)
         .agg(theta_sketch_agg(col("o_custkey"), 16).as(as))
     side("1-URGENT", "sk_u").crossJoin(side("5-LOW", "sk_l"))
       .select(
-        round(theta_estimate(col("sk_u"))).cast("long").as("n_urgent"),
-        round(theta_estimate(col("sk_l"))).cast("long").as("n_low"),
-        round(theta_estimate(theta_intersect(col("sk_u"), col("sk_l"))))
-          .cast("long").as("n_both"),
-        round(theta_estimate(theta_a_not_b(col("sk_u"), col("sk_l"))))
-          .cast("long").as("n_urgent_only"))
+        theta_sketch_estimate(col("sk_u")).as("n_urgent"),
+        theta_sketch_estimate(col("sk_l")).as("n_low"),
+        theta_sketch_estimate(theta_intersection(col("sk_u"), col("sk_l")))
+          .as("n_both"),
+        theta_sketch_estimate(theta_difference(col("sk_u"), col("sk_l")))
+          .as("n_urgent_only"))
   }
 
-  /** Mergeable KLL quantile-sketch rollup
-    * ([[graft.functions.KllExpressions]]) — the quantile counterpart
-    * of [[a19HllRollup]]: one KLL sketch per group, then the global
+  /** Mergeable KLL quantile-sketch rollup (Spark's built-in
+    * `kll_*_double` functions) — the quantile counterpart of
+    * [[a19HllRollup]]: one KLL sketch per group, then the global
     * p50/p95 from a lossless-error MERGE of the group sketches,
     * without rescanning lineitem. At 100 TB the sketch column is
     * stored per partition/day and any later quantile query (any group
@@ -530,17 +530,19 @@ object Relational extends QueryModule {
     * bitwise stability.
     */
   def kll1QuantileRollup(s: SparkSession, d: String): DataFrame = {
-    import graft.functions.KllExpressions._
     // materialized once for the same double-reference reason as a19
     val perFlag = Tables.lineitem(s, d)
       .groupBy(col("l_returnflag"))
-      .agg(kll_sketch_agg(col("l_extendedprice").cast("double")).as("sk"))
+      .agg(kll_sketch_agg_double(col("l_extendedprice").cast("double"))
+        .as("sk"))
       .localCheckpoint(true)
     val ranks = array(lit(0.5), lit(0.95))
     perFlag
-      .select(col("l_returnflag"), kll_quantiles(col("sk"), ranks).as("qs"))
+      .select(col("l_returnflag"),
+        kll_sketch_get_quantile_double(col("sk"), ranks).as("qs"))
       .unionByName(perFlag
-        .agg(kll_quantiles(kll_merge_agg(col("sk")), ranks).as("qs"))
+        .agg(kll_sketch_get_quantile_double(
+          kll_merge_agg_double(col("sk")), ranks).as("qs"))
         .select(lit("__ALL__").as("l_returnflag"), col("qs")))
       .select(col("l_returnflag"),
         col("qs").getItem(0).as("p50_est"),

@@ -22,9 +22,8 @@ import graft.Tables
   *
   * Scale shape: the pair set is tiny relative to the corpus (true
   * near-dup pairs, not candidates), so the checkpoint holds O(pairs)
-  * rows; the 100 TB analogue is staging the pair set to parquet once
-  * per pipeline run ([[Staging.Parquet]]) and pointing every audit at
-  * the staged files.
+  * rows; the 100 TB analogue is writing the pair set to parquet once
+  * per pipeline run and pointing every audit at those files.
   *
   * Entries are keyed by (data dir, threshold) and validated against
   * the live SparkContext — a stopped/replaced context (test suites

@@ -65,27 +65,18 @@ object Sampling {
 
   // ---- fixed-SIZE deterministic sampling (hash-priority bottom-k) --
 
-  /** Sampling priority of a row: a seeded hash of its key. Rows are
-    * "reservoir-sampled" by keeping the k SMALLEST priorities — the
-    * distributed-native formulation of reservoir sampling (priority /
-    * consistent sampling): order-independent, mergeable (bounded heaps
-    * compose), reproducible across runs AND across engines, and
-    * re-runnable incrementally (a new row displaces the current max
-    * priority iff its hash is smaller — no resampling of history).
-    *
-    * xxhash64 keyed by the seed gives the well-mixed default. The
-    * demo queries use this form; for cross-engine ORACLE comparisons
-    * use [[knuthPriority]] (expressible in any SQL dialect).
-    */
-  def hashPriority(key: Column, seed: Long): Column =
-    xxhash64(lit(seed), key)
-
-  /** Knuth multiplicative-hash priority — engine-portable (plain
-    * integer arithmetic, no engine-specific hash), so a DuckDB/
-    * Postgres oracle can reproduce the exact sample. Requires a
-    * non-negative integral key < 2^31 (the multiply must not overflow
-    * a 64-bit signed int under ANSI mode); prefer [[hashPriority]]
-    * when portability is not needed.
+  /** Sampling priority of a row: a seeded Knuth multiplicative hash
+    * of its key. Rows are "reservoir-sampled" by keeping the k SMALLEST
+    * priorities — the distributed-native formulation of reservoir
+    * sampling (priority / consistent sampling): order-independent,
+    * mergeable (bounded heaps compose), reproducible across runs AND
+    * across engines, and re-runnable incrementally (a new row
+    * displaces the current max priority iff its hash is smaller — no
+    * resampling of history). Plain integer arithmetic, no
+    * engine-specific hash, so a DuckDB/Postgres oracle can reproduce
+    * the exact sample. Requires a non-negative integral key < 2^31
+    * (the multiply must not overflow a 64-bit signed int under ANSI
+    * mode).
     */
   def knuthPriority(key: Column, seed: Long): Column =
     pmod(key.cast("long") * lit(2654435761L) + lit(seed),

@@ -397,28 +397,6 @@ object Similarity {
       .limit(k)
   }
 
-  /** Precompute per-table buckets for ALL rows — the "index build"
-    * phase: at 100 TB this DataFrame is what you persist, partitioned
-    * by (table, bucket), so query-time probes prune partitions instead
-    * of scanning.
-    */
-  def buildLshIndex(
-      emb: DataFrame,
-      idCol: String,
-      vecCol: String,
-      dim: Int = 64,
-      bits: Int = 8,
-      tables: Int = 4): DataFrame = {
-    // one scan: all tables' buckets computed per row, then exploded —
-    // at 100 TB this is 1 pass over the corpus, not `tables` passes
-    val buckets = (0 until tables).map { t =>
-      bucketExpr(col(vecCol), hyperplanes(dim, bits, t))
-    }
-    emb.select(col(idCol), col(vecCol), posexplode(array(buckets: _*)))
-      .withColumnRenamed("pos", "table")
-      .withColumnRenamed("col", "bucket")
-  }
-
   /** Maximal-marginal-relevance rerank of a BOUNDED candidate set:
     * greedily picks k items maximizing
     * `lambda·rel(c) − (1−lambda)·max_{s∈selected} cos(c, s)` —

@@ -5,6 +5,10 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.core.`type`.TypeReference
+import com.fasterxml.jackson.core.util.{DefaultPrettyPrinter, Separators}
+import com.fasterxml.jackson.databind.ObjectMapper
+
 /** Key-value state store — the reference's `dbhash` table
   * (`lib/dbhash.py:51-103`: get / set / delete / set_or_delete over
   * `(key text PRIMARY KEY, value text)`).
@@ -49,91 +53,46 @@ final class MemoryStateStore extends StateStore {
 final class FileStateStore(path: Path) extends StateStore {
   def this(path: String) = this(Paths.get(path))
 
-  private def load(): collection.mutable.LinkedHashMap[String, String] = {
-    val m = collection.mutable.LinkedHashMap.empty[String, String]
-    if (Files.exists(path)) {
-      val txt = new String(Files.readAllBytes(path), StandardCharsets.UTF_8)
-      JsonCodec.parseObject(txt).foreach { case (k, v) => m.update(k, v) }
-    }
-    m
-  }
-
-  private def save(m: collection.Map[String, String]): Unit = {
-    if (path.getParent != null) Files.createDirectories(path.getParent)
-    val tmp = path.resolveSibling(path.getFileName.toString + ".tmp")
-    Files.write(tmp, JsonCodec.renderObject(m).getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, path, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
+  private def load(): collection.mutable.LinkedHashMap[String, String] =
+    collection.mutable.LinkedHashMap.from(JsonCodec.read(path))
 
   def get(key: String): Option[String] = load().get(key)
   def set(key: String, value: String): Unit = {
-    val m = load(); m.update(key, value); save(m)
+    val m = load(); m.update(key, value); JsonCodec.write(path, m)
   }
   def delete(key: String): Unit = {
-    val m = load(); m.remove(key); save(m)
+    val m = load(); m.remove(key); JsonCodec.write(path, m)
   }
   def keys: Seq[String] = load().keys.toSeq
 }
 
-/** Minimal flat-string-map JSON codec (no external deps; values and keys
-  * are opaque strings — exactly the dbhash contract).
+/** Flat string-map JSON files (values and keys are opaque strings —
+  * exactly the dbhash contract) over one Jackson mapper. Key order is
+  * kept; a missing or blank file reads as the empty map (a zero-byte
+  * snapshot reservation is blank); writes replace the file atomically
+  * (write-temp + ATOMIC_MOVE).
   */
 private[graft] object JsonCodec {
-  def escape(s: String): String = s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
+  private val mapper = new ObjectMapper()
+  private val writer = mapper.writer(new DefaultPrettyPrinter(
+    Separators.createDefaultInstance()
+      .withObjectFieldValueSpacing(Separators.Spacing.AFTER)))
+  private val mapType =
+    new TypeReference[java.util.LinkedHashMap[String, String]] {}
 
   def renderObject(m: collection.Map[String, String]): String =
-    m.map { case (k, v) => s""""${escape(k)}": "${escape(v)}"""" }
-      .mkString("{\n  ", ",\n  ", "\n}")
+    writer.writeValueAsString(m.asJava)
 
-  /** Parses a flat {"k":"v",...} object (the only shape we write). */
-  def parseObject(s: String): Seq[(String, String)] = {
-    val out = collection.mutable.ArrayBuffer.empty[(String, String)]
-    var i = 0
-    def skipWs(): Unit = while (i < s.length && s(i).isWhitespace) i += 1
-    def parseString(): String = {
-      require(s(i) == '"', s"expected quote at $i"); i += 1
-      val sb = new StringBuilder
-      while (s(i) != '"') {
-        if (s(i) == '\\') {
-          i += 1
-          s(i) match {
-            case '"' => sb += '"'
-            case '\\' => sb += '\\'
-            case 'n' => sb += '\n'
-            case 'r' => sb += '\r'
-            case 't' => sb += '\t'
-            case 'u' =>
-              sb += Integer.parseInt(s.substring(i + 1, i + 5), 16).toChar
-              i += 4
-            case c => sb += c
-          }
-        } else sb += s(i)
-        i += 1
-      }
-      i += 1
-      sb.toString
-    }
-    skipWs()
-    if (i >= s.length || s(i) != '{') return out.toSeq
-    i += 1
-    skipWs()
-    while (i < s.length && s(i) != '}') {
-      val k = parseString()
-      skipWs(); require(s(i) == ':', s"expected : at $i"); i += 1; skipWs()
-      val v = parseString()
-      out += ((k, v))
-      skipWs()
-      if (i < s.length && s(i) == ',') { i += 1; skipWs() }
-    }
-    out.toSeq
+  def read(path: Path): Seq[(String, String)] = {
+    val text = if (Files.exists(path)) Files.readString(path) else ""
+    if (text.isBlank) Nil else mapper.readValue(text, mapType).asScala.toSeq
+  }
+
+  def write(path: Path, m: collection.Map[String, String]): Unit = {
+    if (path.getParent != null) Files.createDirectories(path.getParent)
+    val tmp = path.resolveSibling(path.getFileName.toString + ".tmp")
+    Files.write(tmp, renderObject(m).getBytes(StandardCharsets.UTF_8))
+    Files.move(tmp, path, StandardCopyOption.ATOMIC_MOVE,
+      StandardCopyOption.REPLACE_EXISTING)
   }
 }

@@ -191,15 +191,11 @@ object EventStreams {
       purchases.withWatermark("ts", "2 hours"),
       within, joinType)
 
-  /** Event dedup by id for at-least-once sources. Batch face:
-    * dropDuplicates. Streaming face: dropDuplicatesWithinWatermark, so
-    * the seen-ids state is EVICTED once the watermark passes — bounded
-    * state, unlike plain streaming dropDuplicates which keeps every id
-    * forever.
+  /** Event dedup by id for at-least-once sources:
+    * dropDuplicatesWithinWatermark, so the seen-ids state is EVICTED
+    * once the watermark passes — bounded state, unlike plain streaming
+    * dropDuplicates which keeps every id forever.
     */
-  def dedupedEvents(events: DataFrame): DataFrame =
-    events.dropDuplicates("event_id")
-
   def streamingDedupedEvents(
       events: DataFrame, delay: String = "2 hours"): DataFrame =
     events.withWatermark("ts", delay)

@@ -37,7 +37,7 @@ class AsOfExecSpec extends SparkSpec {
 
   private val dirs = Seq(AsOfDir.Backward, AsOfDir.Forward, AsOfDir.Nearest)
 
-  test("backward exec: fixture semantics match the merge scan") {
+  test("backward exec: fixture semantics match the reference") {
     val left = Seq(
       (1L, "u1", ts(0)), (2L, "u1", ts(5)), (3L, "u1", ts(7)),
       (4L, "u1", ts(12)), (5L, "u2", ts(6))
@@ -58,7 +58,7 @@ class AsOfExecSpec extends SparkSpec {
       (1L, null), (2L, 100.0), (3L, 100.0), (4L, 200.0), (5L, 50.0)))
   }
 
-  test("forward exec: earliest right at-or-after, equal to the scan") {
+  test("forward exec: earliest right at-or-after, equal to the reference") {
     val left = Seq((1L, "u", ts(0)), (2L, "u", ts(5)), (3L, "u", ts(11)))
       .toDF("id", "user", "ts")
     val right = Seq(("u", ts(5), 1.0), ("u", ts(10), 2.0))
@@ -106,7 +106,7 @@ class AsOfExecSpec extends SparkSpec {
     }
   }
 
-  test("randomized: exec == scan on both directions (nulls, dup ts, skew)") {
+  test("randomized: exec == reference on both directions (nulls, dup ts, skew)") {
     val rnd = new scala.util.Random(4242)
     def mkTs(): Option[Timestamp] =
       if (rnd.nextInt(20) == 0) None else Some(ts(rnd.nextInt(40)))
@@ -125,7 +125,7 @@ class AsOfExecSpec extends SparkSpec {
         ref(left, r1, Seq("k"), d), s"dir=$d")
   }
 
-  test("nearest exec: closer side wins, tie -> backward, equal to scan") {
+  test("nearest exec: closer side wins, tie -> backward, equal to the reference") {
     val left = Seq(
       (1L, "u", ts(4)),  // back@0 dist 4, fwd@5 dist 1 -> fwd
       (2L, "u", ts(1)),  // back@0 dist 1, fwd@5 dist 4 -> back
@@ -152,7 +152,7 @@ class AsOfExecSpec extends SparkSpec {
     assert(out.head().getDouble(3) === 1.5)
   }
 
-  test("randomized nearest: exec == scan (nulls, dup ts, dense keys)") {
+  test("randomized nearest: exec == reference (nulls, dup ts, dense keys)") {
     val rnd = new scala.util.Random(777)
     def mkTs(): Option[Timestamp] =
       if (rnd.nextInt(20) == 0) None else Some(ts(rnd.nextInt(40)))
@@ -235,8 +235,7 @@ class AsOfExecSpec extends SparkSpec {
     assert(out === Seq(101.0, 102.0, null))
   }
 
-  test("composite keys randomized: exec == single-key scan over a " +
-      "fused key column") {
+  test("composite keys randomized: exec == the reference on the key tuple") {
     val rnd = new scala.util.Random(1234)
     def mkTs(): Option[Timestamp] =
       if (rnd.nextInt(20) == 0) None else Some(ts(rnd.nextInt(40)))
@@ -253,8 +252,8 @@ class AsOfExecSpec extends SparkSpec {
         "ts", d)) === ref(left, right, Seq("sym", "ven"), d), s"dir=$d")
   }
 
-  test("chunked exec on 90%-one-key skew: row-identical to the " +
-      "chunked scan AND the plain exec, all three directions") {
+  test("chunked exec on 90%-one-key skew: == reference and plain exec, " +
+      "all directions") {
     val rnd = new scala.util.Random(31337)
     // 90% of rows on one hot key — the regime the (key, bucket) spread
     // exists for
@@ -449,7 +448,7 @@ class AsOfExecSpec extends SparkSpec {
     }
   }
 
-  test("sf0.001 events: exec matches scan on the driver-query shape") {
+  test("sf0.001 events: exec matches the reference on the driver-query shape") {
     val ev = Tables.events(spark, sf)
     val left = ev.select(col("event_id"), col("ts"), col("user_id"),
       col("event_type"))

@@ -213,8 +213,8 @@ class AsOfJoinSpec extends SparkSpec {
     }
   }
 
-  test("chunked variants match the plain scan row-for-row on 90%-one-key skew, " +
-      "and the hot key spreads over multiple tasks") {
+  test("chunked variants == plain operator on 90%-one-key skew; hot key " +
+      "spans tasks") {
     import org.apache.spark.sql.functions._
     val rnd = new scala.util.Random(7)
     // 90% of rows on key "H", timelines interleaved; distinct left ids

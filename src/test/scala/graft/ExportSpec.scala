@@ -47,35 +47,10 @@ class ExportSpec extends SparkSpec {
     assert(reparted.toSet === out.toSet)
   }
 
-  test("pipelines with parquet staging produce the same rows as the " +
-      "in-memory default (the 100 TB stage-materialization path)") {
-    import graft.queries.{Extensions, Staging}
-    val stageDir = Files.createTempDirectory("graft-staging").toString
-    def canonPipe2(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
-    val mem2 = canonPipe2(Extensions.pipe2TrainingPrep(spark, sf))
-    val par2 = canonPipe2(Extensions.pipe2TrainingPrep(spark, sf,
-      Staging.Parquet(stageDir)))
-    assert(par2 === mem2)
-    assert(mem2.nonEmpty)
-    // the staged artifact actually landed (lineage is cut at the file)
-    assert(Files.exists(java.nio.file.Paths.get(
-      s"$stageDir/pipe2_clean.parquet")))
-    val mem1 = canonPipe2(Extensions.pipe1CorpusClean(spark, sf))
-    val par1 = canonPipe2(Extensions.pipe1CorpusClean(spark, sf,
-      Staging.Parquet(stageDir)))
-    assert(par1 === mem1)
-    val mem5 = canonPipe2(Extensions.pipe5TieredPrep(spark, sf))
-    val par5 = canonPipe2(Extensions.pipe5TieredPrep(spark, sf,
-      Staging.Parquet(stageDir)))
-    assert(par5 === mem5)
-    assert(mem5.nonEmpty)
-  }
-
   test("pipe5 tiered prep: the tiered removal set is a SUBSET of " +
       "pipe2's exact removals and the pack replays over the " +
       "independently recomputed kept set") {
-    import graft.queries.{Clean, Extensions, Staging}
+    import graft.queries.{Clean, Extensions}
     import graft.dedup.Dedup
     val docs = Tables.documents(spark, sf)
     // recompute the shared decontamination stage once
@@ -111,14 +86,14 @@ class ExportSpec extends SparkSpec {
     val expect = graft.export.Packing.packSequences(
         units, "cid", "n_chunk_tokens", budget = 512L)
       .collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
-    val got = Extensions.pipe5TieredPrepOn(spark, docs, Staging.Memory)
+    val got = Extensions.pipe5TieredPrepOn(spark, docs)
       .collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
     assert(got === expect)
   }
 
   test("pipe6 auto prep: the dispatch statistic flips the composition " +
       "between pipe2 and pipe5, proven where the tiers' packs differ") {
-    import graft.queries.{Clean, Extensions, Staging}
+    import graft.queries.{Clean, Extensions}
     // hot-template corpus (> dfCap near-identical docs): pipe2's exact
     // stage removes the duplicates, pipe5's capped gate keeps them —
     // the two compositions pack DIFFERENT unit sets, so the dispatch
@@ -135,14 +110,10 @@ class ExportSpec extends SparkSpec {
     assert(est > 0)
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
-    val viaExact = canon(Extensions.pipe6AutoPrepOn(spark, docs, est,
-      Staging.Memory))
-    val viaTiered = canon(Extensions.pipe6AutoPrepOn(spark, docs, est - 1,
-      Staging.Memory))
-    assert(viaExact ===
-      canon(Extensions.pipe2TrainingPrepOn(spark, docs, Staging.Memory)))
-    assert(viaTiered ===
-      canon(Extensions.pipe5TieredPrepOn(spark, docs, Staging.Memory)))
+    val viaExact = canon(Extensions.pipe6AutoPrepOn(spark, docs, est))
+    val viaTiered = canon(Extensions.pipe6AutoPrepOn(spark, docs, est - 1))
+    assert(viaExact === canon(Extensions.pipe2TrainingPrepOn(spark, docs)))
+    assert(viaTiered === canon(Extensions.pipe5TieredPrepOn(spark, docs)))
     assert(viaExact !== viaTiered, "fixture must separate the tiers")
   }
 

@@ -49,31 +49,46 @@ class JobSpecsSpec extends AnyFunSuite {
         |          - name: load-dataset-star-facts
         |            image: graft/spark-loader:v1
         |            command:
-        |            - spark-submit
-        |            - --class
-        |            - graft.LoadDataset
-        |            - local:///opt/graft/graft.jar
-        |            - star_facts
+        |            - "spark-submit"
+        |            - "--class"
+        |            - "graft.LoadDataset"
+        |            - "local:///opt/graft/graft.jar"
+        |            - "star_facts"
+        |            - "--sf-dir"
+        |            - "/data/sf1"
         |            env:
-        |            - name: GRAFT_WAREHOUSE_DIR
-        |              value: ""
-        |            - name: GRAFT_SF_DIR
-        |              value: "/data/sf1"
         |            - name: SPARK_GRAFT_CPUS
         |              value: "8"
-        |            - name: SPARK_DRIVER_MEM
-        |              value: ""
-        |            - name: GRAFT_WEBHOOK_URL
-        |              value: ""
         |""".stripMargin
     assert(got === want)
+  }
+
+  /** The container command of a rendered spec, one entry per argument. */
+  private def command(spec: String): Seq[String] =
+    spec.linesIterator.dropWhile(_.trim != "command:").drop(1)
+      .takeWhile(_.trim.startsWith("- \"")).map(_.trim.drop(3).dropRight(1))
+      .toSeq
+
+  test("render-time settings reach their readers as arguments") {
+    val ds = registry.head
+    val spec = JobSpecs.render(ds, "img", Map(
+      "GRAFT_WAREHOUSE_DIR" -> "/w", "GRAFT_SF_DIR" -> "/d",
+      "SPARK_DRIVER_MEM" -> "6g").get)
+    assert(command(spec) === Seq("spark-submit", "--driver-memory", "6g",
+      "--class", "graft.LoadDataset", "local:///opt/graft/graft.jar",
+      ds.name, "--warehouse", "/w", "--sf-dir", "/d"))
+    // unset settings are left out, so LoadDataset keeps its defaults
+    val bare = JobSpecs.render(ds, "img", _ => None)
+    assert(command(bare) === Seq("spark-submit", "--class",
+      "graft.LoadDataset", "local:///opt/graft/graft.jar", ds.name))
+    assert(!bare.contains("env:"))
   }
 
   test("env values with quotes/backslashes are escaped") {
     val ds = registry.head
     val spec = JobSpecs.render(ds, "img",
       Map("GRAFT_SF_DIR" -> """pa"th\x""").get)
-    assert(spec.contains("""value: "pa\"th\\x""""))
+    assert(spec.contains("""- "pa\"th\\x""""))
   }
 
   test("rendered files round-trip byte-identically (deterministic emit)") {

@@ -6,7 +6,8 @@ import graft.functions.FreqItems
 
 /** Misra-Gries heavy-hitters aggregate: exact regime, approximation
   * guarantees under counter pressure, mergeability across partitions,
-  * and the SQL surface.
+  * and the SQL surface; Spark's KLL sketch as the quantile queries use
+  * it.
   */
 class SketchSpec extends SparkSpec {
   import spark.implicits._
@@ -105,9 +106,15 @@ class SketchSpec extends SparkSpec {
     assert(out === Seq(("a", 2L), ("b", 1L)))
   }
 
-  // ---- KLL quantile sketch (graft.functions.KllExpressions) --------
+  test("GraftExtensions registers no Spark built-in name") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
+    val shadowing = graft.functions.GraftExtensions.builders.keys.filter(n =>
+      FunctionRegistry.builtin.functionExists(FunctionIdentifier(n)))
+    assert(shadowing.isEmpty)
+  }
 
-  import graft.functions.KllExpressions._
+  // ---- KLL quantile sketch (Spark's built-in kll_*_double) ---------
 
   test("KLL: rank error within the k=200 bound on a known distribution, " +
       "across many partitions") {
@@ -116,8 +123,9 @@ class SketchSpec extends SparkSpec {
     // assert 3% to keep the test stable across coin flips.
     val n = 100000
     val df = (0 until n).map(_.toDouble).toDF("v").repartition(16)
-    val qs = df.agg(kll_quantiles(
-        kll_sketch_agg(col("v")), array(lit(0.1), lit(0.5), lit(0.99))).as("q"))
+    val qs = df.agg(kll_sketch_get_quantile_double(
+        kll_sketch_agg_double(col("v")),
+        array(lit(0.1), lit(0.5), lit(0.99))).as("q"))
       .select(col("q").getItem(0), col("q").getItem(1), col("q").getItem(2))
       .as[(Double, Double, Double)].head()
     def rankOf(v: Double): Double = v / n
@@ -131,45 +139,23 @@ class SketchSpec extends SparkSpec {
     val n = 60000
     val df = (0 until n).map(i => (i % 3, i.toDouble)).toDF("g", "v")
       .repartition(8)
-    val perGroup = df.groupBy("g").agg(kll_sketch_agg(col("v")).as("sk"))
+    val perGroup = df.groupBy("g")
+      .agg(kll_sketch_agg_double(col("v")).as("sk"))
     val global = perGroup
-      .agg(kll_quantiles(kll_merge_agg(col("sk")), array(lit(0.5))).as("q"))
+      .agg(kll_sketch_get_quantile_double(
+        kll_merge_agg_double(col("sk")), array(lit(0.5))).as("q"))
       .select(col("q").getItem(0)).as[Double].head()
     // global median of 0..n-1 is ~n/2; merged estimate must land
     // within the (post-merge) rank error of ~3%
     assert(math.abs(global / n - 0.5) < 0.04, s"merged p50 -> $global")
   }
 
-  test("KLL: empty input and all-null input yield an empty sketch -> " +
-      "null quantiles, not an error") {
-    val empty = Seq.empty[Double].toDF("v")
-      .agg(kll_quantiles(kll_sketch_agg(col("v")), array(lit(0.5))).as("q"))
-      .collect()
-    assert(empty.length === 1 && empty.head.isNullAt(0))
-    val nulls = Seq[Option[Double]](None, None).toDF("v")
-      .agg(kll_quantiles(kll_sketch_agg(col("v")), array(lit(0.5))).as("q"))
-      .collect()
-    assert(nulls.length === 1 && nulls.head.isNullAt(0))
-  }
-
   test("KLL: plans as ObjectHashAggregate with partial merge (map-side " +
       "sketching; O(k) bytes per group on the shuffle)") {
     val df = (0 until 1000).map(_.toDouble).toDF("v").repartition(4)
-      .agg(kll_sketch_agg(col("v")).as("sk"))
+      .agg(kll_sketch_agg_double(col("v")).as("sk"))
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("ObjectHashAggregate"), plan)
-    assert(plan.contains("partial_kll_sketch_agg"), plan)
-  }
-
-  test("SQL surface: kll_sketch_agg / kll_merge_agg / kll_quantiles " +
-      "callable as text") {
-    graft.functions.GraftExtensions.register(spark)
-    (0 until 10000).map(_.toDouble).toDF("v").createOrReplaceTempView("kll_in")
-    val p50 = spark.sql(
-      """SELECT kll_quantiles(kll_merge_agg(sk, 200), array(0.5d))[0]
-        |FROM (SELECT kll_sketch_agg(v, 200) AS sk FROM kll_in GROUP BY
-        |      CAST(v AS INT) % 4)""".stripMargin)
-      .as[Double].head()
-    assert(math.abs(p50 / 10000 - 0.5) < 0.04, s"sql p50 -> $p50")
+    assert(plan.contains("partial_kll_sketch_agg_double"), plan)
   }
 }

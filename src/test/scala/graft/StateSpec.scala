@@ -41,6 +41,22 @@ class StateSpec extends AnyFunSuite {
   contract("file", () => new FileStateStore(
     Files.createTempDirectory("graft-state").resolve("state.json")))
 
+  test("file in the current format (escaped quote, newline, \\u0001) " +
+      "reads back unchanged") {
+    val text = "{\n" +
+      "  \"etag:http://a\": \"\\\"v1\\\"\",\n" +
+      "  \"note\": \"line1\\nline2\\u0001end\"\n" +
+      "}"
+    val p = Files.createTempDirectory("graft-state").resolve("s.json")
+    Files.write(p, text.getBytes("UTF-8"))
+    val store = new FileStateStore(p)
+    assert(store.keys === Seq("etag:http://a", "note"))
+    assert(store.get("etag:http://a").contains("\"v1\""))
+    assert(store.get("note").contains("line1\nline2\u0001end"))
+    assert(JsonCodec.renderObject(
+      collection.immutable.ListMap.from(JsonCodec.read(p))) === text)
+  }
+
   test("file store persists across instances (durability)") {
     val p = Files.createTempDirectory("graft-state").resolve("s.json")
     new FileStateStore(p).set("etag:u", "\"quoted\"\nvalue\twithctrl")
