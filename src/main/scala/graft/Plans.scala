@@ -68,7 +68,7 @@ object Plans {
       "dd13_containment" ->
         "containment: staged+checkpointed hash-gram postings, unordered-pair agg, direction fan-out after",
       "bs1_bootstrap_ci" ->
-        "Poisson bootstrap: 32 replicates as one wide aggregate, single scan",
+        "Poisson bootstrap: replicate id exploded per row, one groupBy(b) aggregate, single scan",
       "msk1_token_mask" ->
         "token masking: pure positional transform, zero Exchange",
       "cal1_calibration" ->

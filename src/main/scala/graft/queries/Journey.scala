@@ -99,7 +99,6 @@ object Journey extends QueryModule {
         .select(col("variant"), col("mass"))
       active = flow.filter(!col("dst").isin("conv", "null"))
         .select(col("variant"), col("dst").as("state"), col("mass"))
-        .localCheckpoint(true)
     }
     // LEFT join against the variant list: a variant whose removal kills
     // every conversion has NO conv rows and must still appear with 0

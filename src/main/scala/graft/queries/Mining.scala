@@ -16,9 +16,9 @@ import graft.sampling.Sampling.knuthPriority
   * Jaccard), per-document first-occurrence token dedup and
   * deterministic MLM-style token masking (both pure projections — the
   * shuffle-free end of the corpus-hygiene family), Poisson-bootstrap
-  * confidence intervals (resampling without a shuffle OR a row
-  * blow-up), a Deequ-style data-quality constraint suite, blocked
-  * fuzzy record linkage with a best-vs-second-margin accept rule on
+  * confidence intervals (resampling by reweighting, one aggregate
+  * keyed by replicate), a Deequ-style data-quality constraint suite,
+  * blocked fuzzy record linkage with a best-vs-second-margin accept rule on
   * top of jw1's native Jaro-Winkler, and SAX symbolization of a time
   * series (the symbolic-indexing substrate for series similarity
   * search).
@@ -267,10 +267,13 @@ object Mining extends QueryModule {
 
   /** 95%-ish bootstrap CI for mean(o_totalprice) via the POISSON
     * bootstrap (Chamandy et al.'s large-scale formulation): replicate
-    * b reweights each row by an independent Poisson(1) count, so all
-    * B=32 replicates are computed in ONE pass as 64 conditional
-    * partial aggregates — no resampling shuffle, no B-fold row
-    * explosion, no driver-side data. The per-replicate weight is the
+    * b reweights each row by an independent Poisson(1) count, so no
+    * resample is drawn and nothing is shuffled but per-replicate
+    * partial sums. The replicate index is data: each row explodes
+    * into 33 copies keyed b = -1..31, where b = -1 is the sample
+    * itself (weight 1) and b = 0..31 the B=32 replicates, and ONE
+    * groupBy(b) aggregate over one scan sums them all, so the plan
+    * does not grow with B. The per-replicate weight is the
     * deterministic [[poisWeight]] of knuth(orderkey*37 + b); weighted
     * sums go through exact DECIMAL(18,2) (prices have 2 dp and w<=5,
     * so every product is exact), making each replicate mean one
@@ -278,21 +281,24 @@ object Mining extends QueryModule {
     * replicate means.
     */
   def bs1BootstrapCi(s: SparkSession, d: String): DataFrame = {
-    val o = Tables.orders(s, d)
-    val aggs = (0 until 32).flatMap { b =>
-      val w = poisWeight(col("o_orderkey") * 37 + lit(b))
-      Seq(
-        sum((col("o_totalprice") * w).cast("decimal(18,2)"))
-          .as(s"s_$b"),
-        sum(w.cast("long")).as(s"c_$b"))
-    } ++ Seq(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("sx"))
-    val wide = o.agg(aggs.head, aggs.tail: _*)
-    val means = array((0 until 32).map(b =>
-      col(s"s_$b").cast("double") / col(s"c_$b").cast("double")): _*)
-    wide.select(col("n"),
-      round(col("sx") / col("n"), 6).as("mean6"),
-      round(element_at(array_sort(means), 2), 6).as("ci_lo6"),
-      round(element_at(array_sort(means), 31), 6).as("ci_hi6"))
+    val b = col("b")
+    val w = when(b < 0, lit(1))
+      .otherwise(poisWeight(col("o_orderkey") * 37 + b))
+    val mean = col("s").cast("double") / col("c").cast("double")
+    Tables.orders(s, d)
+      .withColumn("b", explode(sequence(lit(-1L), lit(31L))))
+      .groupBy(b)
+      .agg(
+        sum((col("o_totalprice") * w).cast("decimal(18,2)")).as("s"),
+        sum(w.cast("long")).as("c"))
+      .agg(
+        max(when(b < 0, col("c"))).as("n"),
+        max(when(b < 0, mean)).as("mean"),
+        array_sort(collect_list(when(b >= 0, mean))).as("means"))
+      .select(col("n"),
+        round(col("mean"), 6).as("mean6"),
+        round(element_at(col("means"), 2), 6).as("ci_lo6"),
+        round(element_at(col("means"), 31), 6).as("ci_hi6"))
   }
 
   // ---- dq1: data-quality constraint suite ----------------------------

@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.ops.Ops.dsum
 import graft.sampling.Sampling.knuthPriority
 
 /** Round-10 batch five: the SCD2 point-in-time lookup (THE standard
@@ -15,9 +14,9 @@ import graft.sampling.Sampling.knuthPriority
   * Gini coefficient for concentration analysis.
   *
   * Exactness: cor1/gini1 keep moments in exact DECIMAL/long and spend
-  * in integer cents; perm1 reuses bs1's one-scan conditional-aggregate
-  * resampling with knuth-hash label flips; u5's validity predicate is
-  * pure timestamp comparison.
+  * in integer cents; perm1 reuses bs1's replicate-keyed aggregate with
+  * knuth-hash label flips; u5's validity predicate is pure timestamp
+  * comparison.
   */
 object Stats extends QueryModule {
 
@@ -132,41 +131,40 @@ object Stats extends QueryModule {
     * than view events": the observed mean difference vs B=32
     * label-reassignment replicates, each relabeling every row by a
     * knuth coin (the Bernoulli randomization form; deterministic and
-    * engine-replayable, same contract as bs1). ONE scan: 4 observed +
-    * 128 replicate conditional aggregates. p = (1 + #{|diff_b| >=
-    * |obs|}) / (B+1), the standard add-one permutation p-value.
+    * engine-replayable, same contract as bs1). The replicate index is
+    * data, as in bs1: each row explodes into 33 copies keyed
+    * b = -1..31, where b = -1 keeps the true labels and b = 0..31 flip
+    * coins, and ONE groupBy(b) aggregate over one scan gives each
+    * replicate's 4 conditional sums. p = (1 + #{|diff_b| >= |obs|}) /
+    * (B+1), the standard add-one permutation p-value.
     */
   def perm1PermutationTest(s: SparkSession, d: String): DataFrame = {
-    val ev = Tables.events(s, d)
+    val b = col("b")
+    val lab = when(b < 0, col("lab")).otherwise(
+      pmod(knuthPriority(col("event_id") * 61 + b, 0L), lit(2L))
+        .cast("int"))
+    def valueSum(l: Int) = sum(when(lab === l, col("value"))
+      .otherwise(lit(0.0)).cast("decimal(18,2)"))
+    def labCount(l: Int) = sum(when(lab === l, 1L).otherwise(0L))
+    val diff = col("s1").cast("double") / col("c1") -
+      col("s0").cast("double") / col("c0")
+    Tables.events(s, d)
       .filter(col("event_type").isin("purchase", "view"))
       .select(col("event_id"), col("value"),
         (col("event_type") === "purchase").cast("int").as("lab"))
-    def meanDiff(lab: org.apache.spark.sql.Column) = (
-      sum(when(lab === 1, col("value")).otherwise(lit(0.0))
-        .cast("decimal(18,2)")).cast("double"),
-      sum(when(lab === 1, 1L).otherwise(0L)),
-      sum(when(lab === 0, col("value")).otherwise(lit(0.0))
-        .cast("decimal(18,2)")).cast("double"),
-      sum(when(lab === 0, 1L).otherwise(0L)))
-    val (os1, oc1, os0, oc0) = meanDiff(col("lab"))
-    val aggs = Seq(os1.as("os1"), oc1.as("oc1"), os0.as("os0"),
-      oc0.as("oc0")) ++ (0 until 32).flatMap { b =>
-      val coin = pmod(knuthPriority(col("event_id") * 61 + lit(b), 0L),
-        lit(2L)).cast("int")
-      val (s1, c1, s0, c0) = meanDiff(coin)
-      Seq(s1.as(s"s1_$b"), c1.as(s"c1_$b"), s0.as(s"s0_$b"),
-        c0.as(s"c0_$b"))
-    }
-    val wide = ev.agg(aggs.head, aggs.tail: _*)
-    val obs = col("os1") / col("oc1") - col("os0") / col("oc0")
-    val exceed = (0 until 32).map { b =>
-      val diff = col(s"s1_$b") / col(s"c1_$b") -
-        col(s"s0_$b") / col(s"c0_$b")
-      when(abs(diff) >= abs(obs), 1).otherwise(0)
-    }.reduce(_ + _)
-    wide.select(round(obs, 6).as("obs_diff6"),
-      exceed.cast("long").as("n_exceed"),
-      round((exceed + 1).cast("double") / 33.0, 6).as("p_value6"))
+      .withColumn("b", explode(sequence(lit(-1L), lit(31L))))
+      .groupBy(b)
+      .agg(
+        valueSum(1).as("s1"), labCount(1).as("c1"),
+        valueSum(0).as("s0"), labCount(0).as("c0"))
+      .agg(
+        max(when(b < 0, diff)).as("obs"),
+        collect_list(when(b >= 0, diff)).as("diffs"))
+      .select(round(col("obs"), 6).as("obs_diff6"),
+        size(filter(col("diffs"), x => abs(x) >= abs(col("obs"))))
+          .cast("long").as("n_exceed"))
+      .withColumn("p_value6",
+        round((col("n_exceed") + 1).cast("double") / 33.0, 6))
   }
 
   // ---- gini1: Lorenz curve + Gini coefficient ------------------------

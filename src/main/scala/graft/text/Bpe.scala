@@ -94,29 +94,35 @@ object Bpe {
     * projection applying the winning merge — the winner becomes plan
     * literals, so nothing about the merge list ever shuffles.
     * Returns (merges, final vocab); each merge is (step, a, b, weight).
+    * The final vocab is persisted but not yet computed; the caller
+    * unpersists it.
     */
   def train(
       docs: DataFrame,
       textCol: String,
       nMerges: Int): (Seq[(Int, String, String, Long)], DataFrame) = {
     var v = vocab(docs, textCol).persist()
+    // v's parent stays cached until the next pair-count job, which reads
+    // (and so materializes) v from it
+    var parent: Option[DataFrame] = None
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
     var step = 1
     while (step <= nMerges) {
       val top = pairCounts(v)
         .orderBy(col("w").desc, col("a").asc, col("b").asc)
         .limit(1).collect()
+      parent.foreach(_.unpersist())
+      parent = None
       if (top.isEmpty) { step = nMerges + 1 } // no pairs left (degenerate)
       else {
         val (a, b, w) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
         merges += ((step, a, b, w))
-        val next = v.withColumn("syms", mergeFold(col("syms"), a, b)).persist()
-        next.count() // materialize before dropping the parent
-        v.unpersist()
-        v = next
+        parent = Some(v)
+        v = v.withColumn("syms", mergeFold(col("syms"), a, b)).persist()
         step += 1
       }
     }
+    parent.foreach(_.unpersist())
     (merges.toSeq, v)
   }
 

@@ -155,6 +155,33 @@ class MiningSpec extends SparkSpec {
     assert((hi - lo) / mean < 0.2)
   }
 
+  test("bs1: n, mean and CI equal a plain-Scala Poisson bootstrap over the collected orders") {
+    import BigDecimal.RoundingMode.HALF_UP
+    val orders = Tables.orders(spark, sf).select("o_orderkey", "o_totalprice")
+      .collect().map(r => (r.getLong(0), r.getDouble(1)))
+    def knuth(k: Long): Long = Math.floorMod(k * 2654435761L, 4294967296L)
+    val thresholds = Seq(367879L, 735759L, 919699L, 981012L, 996340L)
+    def weight(k: Long): Int = {
+      val i = thresholds.indexWhere(knuth(k) % 1000000L < _)
+      if (i < 0) 5 else i
+    }
+    def dec2(x: Double) = BigDecimal(x).setScale(2, HALF_UP)
+    def round6(x: Double) = BigDecimal(x).setScale(6, HALF_UP).toDouble
+    val means = (0 until 32).map { b =>
+      val wp = orders.map { case (k, p) => (weight(k * 37 + b), p) }
+      wp.map { case (w, p) => dec2(p * w) }.sum.toDouble /
+        wp.map(_._1.toLong).sum.toDouble
+    }.sorted
+    val n = orders.length.toLong
+    val got = Mining.bs1BootstrapCi(spark, sf).collect()
+    assert(got.length == 1)
+    assert(got(0).getLong(0) == n)
+    assert(got(0).getAs[Double]("mean6") ==
+      round6(orders.map(o => dec2(o._2)).sum.toDouble / n))
+    assert(got(0).getAs[Double]("ci_lo6") == round6(means(1)))
+    assert(got(0).getAs[Double]("ci_hi6") == round6(means(30)))
+  }
+
   // ---- dq1 constraints -----------------------------------------------
 
   test("dq1: clean TPC-H slice passes every constraint; metrics are ratios") {

@@ -413,13 +413,25 @@ class PlanSpec extends SparkSpec {
     assert(plan.contains("Generate"), plan)
   }
 
-  test("bs1 bootstrap: all 32 replicates in ONE aggregate pass — no explode, single scan, no join") {
-    val plan = executedPlan(graft.queries.Mining.bs1BootstrapCi(spark, sf))
-      .split("Initial Plan")(0) // assert on the AQE-final section only
-    assert(!plan.contains("Generate"), plan) // no B-fold row blow-up
-    assert(!plan.contains("Join"), plan)
-    // one scan of orders
-    assert(plan.linesIterator.count(_.contains("Scan parquet")) == 1, plan)
+  test("bs1 and perm1: replicates are rows keyed by b — under 1,000 expression nodes, one aggregate grouped by b, one scan, no join") {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
+    Seq(graft.queries.Mining.bs1BootstrapCi(spark, sf),
+        graft.queries.Stats.perm1PermutationTest(spark, sf)).foreach { df =>
+      val plan = df.queryExecution.optimizedPlan
+      // the unrolled form spelled every replicate out as its own
+      // aggregate columns: thousands of nodes, growing with B
+      val exprNodes = plan.collect { case n =>
+        n.expressions.map(_.collect { case e => e }.size).sum }.sum
+      assert(exprNodes < 1000, plan)
+      val byReplicate = plan.collect {
+        case a: Aggregate if a.groupingExpressions.collect {
+          case k: Attribute => k.name } == Seq("b") => a
+      }
+      assert(byReplicate.size == 1, plan)
+      assert(plan.collectLeaves().size == 1, plan)
+      assert(plan.collect { case j: Join => j }.isEmpty, plan)
+    }
   }
 
   test("seq1 sequence mining: lead windows partition per user — no partition-less window") {

@@ -57,6 +57,36 @@ class StatsSpec extends SparkSpec {
     assert(r1.getAs[Long]("n_exceed") >= 0 && r1.getAs[Long]("n_exceed") <= 32)
   }
 
+  test("perm1: observed diff, n_exceed and p-value equal a plain-Scala replay of the 32 coin relabelings") {
+    import BigDecimal.RoundingMode.HALF_UP
+    val ev = Tables.events(spark, sf)
+      .filter(col("event_type").isin("purchase", "view"))
+      .select(col("event_id"), col("value"),
+        (col("event_type") === "purchase").cast("int"))
+      .collect().map(r => (r.getLong(0), r.getDouble(1), r.getInt(2)))
+    def knuth(k: Long): Long = Math.floorMod(k * 2654435761L, 4294967296L)
+    def round6(x: Double) = BigDecimal(x).setScale(6, HALF_UP).toDouble
+    def meanDiff(label: ((Long, Double, Int)) => Int): Double = {
+      def mean(l: Int) = {
+        val xs = ev.filter(label(_) == l)
+        xs.map(e => BigDecimal(e._2).setScale(2, HALF_UP)).sum.toDouble /
+          xs.length
+      }
+      mean(1) - mean(0)
+    }
+    val obs = meanDiff(_._3)
+    val nExceed = (0 until 32).count { b =>
+      math.abs(meanDiff(e => (knuth(e._1 * 61 + b) % 2).toInt)) >=
+        math.abs(obs)
+    }
+    val got = Stats.perm1PermutationTest(spark, sf).collect()
+    assert(got.length == 1)
+    assert(got(0).getAs[Double]("obs_diff6") == round6(obs))
+    assert(got(0).getAs[Long]("n_exceed") == nExceed.toLong)
+    assert(got(0).getAs[Double]("p_value6") ==
+      round6((nExceed + 1).toDouble / 33.0))
+  }
+
   test("gini1: Lorenz curve is convex-increasing to 1.0; Gini matches a driver replay") {
     val rows = Stats.gini1LorenzGini(spark, sf).collect()
       .map(r => r.getLong(0) -> r.getAs[Double]("cum_share6")).toMap
