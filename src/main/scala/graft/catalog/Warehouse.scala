@@ -69,9 +69,6 @@ final class Warehouse(val root: Path) {
 
   def tableExists(name: String): Boolean = manifest.contains(name)
 
-  /** Read a published table (readers always see one consistent
-    * generation — S10-style introspection + reads go through here).
-    */
   /** Incremental merge: upsert `delta` into a published table by key
     * (delta rows replace same-key rows, new keys insert) and publish
     * the result atomically as a new generation — the incremental
@@ -103,6 +100,9 @@ final class Warehouse(val root: Path) {
       name -> table(spark, name).filter(!coalesce(cond, lit(false)))))
   }
 
+  /** Read a published table (readers always see one consistent
+    * generation — S10-style introspection + reads go through here).
+    */
   def table(spark: SparkSession, name: String): DataFrame = {
     val rel = manifest.getOrElse(name,
       throw new NoSuchElementException(s"table not published: $name"))

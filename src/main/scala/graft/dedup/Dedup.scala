@@ -430,8 +430,7 @@ object Dedup {
       textCol: String,
       n: Int = 3,
       threshold: Double = 0.6,
-      saltBuckets: Int = 16,
-      cacheVerifySets: Boolean = false): DataFrame = {
+      saltBuckets: Int = 16): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // scale-adaptive fan-out (guide §2): the n-gram set build chains
     // into the scan stage, so a few-row-group input serializes this
@@ -502,16 +501,8 @@ object Dedup {
     // wall-clock ~20:1 on dense corpora. A 64-bit collision inside one
     // document's <=few-thousand-gram set (probability ~ |set|^2/2^64
     // per doc) is the only way this differs from exact string Jaccard.
-    // cacheVerifySets: the hsets subtree (scan -> ngram-set -> hash ->
-    // sort) feeds BOTH join sides and otherwise executes twice; an
-    // eager localCheckpoint computes the sorted-hash arrays once
-    // (~8 B/gram columnar) and both probes reuse the partitions.
-    // Opt-in: the materialization (~|corpus| x |set| longs) only pays
-    // for itself when the text->set pipeline dominates the verify
-    // join.
-    val hsets0 = sets.select(col("id"),
+    val hsets = sets.select(col("id"),
       sort_array(transform(col("__set"), g0 => xxhash64(g0))).as("__h"))
-    val hsets = if (cacheVerifySets) hsets0.localCheckpoint() else hsets0
     val jac = {
       val inter = graft.functions.VectorFunctions
         .sorted_intersect_count(col("__ha"), col("__hb")).cast("double")

@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.ops.Ops
+
 /** Distributed connected components over an edge list, via alternating
   * large-star / small-star contraction (the MapReduce-and-beyond
   * formulation: each round is two shuffles on node id, and the edge set
@@ -28,53 +30,13 @@ import org.apache.spark.sql.functions._
   * keyed on node id (map-side combine applies; AQE handles skew —
   * high-degree hubs are exactly the skewed-key case). Edges are
   * deduplicated every round so the working set only shrinks. Lineage is
-  * truncated each round with `localCheckpoint` (iterative plans
-  * otherwise grow exponentially in the optimizer); a multi-executor
-  * deployment would use `checkpoint` to a reliable dir instead — swap
-  * [[truncate]] — at the cost of one HDFS write per round.
+  * truncated each round with [[graft.ops.Ops.advance]], the step
+  * [[graft.ops.Ops.iterate]] is built on (iterative plans otherwise
+  * grow exponentially in the optimizer); a multi-executor deployment
+  * would checkpoint to a reliable dir instead, at the cost of one HDFS
+  * write per round.
   */
 object ConnectedComponents {
-
-  /** Monitor for the scoped logger-level suppression in [[release]]. */
-  private val loggerGate = new Object
-
-  /** Per-round lineage truncation. Eager so each round's work is done
-    * (and measured) inside its own round, not re-run by later rounds.
-    */
-  private def truncate(df: DataFrame): DataFrame = df.localCheckpoint(true)
-
-  /** Free a superseded round's checkpoint blocks. localCheckpoint
-    * stores the round's edge set as cached RDD blocks; without an
-    * explicit unpersist, cleanup waits on ContextCleaner GC, so peak
-    * storage would grow with round count on large graphs. The plan a
-    * localCheckpoint returns is a single LogicalRDD leaf — unpersist
-    * its RDD once the next round has materialized.
-    */
-  private def release(df: DataFrame): Unit = {
-    // RDD.unpersist on a locally-checkpointed RDD logs a WARN that the
-    // lineage cannot be recomputed — correct in general, but here it is
-    // the POINT (the superseded round is dead; nothing references it),
-    // and one warning per round is pure noise in long jobs. Silence the
-    // logger only for the duration of the unpersist call, then restore
-    // its prior (effective) level — library code must not permanently
-    // reconfigure an application-wide logger.
-    // serialized on a single monitor: two concurrent callers racing the
-    // save/restore could otherwise read each other's temporary ERROR
-    // level as the "prior" level and restore it permanently, silencing
-    // the logger's WARNs for the whole application
-    val logName = "org.apache.spark.rdd.MapPartitionsRDD"
-    ConnectedComponents.loggerGate.synchronized {
-      val prior = org.apache.logging.log4j.LogManager.getLogger(logName).getLevel
-      org.apache.logging.log4j.core.config.Configurator.setLevel(
-        logName, org.apache.logging.log4j.Level.ERROR)
-      try df.queryExecution.analyzed.foreach {
-        case lr: org.apache.spark.sql.execution.LogicalRDD =>
-          lr.rdd.unpersist(blocking = false)
-        case _ => ()
-      } finally org.apache.logging.log4j.core.config.Configurator.setLevel(
-        logName, prior)
-    }
-  }
 
   /** Large-star: every node u attaches its LARGER neighbors to
     * m(u) = min(u ∪ neighbors(u)). Keeps connectivity, strictly reduces
@@ -217,19 +179,18 @@ object ConnectedComponents {
     // materialize the cleaned input ONCE: each round references the
     // edge set several times (symmetrization + both join sides), so an
     // unmaterialized upstream plan would be re-evaluated 4x in round 1
-    var e = truncate(edges
+    var e = edges
       .select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull &&
         col("src") =!= col("dst"))
-      .distinct())
+      .distinct()
+      .localCheckpoint(true)
 
     var (converged, cnt) = probe(e)
     var it = 0
     while (!converged && cnt > driverFinishEdges && it < maxIter) {
-      val next = truncate(smallStar(largeStar(e)))
-      release(e) // next is materialized; the prior round's blocks are dead
-      e = next
+      e = Ops.advance(e, smallStar(largeStar(e)))
       val (c2, n2) = probe(e)
       converged = c2; cnt = n2
       it += 1
@@ -246,7 +207,7 @@ object ConnectedComponents {
       members.union(roots)
     } else {
       val fin = driverFinish(e) // eager collect; e's blocks are dead after
-      release(e)
+      Ops.release(e)
       fin
     }
     nodes match {

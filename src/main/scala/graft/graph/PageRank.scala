@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.ops.Ops
+
 /** Iterative PageRank over an edge list (reference's graph surface is
   * portfolio clustering, `portfolio_graph.py` — this adds the other
   * canonical whole-graph analytic, with dangling-mass redistribution).
@@ -12,16 +14,16 @@ import org.apache.spark.storage.StorageLevel
   *  - Each iteration is ONE shuffle: contributions aggregate by dst.
   *    Dangling mass is a 1-row aggregate that enters the update as a
   *    lazy broadcast scalar — no driver-side collect of rank state.
-  *  - Rank state is localCheckpoint'ed (eager) per iteration: the
-  *    update references the previous iteration twice (contribution
-  *    join + dangling sum), so an untruncated lineage re-expands the
-  *    whole prefix 2^k times — and persistence alone is NOT enough:
-  *    a cached plan's STRING form still nests every prior iteration,
-  *    so after a few rounds merely emitting the SQL-listener plan
-  *    description OOMs the driver. localCheckpoint cuts both the
+  *  - Rank state advances through [[graft.ops.Ops.iterate]]: each
+  *    iteration is eagerly localCheckpoint'ed and the one it replaces
+  *    freed. The update references the previous iteration twice
+  *    (contribution join + dangling sum), so an untruncated lineage
+  *    re-expands the whole prefix 2^k times — and persistence alone is
+  *    NOT enough: a cached plan's STRING form still nests every prior
+  *    iteration, so after a few rounds merely emitting the SQL-listener
+  *    plan description OOMs the driver. localCheckpoint cuts both the
   *    recomputation lineage and the plan tree to a flat scan of the
-  *    materialized blocks (same discipline as sequencePack's prefix
-  *    sums, export/Packing.scala).
+  *    materialized blocks.
   *  - Cross-engine exactness: per-edge contributions are rounded to 12
   *    decimals and summed as DECIMAL(28,12) (combine-order-proof), and
   *    each iteration's rank is re-rounded to 12 decimals, so the
@@ -36,7 +38,6 @@ object PageRank {
     */
   def run(edges: DataFrame, iters: Int = 8,
           damping: Double = 0.85): DataFrame = {
-    val spark = edges.sparkSession
     // pre-partition the (static) edge table by src ONCE: the cache
     // preserves outputPartitioning, so every iteration's contribution
     // join reads e co-partitioned instead of re-exchanging it — at
@@ -52,12 +53,11 @@ object PageRank {
     val base = nodes.join(outdeg, Seq("node"), "left")
       .persist(StorageLevel.MEMORY_AND_DISK)
     val n = broadcast(base.agg(count(lit(1)).as("n")))
-    var pr = base.crossJoin(n)
+    val init = base.crossJoin(n)
       .select(col("node"), col("outdeg"), col("n"),
         (lit(1.0) / col("n")).as("pr"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
     val oneMinusD = math.rint((1.0 - damping) * 1e6) / 1e6 // literal, not 1-d float residue
-    for (_ <- 1 to iters) {
+    Ops.iterate(init, iters) { pr =>
       val contrib = pr.join(e, col("node") === col("src"))
         .groupBy(col("dst").as("node"))
         .agg(sum(round(col("pr") / col("outdeg"), 12)
@@ -65,17 +65,13 @@ object PageRank {
       val dangling = broadcast(pr.filter(col("outdeg").isNull)
         .agg(coalesce(sum(round(col("pr"), 12).cast("decimal(28,12)"))
           .cast("double"), lit(0.0)).as("dang")))
-      val next = base.crossJoin(n)
+      base.crossJoin(n)
         .join(contrib, Seq("node"), "left")
         .crossJoin(dangling)
         .select(col("node"), col("outdeg"), col("n"),
           round(lit(oneMinusD) / col("n") + lit(damping) *
             (coalesce(col("contrib"), lit(0.0)) + col("dang") / col("n")),
             12).as("pr"))
-        .localCheckpoint(true) // eager: truncates lineage AND plan tree
-      pr.unpersist(blocking = false)
-      pr = next
-    }
-    pr.select(col("node"), col("pr"))
+    }.select(col("node"), col("pr"))
   }
 }

@@ -1,8 +1,10 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ColumnBridge
 
 /** The core operator library: the reference's Postgres-isms re-expressed
   * as Catalyst-built-in compositions (SURVEY.md §2.4 A2-A7, §2.5 D1).
@@ -91,6 +93,38 @@ object Ops {
       if (df.rdd.getNumPartitions >= target) df
       else df.repartition(target, key)
     }
+  }
+
+  /** A fixed-round iterative loop with per-round lineage truncation:
+    * `init` and every round's `step` result are eagerly
+    * localCheckpoint'ed, and the state each one replaces is freed as
+    * soon as it exists. Without the truncation a state that the next
+    * round reads twice re-expands its whole prefix 2^k times, and even
+    * a cached plan's string form nests every prior round (the PageRank
+    * lesson). Returns the last round's checkpoint, which the caller's
+    * result reads; a multi-executor deployment would checkpoint to a
+    * reliable dir instead, here and in [[advance]].
+    */
+  def iterate(init: DataFrame, rounds: Int)(step: DataFrame => DataFrame): DataFrame =
+    (1 to rounds).foldLeft(init.localCheckpoint(true))((s, _) => advance(s, step(s)))
+
+  /** One truncate-and-free step: eagerly localCheckpoint `next` (so its
+    * round's work is done, and measured, inside its own round), then
+    * [[release]] `prev`, whose blocks `next` no longer reads.
+    */
+  def advance(prev: DataFrame, next: DataFrame): DataFrame = {
+    val cut = next.localCheckpoint(true)
+    release(prev)
+    cut
+  }
+
+  /** Free the blocks of a superseded round: `df` must be a
+    * localCheckpoint result, a plan that is one LogicalRDD leaf.
+    * Without this, cleanup waits on ContextCleaner GC, so peak storage
+    * would grow with the round count.
+    */
+  def release(df: DataFrame): Unit = df.queryExecution.analyzed match {
+    case lr: LogicalRDD => ColumnBridge.unpersistRDD(lr.rdd)
   }
 
   /** `count(*) FILTER (WHERE cond)` / `count(CASE WHEN cond THEN 1 END)` —

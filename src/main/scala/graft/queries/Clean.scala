@@ -1026,14 +1026,14 @@ object Clean extends QueryModule {
     *
     * Phase boundary: the cleaned corpus is referenced by four
     * downstream scans (unigram stream, bigram stream, vocabulary,
-    * join-back), so it is persisted once (the pipe1/pipe2 contract).
+    * join-back), so it is checkpointed once (the pipe1/pipe2 contract).
     */
   def pipe4CleanSelect(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
     val cleaned = par1ChunkDedupOn(docs).filter(col("n_kept") > 0)
       .select(col("doc_id"), col("cleaned").as("text"))
       .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id"))
-      .persist()
+      .localCheckpoint(true)
     Select.rhoExcessOn(cleaned)
   }
 

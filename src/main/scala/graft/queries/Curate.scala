@@ -399,7 +399,7 @@ object Curate extends QueryModule {
     * exact integer ceiling).
     *
     * Scale shape: one map-only blocklist scan (zero Exchange), the
-    * survivors persisted once (the excision chain references them
+    * survivors checkpointed once (the excision chain references them
     * three times), dd27's two linear token
     * shuffles, then two bounded per-language aggregates joined on the
     * 5-row language domain. Nothing pairwise, nothing windowed.
@@ -408,21 +408,21 @@ object Curate extends QueryModule {
     pipe7BlocklistCurateOn(Tables.documents(s, d))
 
   private[graft] def pipe7BlocklistCurateOn(docs: DataFrame): DataFrame = {
-    // persisted BEFORE it forks: inStats and the kept filter both
+    // checkpointed BEFORE it forks: inStats and the kept filter both
     // consume the blocked flag, and the AC scan is the cost this stage
-    // exists to pay once — unpersisted, each branch would re-scan the
+    // exists to pay once — otherwise each branch would re-scan the
     // corpus
     val flagged = docs.select(col("doc_id"), col("lang"), col("text"),
         (size(graft.functions.PhraseMatch.phrase_matches(col("text"),
           BlocklistPhrases)) > 0).as("blocked"))
-      .persist()
+      .localCheckpoint(true)
     val inStats = flagged.groupBy(col("lang")).agg(
       count(lit(1)).as("n_docs_in"),
       count(when(col("blocked"), 1)).as("n_blocked"))
     val kept = flagged.filter(!col("blocked"))
       .select(col("doc_id"), col("lang"), col("text"),
         size(split(lower(trim(col("text"))), "\\s+")).as("nw"))
-      .persist()
+      .localCheckpoint(true)
     val cleaned = graft.dedup.Dedup
       .spanExciseClean(kept, "doc_id", "text", k = 8)
       .withColumnRenamed("id", "doc_id")

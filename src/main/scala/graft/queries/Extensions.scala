@@ -1031,8 +1031,7 @@ object Extensions extends QueryModule {
     * chained CTEs with an identical merge fold (list_reduce).
     */
   def bpe1TrainMerges(s: SparkSession, d: String): DataFrame = {
-    val (merges, v) = Bpe.train(Tables.documents(s, d), "text", nMerges = 5)
-    v.unpersist()
+    val merges = Bpe.train(Tables.documents(s, d), "text", nMerges = 5)
     import s.implicits._
     merges.toDF("step", "merge_a", "merge_b", "weight")
   }
@@ -1044,8 +1043,8 @@ object Extensions extends QueryModule {
     */
   def bpe2ApplyCounts(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
-    val (_, v) = Bpe.train(docs, "text", nMerges = 5)
-    Bpe.applyCounts(docs, "text", "doc_id", v)
+    Bpe.applyCounts(docs, "text", "doc_id",
+      Bpe.train(docs, "text", nMerges = 5))
   }
 
   /** Radius (range) similarity search: ALL corpus vectors with cosine
@@ -1607,11 +1606,11 @@ object Extensions extends QueryModule {
     val quality = Tables.documents(s, d).filter(TextFunctions.qualityScore(col("text")) > 0.3)
     // phase boundary: the downstream near-dup pass references this
     // frame several times (gram explode + per-side set fetches + the
-    // final anti-join); persisting it turns the recomputes of the
+    // final anti-join); checkpointing it turns the recomputes of the
     // filter+semi-join subtree into 1
     val exactKept = quality.join(
         Dedup.exactKeepIds(quality, "doc_id", "text"), Seq("doc_id"), "left_semi")
-      .persist()
+      .localCheckpoint(true)
     val nearPairs = Dedup.exactJaccardPairs(exactKept, "doc_id", "text",
       threshold = 0.9)
     Dedup.keepAfterPairs(exactKept, "doc_id", nearPairs)
@@ -1653,7 +1652,7 @@ object Extensions extends QueryModule {
     val clean = corpus.join(
         scores.filter(col("contamination") > 0.2).select("doc_id"),
         Seq("doc_id"), "left_anti")
-      .persist()
+      .localCheckpoint(true)
     val pairs = Dedup.exactJaccardPairs(clean, "doc_id", "text",
       threshold = 0.8)
     val kept = Dedup.keepAfterPairs(clean, "doc_id", pairs)
@@ -1694,7 +1693,7 @@ object Extensions extends QueryModule {
     val clean = corpus.join(
         scores.filter(col("contamination") > 0.2).select("doc_id"),
         Seq("doc_id"), "left_anti")
-      .persist()
+      .localCheckpoint(true)
     val pairs = graft.queries.Clean.tieredNearDupPairsOn(
       clean, threshold = 0.8, dfCap = 16)
     val kept = Dedup.keepAfterPairs(clean, "doc_id", pairs)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.ops.Ops
 
 /** Round-11 batch nine: Markov-chain multi-touch attribution — the
   * principled alternative to att1's last-touch rule. User journeys
@@ -81,33 +82,29 @@ object Journey extends QueryModule {
       .select(col("variant").as("pvariant"), col("src"), col("dst"),
         col("p"))
       .localCheckpoint(true)
-    var active = variants.select(col("variant"),
-      lit("start").as("state"),
+    // a round's state is each variant's mass per state; the conversion
+    // mass absorbed so far rides along as the variant's `conv` row.
+    // Carried mass has 9 dp, so re-rounding it with the round's new
+    // inflow leaves every digit as a per-round sum would.
+    val init = variants.select(col("variant"), lit("start").as("state"),
       lit(1).cast("decimal(18,9)").as("mass"))
-      .localCheckpoint(true)
-    var convParts = Seq.empty[DataFrame]
-    for (_ <- 1 to 5) {
-      val flow = active
+    val last = Ops.iterate(init, 5) { st =>
+      st.filter(!col("state").isin("conv", "null"))
         .join(pv, col("variant") === col("pvariant") &&
           col("state") === col("src"))
         .select(col("variant"), col("dst"),
           (col("mass") * col("p")).as("m"))
-        .groupBy(col("variant"), col("dst"))
+        .unionAll(st.filter(col("state") === "conv")
+          .select(col("variant"), col("state"), col("mass")))
+        .groupBy(col("variant"), col("dst").as("state"))
         .agg(round(sum(col("m")), 9).cast("decimal(18,9)").as("mass"))
-        .localCheckpoint(true)
-      convParts :+= flow.filter(col("dst") === "conv")
-        .select(col("variant"), col("mass"))
-      active = flow.filter(!col("dst").isin("conv", "null"))
-        .select(col("variant"), col("dst").as("state"), col("mass"))
     }
     // LEFT join against the variant list: a variant whose removal kills
-    // every conversion has NO conv rows and must still appear with 0
+    // every conversion has NO conv row and must still appear with 0
     val conv = variants.select(col("variant"))
-      .join(convParts.reduce(_.unionAll(_))
-        .groupBy(col("variant"))
-        .agg(sum(col("mass")).as("cm")), Seq("variant"), "left")
+      .join(last.filter(col("state") === "conv"), Seq("variant"), "left")
       .select(col("variant"),
-        coalesce(col("cm"), lit(0).cast("decimal(18,9)")).as("conv_mass"))
+        coalesce(col("mass"), lit(0).cast("decimal(18,9)")).as("conv_mass"))
     val base = conv.filter(col("variant") === "base")
       .select(col("conv_mass").as("base_mass"))
     conv.crossJoin(broadcast(base))

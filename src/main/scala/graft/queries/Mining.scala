@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.dedup.Dedup
 import graft.functions.StringSimilarity
+import graft.ops.Ops
 import graft.ops.Ops.dsum
 import graft.sampling.Sampling.knuthPriority
 
@@ -115,26 +116,22 @@ object Mining extends QueryModule {
 
   /** The peel kernel: `rounds` rounds of degree-filter + edge
     * restriction over a canonical (a<b, distinct) edge list; returns
-    * the surviving nodes with their residual degree. Each round's
-    * result is eagerly localCheckpoint'ed — the edge frame feeds both
-    * the degree aggregate AND the next restriction, so an unpersisted
-    * loop recomputes the whole prefix 2^rounds times (the PageRank
-    * lesson).
+    * the surviving nodes with their residual degree. Rounds run
+    * through [[Ops.iterate]] — the edge frame feeds both the degree
+    * aggregate AND the next restriction, so an untruncated loop
+    * recomputes the whole prefix 2^rounds times (the PageRank lesson).
     */
   private[graft] def kcorePeel(e0: DataFrame, k: Int, rounds: Int): DataFrame = {
-    var e = e0.localCheckpoint(true)
-    for (_ <- 1 to rounds) {
+    val core = Ops.iterate(e0, rounds) { e =>
       val deg = e.select(col("a").as("node"))
         .unionAll(e.select(col("b").as("node")))
         .groupBy("node").agg(count(lit(1)).as("deg"))
       val keep = deg.filter(col("deg") >= k).select("node")
-      e = e
-        .join(keep.withColumnRenamed("node", "a"), Seq("a"), "left_semi")
+      e.join(keep.withColumnRenamed("node", "a"), Seq("a"), "left_semi")
         .join(keep.withColumnRenamed("node", "b"), Seq("b"), "left_semi")
-        .localCheckpoint(true)
     }
-    e.select(col("a").as("node"))
-      .unionAll(e.select(col("b").as("node")))
+    core.select(col("a").as("node"))
+      .unionAll(core.select(col("b").as("node")))
       .groupBy("node").agg(count(lit(1)).as("deg"))
   }
 

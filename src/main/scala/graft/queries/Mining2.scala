@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.ops.Ops
 
 /** Round-10 batch two: frequent-itemset mining beyond pairs (apriori
   * triples), link-analysis scoring on a bipartite graph (HITS hubs/
@@ -70,7 +71,8 @@ object Mining2 extends QueryModule {
     * iteration: two equi-shuffles on the edge keys + two 1-row max
     * aggregates broadcast back — the edge list itself never moves
     * twice (same co-partitioned shape PageRank documents); fixed
-    * 3 rounds, fixpoint loop = same kernel.
+    * 3 rounds of [[Ops.iterate]], one checkpoint each, fixpoint loop =
+    * same kernel.
     */
   def hits1BipartiteHits(s: SparkSession, d: String): DataFrame = {
     val edges = Tables.lineitem(s, d)
@@ -79,30 +81,33 @@ object Mining2 extends QueryModule {
       .select(col("o_custkey").as("c"), col("l_partkey").as("p"))
       .distinct()
       .localCheckpoint(true)
-    // authority starts at 1.0 for every part
-    var auth = edges.select(col("p")).distinct()
-      .withColumn("a", lit(1.0).cast("decimal(27,6)"))
-    var hub: DataFrame = null
-    for (_ <- 1 to 3) {
+    // authority starts at 1.0 for every part; a round's state is the
+    // tagged hub/authority frame the query returns
+    val init = edges.select(lit("authority").as("kind"), col("p").as("node"))
+      .distinct()
+      .withColumn("s", lit(1.0).cast("decimal(27,6)"))
+    Ops.iterate(init, 3) { st =>
+      val auth = st.filter(col("kind") === "authority")
+        .select(col("node").as("p"), col("s").as("a"))
       val hRaw = edges.join(auth, "p").groupBy("c")
         .agg(sum(col("a")).as("hraw"))
       val hMax = hRaw.agg(max(col("hraw")).as("hmax"))
-      hub = hRaw.crossJoin(broadcast(hMax))
+      val hub = hRaw.crossJoin(broadcast(hMax))
         .select(col("c"), round(col("hraw").cast("double") /
           col("hmax").cast("double"), 6).cast("decimal(27,6)").as("h"))
-        .localCheckpoint(true)
-      val aRaw = edges.join(hub, "c").groupBy("p")
-        .agg(sum(col("h")).as("araw"))
+      // the null-safe form of the equi-join on c infers no isnotnull(c)
+      // filter into hub's subtree, so the hub rows the round returns and
+      // the hub this join reads stay one computation (exchange reuse)
+      val aRaw = edges.join(hub.withColumnRenamed("c", "hc"),
+          col("c").isNotNull && col("c") <=> col("hc"))
+        .groupBy("p").agg(sum(col("h")).as("araw"))
       val aMax = aRaw.agg(max(col("araw")).as("amax"))
-      auth = aRaw.crossJoin(broadcast(aMax))
-        .select(col("p"), round(col("araw").cast("double") /
-          col("amax").cast("double"), 6).cast("decimal(27,6)").as("a"))
-        .localCheckpoint(true)
-    }
-    hub.select(lit("hub").as("kind"), col("c").as("node"),
-        col("h").cast("double").as("score6"))
-      .unionAll(auth.select(lit("authority").as("kind"),
-        col("p").as("node"), col("a").cast("double").as("score6")))
+      hub.select(lit("hub").as("kind"), col("c").as("node"), col("h").as("s"))
+        .unionAll(aRaw.crossJoin(broadcast(aMax))
+          .select(lit("authority").as("kind"), col("p").as("node"),
+            round(col("araw").cast("double") /
+              col("amax").cast("double"), 6).cast("decimal(27,6)").as("s")))
+    }.select(col("kind"), col("node"), col("s").cast("double").as("score6"))
   }
 
   // ---- dd14: tail/head overlap stitching -----------------------------

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.ops.Ops
 
 /** Round-11 batch five: propagation / featurization / threshold
   * signals — personalized PageRank from a seed node (random walk with
@@ -56,28 +57,25 @@ object Signals extends QueryModule {
       .localCheckpoint(true)
     val deg = dir.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     val seedDf = deg.agg(min(col("src")).as("seed"))
-    var p = deg.crossJoin(broadcast(seedDf))
+    val init = deg.crossJoin(broadcast(seedDf))
       .select(col("src").as("node"),
         when(col("src") === col("seed"), lit(1).cast("decimal(18,9)"))
           .otherwise(lit(0).cast("decimal(18,9)")).as("p"))
-      .localCheckpoint(true)
-    for (_ <- 1 to 3) {
+    Ops.iterate(init, 3) { p =>
       val contrib = dir.join(deg, "src")
         .join(p.withColumnRenamed("node", "src"), "src")
         .select(col("dst"),
           round(col("p").cast("double") / col("deg"), 12)
             .cast("decimal(18,12)").as("t12"))
         .groupBy(col("dst")).agg(sum(col("t12")).as("mass"))
-      p = deg.select(col("src").as("node"))
+      deg.select(col("src").as("node"))
         .join(contrib.withColumnRenamed("dst", "node"), Seq("node"), "left")
         .crossJoin(broadcast(seedDf))
         .select(col("node"),
           round(coalesce(col("mass").cast("double"), lit(0.0)) * 0.85 +
             when(col("node") === col("seed"), lit(0.15)).otherwise(lit(0.0)),
             9).cast("decimal(18,9)").as("p"))
-        .localCheckpoint(true)
-    }
-    p.select(col("node"), round(col("p").cast("double"), 6).as("score6"))
+    }.select(col("node"), round(col("p").cast("double"), 6).as("score6"))
       .filter(col("score6") > 0)
   }
 

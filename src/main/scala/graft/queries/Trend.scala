@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.ops.Ops
 
 /** Round-11 batch three: robust trend + seasonality + community
   * structure — the Theil-Sen median-of-slopes estimator (the robust
@@ -106,8 +107,8 @@ object Trend extends QueryModule {
     * neighbors' labels, ties to the smaller label — (count DESC,
     * label ASC) is a total order, so rounds are deterministic and the
     * unrolled oracle replays them exactly. Per-round cost: one
-    * co-partitioned join + one aggregate; each round's frame is
-    * eagerly localCheckpoint'ed (the PageRank plan-growth lesson).
+    * co-partitioned join + one aggregate; rounds run through
+    * [[Ops.iterate]] (the PageRank plan-growth lesson).
     */
   def lp1LabelProp(s: SparkSession, d: String): DataFrame = {
     val li = Tables.lineitem(s, d)
@@ -125,22 +126,19 @@ object Trend extends QueryModule {
     val dir = edges.select(col("a").as("src"), col("b").as("dst"))
       .unionAll(edges.select(col("b").as("src"), col("a").as("dst")))
       .localCheckpoint(true)
-    var labels = dir.select(col("src").as("node")).distinct()
+    val init = dir.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("label"))
-      .localCheckpoint(true)
-    for (_ <- 1 to 3) {
+    Ops.iterate(init, 3) { labels =>
       val votes = dir
         .join(labels.withColumnRenamed("node", "src"), "src")
         .groupBy(col("dst"), col("label"))
         .agg(count(lit(1)).as("votes"))
-      labels = votes.withColumn("rk", row_number().over(
+      votes.withColumn("rk", row_number().over(
           Window.partitionBy(col("dst"))
             .orderBy(col("votes").desc, col("label"))))
         .filter(col("rk") === 1)
         .select(col("dst").as("node"), col("label"))
-        .localCheckpoint(true)
-    }
-    labels.withColumnRenamed("label", "community")
+    }.withColumnRenamed("label", "community")
   }
 
   // ---- registry ------------------------------------------------------

@@ -93,50 +93,64 @@ object Bpe {
     * over the (persisted) vocab, a 1-row driver collect, and a
     * projection applying the winning merge — the winner becomes plan
     * literals, so nothing about the merge list ever shuffles.
-    * Returns (merges, final vocab); each merge is (step, a, b, weight).
-    * The final vocab is persisted but not yet computed; the caller
-    * unpersists it.
+    * Returns the merges, each (step, a, b, weight); every vocab it
+    * persisted is unpersisted before it returns.
     */
   def train(
       docs: DataFrame,
       textCol: String,
-      nMerges: Int): (Seq[(Int, String, String, Long)], DataFrame) = {
+      nMerges: Int): Seq[(Int, String, String, Long)] = {
+    val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
     var v = vocab(docs, textCol).persist()
     // v's parent stays cached until the next pair-count job, which reads
     // (and so materializes) v from it
     var parent: Option[DataFrame] = None
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-    var step = 1
-    while (step <= nMerges) {
+    var more = nMerges > 0
+    while (more) {
       val top = pairCounts(v)
         .orderBy(col("w").desc, col("a").asc, col("b").asc)
         .limit(1).collect()
       parent.foreach(_.unpersist())
-      parent = None
-      if (top.isEmpty) { step = nMerges + 1 } // no pairs left (degenerate)
-      else {
+      more = top.nonEmpty // no pairs left (degenerate)
+      if (more) {
         val (a, b, w) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-        merges += ((step, a, b, w))
-        parent = Some(v)
-        v = v.withColumn("syms", mergeFold(col("syms"), a, b)).persist()
-        step += 1
+        merges += ((merges.size + 1, a, b, w))
+        more = merges.size < nMerges
+        if (more) {
+          parent = Some(v)
+          v = merge(v, a, b).persist()
+        }
       }
     }
-    parent.foreach(_.unpersist())
-    (merges.toSeq, v)
+    v.unpersist()
+    merges.toSeq
   }
 
-  /** Apply a trained vocabulary back to the corpus: per-document token
-    * and symbol counts via a broadcast join word -> n_syms (the merged
-    * vocabulary is small; the corpus scans once, no shuffle before the
-    * per-doc aggregate).
+  private def merge(v: DataFrame, a: String, b: String): DataFrame =
+    v.withColumn("syms", mergeFold(col("syms"), a, b))
+
+  /** The corpus vocabulary with `merges` applied in order: [[vocab]]
+    * plus one merge-fold projection per merge.
+    */
+  def mergedVocab(
+      docs: DataFrame,
+      textCol: String,
+      merges: Seq[(Int, String, String, Long)]): DataFrame =
+    merges.foldLeft(vocab(docs, textCol)) { case (v, (_, a, b, _)) =>
+      merge(v, a, b)
+    }
+
+  /** Apply trained merges back to the corpus: per-document token and
+    * symbol counts via a broadcast join word -> n_syms against the
+    * merged vocabulary (it is small; the corpus scans once, no shuffle
+    * before the per-doc aggregate).
     */
   def applyCounts(
       docs: DataFrame,
       textCol: String,
       idCol: String,
-      mergedVocab: DataFrame): DataFrame = {
-    val perWord = mergedVocab.select(col("word"),
+      merges: Seq[(Int, String, String, Long)]): DataFrame = {
+    val perWord = mergedVocab(docs, textCol, merges).select(col("word"),
       size(split(col("syms"), " ")).cast("bigint").as("n_syms"))
     docs
       .select(col(idCol),

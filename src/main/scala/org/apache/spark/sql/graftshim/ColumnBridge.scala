@@ -58,6 +58,15 @@ object ColumnBridge {
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
       .queryExecution.analyzed
 
+  /** Free an RDD's blocks the way `RDD.unpersist` does, through
+    * `SparkContext.unpersistRDD` (`private[spark]`), without its WARN
+    * that a locally checkpointed RDD's lineage cannot be recomputed —
+    * for a superseded loop round ([[graft.ops.Ops.release]]) that is
+    * the point.
+    */
+  def unpersistRDD(rdd: org.apache.spark.rdd.RDD[_]): Unit =
+    rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
+
   /** Install a planner strategy on an EXISTING session (builder-time
     * path: `SparkSessionExtensions.injectPlannerStrategy`) — idempotent
     * by strategy identity, via Spark's sanctioned runtime hook

@@ -53,13 +53,13 @@ class BpeSpec extends SparkSpec {
       .groupBy(identity).map { case (w, g) => w -> g.length.toLong }
 
   test("train == reference implementation: merges and merged vocab") {
-    val (gotMerges, gotVocab) =
-      Bpe.train(Tables.documents(spark, sf), "text", nMerges = 5)
+    val docs = Tables.documents(spark, sf)
+    val gotMerges = Bpe.train(docs, "text", nMerges = 5)
     val (wantMerges, wantVocab) = referenceTrain(wordCounts, 5)
     assert(gotMerges === wantMerges)
-    val gotSyms = gotVocab.select("word", "syms").collect()
+    val gotSyms = Bpe.mergedVocab(docs, "text", gotMerges)
+      .select("word", "syms").collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
-    gotVocab.unpersist()
     assert(gotSyms.keySet === wantVocab.keySet)
     wantVocab.foreach { case (w, syms) =>
       assert(gotSyms(w) === syms.mkString(" "), s"word '$w'")
@@ -111,10 +111,9 @@ class BpeSpec extends SparkSpec {
   test("applyCounts: n_bpe between n_tokens and char count, and " +
       "totals match the reference vocab") {
     val docs = Tables.documents(spark, sf)
-    val (_, v) = Bpe.train(docs, "text", nMerges = 5)
-    val got = Bpe.applyCounts(docs, "text", "doc_id", v).collect()
+    val merges = Bpe.train(docs, "text", nMerges = 5)
+    val got = Bpe.applyCounts(docs, "text", "doc_id", merges).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    v.unpersist()
     assert(got.nonEmpty)
     val (_, refVocab) = referenceTrain(wordCounts, 5)
     val texts = Tables.documents(spark, sf).select("doc_id", "text")

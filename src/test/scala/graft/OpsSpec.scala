@@ -1,8 +1,10 @@
 package graft
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
+import graft.ops.Ops
 import graft.ops.Ops._
 
 /** Unit tests for the core operator combinators (SURVEY.md §2.4/§2.5):
@@ -279,5 +281,34 @@ class OpsSpec extends SparkSpec {
     assert(out.columns.toSeq === Seq("k", "v", "__top"))
     val rows = out.orderBy("k").collect()
     assert(rows.map(_.getString(2)).toSeq === Seq("hi", "x"))
+  }
+
+  test("iterate == the untruncated loop; only the last round's checkpoint " +
+      "stays, and no logger level changes") {
+    val logName = "org.apache.spark.rdd.MapPartitionsRDD"
+    def level = org.apache.logging.log4j.LogManager.getLogger(logName).getLevel
+    val levelBefore = level
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 2L))
+      .toDF("src", "dst")
+    val init = edges.select(col("src").as("node")).distinct()
+      .withColumn("x", lit(1L))
+    // a node's next value: the sum of its in-neighbours' values, plus
+    // the round's maximum (the state is read twice per round)
+    val step = (st: DataFrame) =>
+      edges.join(st, col("src") === col("node"))
+        .groupBy(col("dst").as("node")).agg(sum(col("x")).as("x"))
+        .crossJoin(st.agg(max(col("x")).as("mx")))
+        .select(col("node"), (col("x") + col("mx")).as("x"))
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val got = Ops.iterate(init, 4)(step)
+    val added = spark.sparkContext.getPersistentRDDs.keySet -- before
+    val last = got.queryExecution.analyzed match {
+      case lr: LogicalRDD => lr.rdd.id
+      case p => fail(s"iterate must return a checkpoint, got ${p.nodeName}")
+    }
+    assert(added === Set(last))
+    val want = (1 to 4).foldLeft(init)((st, _) => step(st))
+    assert(got.orderBy("node").collect() === want.orderBy("node").collect())
+    assert(level === levelBefore)
   }
 }

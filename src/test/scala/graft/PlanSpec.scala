@@ -266,10 +266,9 @@ class PlanSpec extends SparkSpec {
   test("BPE apply joins the vocab by broadcast; the corpus never " +
       "shuffles before the per-doc aggregate") {
     val docs = Tables.documents(spark, sf)
-    val (_, v) = graft.text.Bpe.train(docs, "text", nMerges = 2)
-    val df = graft.text.Bpe.applyCounts(docs, "text", "doc_id", v)
-    val plan = executedPlan(df)
-    v.unpersist()
+    val merges = graft.text.Bpe.train(docs, "text", nMerges = 2)
+    val plan = executedPlan(
+      graft.text.Bpe.applyCounts(docs, "text", "doc_id", merges))
     assert(plan.contains("BroadcastHashJoin"), plan)
     assert(!plan.contains("SortMergeJoin"), plan)
   }
