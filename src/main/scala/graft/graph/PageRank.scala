@@ -42,7 +42,10 @@ object PageRank {
     // preserves outputPartitioning, so every iteration's contribution
     // join reads e co-partitioned instead of re-exchanging it — at
     // cluster scale this removes the per-iteration shuffle of the
-    // biggest input (the edge list)
+    // biggest input (the edge list). A localCheckpoint would not do:
+    // its scan reports UnknownPartitioning. Both caches are released
+    // once the loop is done — the result is the last round's
+    // checkpoint and reads neither.
     val e = edges.select(col("src"), col("dst")).distinct()
       .repartition(col("src"))
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -57,7 +60,7 @@ object PageRank {
       .select(col("node"), col("outdeg"), col("n"),
         (lit(1.0) / col("n")).as("pr"))
     val oneMinusD = math.rint((1.0 - damping) * 1e6) / 1e6 // literal, not 1-d float residue
-    Ops.iterate(init, iters) { pr =>
+    try Ops.iterate(init, iters) { pr =>
       val contrib = pr.join(e, col("node") === col("src"))
         .groupBy(col("dst").as("node"))
         .agg(sum(round(col("pr") / col("outdeg"), 12)
@@ -73,5 +76,6 @@ object PageRank {
             (coalesce(col("contrib"), lit(0.0)) + col("dang") / col("n")),
             12).as("pr"))
     }.select(col("node"), col("pr"))
+    finally { e.unpersist(); base.unpersist() }
   }
 }

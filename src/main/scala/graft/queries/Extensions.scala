@@ -345,19 +345,27 @@ object Extensions extends QueryModule {
       .select(col("rank"), col("vec_id"), round(col("sim"), 4).as("sim4"))
   }
 
+  /** vec_id 0 as the one-row query frame (qid, qvec) of ann2/ann3/ann6;
+    * their corpus is every other vector.
+    */
+  private def queryFrame(s: SparkSession, d: String): DataFrame =
+    Tables.embeddings(s, d).filter(col("vec_id") === 0)
+      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
+
   def ann3Ivf(s: SparkSession, d: String): DataFrame = {
     val emb = Tables.embeddings(s, d).filter(col("vec_id") =!= 0)
     val (indexed, centroids) =
       Similarity.buildIvfIndex(emb, "vec_id", "embedding", nLists = 16)
-    Similarity.ivfTopK(indexed, centroids, "vec_id", "embedding",
-      queryVec(s, d), k = 10, nprobe = 4)
+    Similarity.ivfTopK(queryFrame(s, d), indexed, centroids, "qid", "qvec",
+      "vec_id", "embedding", k = 10, nprobe = 4)
+      .select(col("vec_id"), col("sim"))
   }
 
   def ann2Lsh(s: SparkSession, d: String): DataFrame =
-    Similarity.lshTopK(
+    Similarity.lshTopK(queryFrame(s, d),
       Tables.embeddings(s, d).filter(col("vec_id") =!= 0),
-      "vec_id", "embedding", queryVec(s, d), k = 10,
-      bits = 4, tables = 8)
+      "qid", "qvec", "vec_id", "embedding", k = 10, bits = 4, tables = 8)
+      .select(col("vec_id"), col("sim"))
 
   /** Product-quantized ANN ([[Similarity.trainPqCodebooks]]/
     * [[Similarity.pqEncode]]/[[Similarity.pqTopK]]): the
@@ -372,8 +380,9 @@ object Extensions extends QueryModule {
     val books = Similarity.trainPqCodebooks(
       emb, "vec_id", "embedding", dim = 64, m = 8, ksub = 32)
     val encoded = Similarity.pqEncode(emb, "vec_id", "embedding", books)
-    Similarity.pqTopK(encoded, emb, books, "vec_id", "embedding",
-      queryVec(s, d), k = 10, rerank = 100)
+    Similarity.pqTopK(queryFrame(s, d), encoded, emb, books, "qid", "qvec",
+      "vec_id", "embedding", k = 10, rerank = 100)
+      .select(col("vec_id"), col("sim"))
   }
 
   /** Driver-visible recall audit for the seeded ANN family (r10
@@ -402,39 +411,34 @@ object Extensions extends QueryModule {
     val emb = Tables.embeddings(s, d)
     val qids = Seq(0L, 1L, 2L, 3L)
     val corpus = emb.filter(!col("vec_id").isin(qids: _*))
-    val qvecs: Seq[(Long, Seq[Float])] = emb
-      .filter(col("vec_id").isin(qids: _*))
-      .select(col("vec_id"), col("embedding")).collect()
-      .map(r => r.getLong(0) -> r.getSeq[Float](1)).toSeq.sortBy(_._1)
-    // exact truth, ONE corpus pass for all queries (batchTopK ==
-    // per-query brute force, DedupSpec); checkpointed — four
-    // consumers (3 method joins + the truth aggregate) would each
-    // recompute the corpus scan otherwise
     val qdf = emb.filter(col("vec_id").isin(qids: _*))
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
+    // exact truth, ONE corpus pass for all queries (batchTopK ==
+    // per-query brute force, DedupSpec); checkpointed — two consumers
+    // (the hit join + the truth aggregate) would each recompute the
+    // corpus scan otherwise
     val truth = Similarity.batchTopK(qdf, corpus, "qid", "qvec",
         "vec_id", "embedding", k = 10)
       .select(col("qid"), col("vec_id"))
       .localCheckpoint(true)
-    // shared index builds (one per method, reused across queries —
-    // exactly how a serving deployment amortizes them)
+    // shared index builds (one per method, probed by every query in
+    // one pass — exactly how a serving deployment amortizes them)
     val (indexed, centroids) =
       Similarity.buildIvfIndex(corpus, "vec_id", "embedding", nLists = 16)
     val books = Similarity.trainPqCodebooks(
       corpus, "vec_id", "embedding", dim = 64, m = 8, ksub = 32)
     val encoded = Similarity.pqEncode(corpus, "vec_id", "embedding", books)
     val rerank = math.max(100L, corpus.count() / 6).toInt
-    def tagged(method: String, qid: Long, df: DataFrame): DataFrame =
-      df.select(lit(method).as("method"), lit(qid).as("qid"),
-        col("vec_id"))
-    val approx = qvecs.flatMap { case (qid, q) => Seq(
-      tagged("lsh", qid, Similarity.lshTopK(corpus, "vec_id", "embedding",
-        q, k = 10, bits = 4, tables = 8)),
-      tagged("ivf", qid, Similarity.ivfTopK(indexed, centroids, "vec_id",
-        "embedding", q, k = 10, nprobe = 8)),
-      tagged("pq", qid, Similarity.pqTopK(encoded, corpus, books, "vec_id",
-        "embedding", q, k = 10, rerank = rerank)))
-    }.reduce(_.unionAll(_))
+    def tagged(method: String, df: DataFrame): DataFrame =
+      df.select(lit(method).as("method"), col("qid"), col("vec_id"))
+    val approx = Seq(
+      tagged("lsh", Similarity.lshTopK(qdf, corpus, "qid", "qvec",
+        "vec_id", "embedding", k = 10, bits = 4, tables = 8)),
+      tagged("ivf", Similarity.ivfTopK(qdf, indexed, centroids, "qid",
+        "qvec", "vec_id", "embedding", k = 10, nprobe = 8)),
+      tagged("pq", Similarity.pqTopK(qdf, encoded, corpus, books, "qid",
+        "qvec", "vec_id", "embedding", k = 10, rerank = rerank))
+    ).reduce(_.unionAll(_))
     val hits = approx.join(truth, Seq("qid", "vec_id"), "left_semi")
       .groupBy(col("method")).agg(count(lit(1)).as("n_hit"))
     val truthAgg = truth.agg(count(lit(1)).as("n_truth"),

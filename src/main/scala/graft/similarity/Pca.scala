@@ -1,6 +1,6 @@
 package graft.similarity
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -54,35 +54,69 @@ object Pca {
     * checkable against a local replay (AnalyticsSpec).
     */
   def topComponent(emb: DataFrame, vecCol: String, dim: Int,
-                   iters: Int = 8): (Array[Double], Double) =
-    iterate(emb, vecCol, dim, iters, dimMeans(emb, vecCol, dim))
+                   iters: Int = 8): (Array[Double], Double) = {
+    val (vs, eigen) =
+      powerIterate(emb, vecCol, dim, iters, dimMeans(emb, vecCol, dim), 1)
+    (vs.head, eigen)
+  }
 
-  private def iterate(emb: DataFrame, vecCol: String, dim: Int,
-                      iters: Int, means: Array[Double]): (Array[Double], Double) = {
+  private def centeredCol(vecCol: String, means: Array[Double]): Column =
+    zip_with(col(vecCol).cast("array<double>"),
+      typedLit(means.toSeq), (x, m) => x - m)
+
+  /** Fused power iteration of 1 or 2 directions: both advance from the
+    * SAME cached centered scan each round — one aggregation job
+    * computes C·v (and C·u) together (posexplode of the zipped
+    * per-dimension products). The driver then requantizes and
+    * normalizes v; u is Gram-Schmidt-orthogonalized against the
+    * freshly updated v before its own requantize and normalize. The u
+    * update never feeds back into v, so v's iterates are the same for
+    * 1 and 2 directions. Returns the directions and ||C v|| of the
+    * final step.
+    *
+    * Driver/dual fixed points per round, in order: r9 the v iterate,
+    * normalize; project the RAW u iterate onto the new v, subtract,
+    * r9, normalize — the SQL duals replay exactly this sequence.
+    */
+  private def powerIterate(emb: DataFrame, vecCol: String, dim: Int,
+                           iters: Int, means: Array[Double],
+                           directions: Int): (Seq[Array[Double]], Double) = {
+    require(directions == 1 || directions == 2, s"directions=$directions")
     val n = emb.count().toDouble
-    val centered = emb
-      .select(zip_with(col(vecCol).cast("array<double>"),
-        typedLit(means.toSeq), (x, m) => x - m).as("__c"))
+    val centered = emb.select(centeredCol(vecCol, means).as("__c"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var v = Array.fill(dim)(1.0 / math.sqrt(dim))
+    val js = 0 until directions
+    val vs = Array.fill(directions)(Array.fill(dim)(1.0 / math.sqrt(dim)))
     var eigen = 0.0
     try {
       for (_ <- 0 until iters) {
-        val scored = centered.withColumn("__s",
-          Similarity.dot(col("__c"), typedLit(v.toSeq)))
+        val scored = js.foldLeft(centered) { (df, j) =>
+          df.withColumn(s"__s$j", Similarity.dot(col("__c"), typedLit(vs(j).toSeq)))
+        }
         val sums = scored
-          .select(posexplode(transform(col("__c"), x => x * col("__s")))
+          .select(posexplode(arrays_zip(js.map(j =>
+            transform(col("__c"), x => x * col(s"__s$j")).as(s"x$j")): _*))
             .as(Seq("pos", "xs")))
-          .groupBy(col("pos")).agg(sum(col("xs")).as("s"))
+          .groupBy(col("pos"))
+          .agg(sum(col("xs.x0")), js.tail.map(j => sum(col(s"xs.x$j"))): _*)
           .collect()
-        val acc = new Array[Double](dim)
-        sums.foreach(r => acc(r.getInt(0)) = r.getDouble(1))
-        val cv0 = acc.map(_ / n) // C v (covariance-matrix action)
-        val cv = cv0.map(r9) // requantize the iterate (cross-engine fixed point)
+        val acc = Array.fill(directions)(new Array[Double](dim))
+        sums.foreach(r => js.foreach(j => acc(j)(r.getInt(0)) = r.getDouble(j + 1)))
+        // v: C v (covariance-matrix action), requantized (cross-engine
+        // fixed point), normalized
+        val cv = acc(0).map(_ / n).map(r9)
         eigen = math.sqrt(cv.map(x => x * x).sum)
-        v = if (eigen == 0.0) v else cv.map(_ / eigen)
+        if (eigen != 0.0) vs(0) = cv.map(_ / eigen)
+        // u: Gram-Schmidt against the NEW v, then requantize, normalize
+        if (directions == 2) {
+          val cu0 = acc(1).map(_ / n)
+          val proj = cu0.zip(vs(0)).map(t => t._1 * t._2).sum
+          val cu = cu0.zip(vs(0)).map(t => t._1 - proj * t._2).map(r9)
+          val e2 = math.sqrt(cu.map(x => x * x).sum)
+          if (e2 != 0.0) vs(1) = cu.map(_ / e2)
+        }
       }
-      (v, eigen)
+      (vs.toSeq, eigen)
     } finally centered.unpersist()
   }
 
@@ -92,80 +126,30 @@ object Pca {
   def projectTop(emb: DataFrame, idCol: String, vecCol: String,
                  dim: Int, iters: Int = 8): DataFrame = {
     val means = dimMeans(emb, vecCol, dim)
-    val (v, _) = iterate(emb, vecCol, dim, iters, means)
+    val (Seq(v), _) = powerIterate(emb, vecCol, dim, iters, means, 1)
     emb.select(col(idCol),
-      Similarity.dot(
-        zip_with(col(vecCol).cast("array<double>"),
-          typedLit(means.toSeq), (x, m) => x - m),
-        typedLit(v.toSeq)).as("proj"))
+      Similarity.dot(centeredCol(vecCol, means), typedLit(v.toSeq)).as("proj"))
   }
 
-  /** Top-2 components via FUSED block subspace iteration: both
-    * directions advance from the SAME cached scan each round — one
-    * aggregation job computes C·v and C·u together (posexplode of the
-    * zipped per-dimension products), the driver normalizes v, then
-    * Gram-Schmidt-orthogonalizes u against the freshly updated v
-    * before its own normalize. This halves the round job count vs
-    * the former extract-v1-then-deflate sequence (15 jobs for 15
-    * rounds instead of 30 plus a deflated-column build) while the
-    * v-side iterates stay BIT-IDENTICAL to the single-component run
-    * (the u update never feeds back into v), so pca1's fixed-point
-    * discipline carries over unchanged. The finish is the same
-    * textbook Rayleigh-Ritz step — diagonalize the 2x2 covariance of
-    * the two projections and rotate the pair into its eigenbasis —
-    * which makes the output projections EXACTLY decorrelated (up to
-    * float) even when a small spectral gap leaves the individual
-    * directions short of their eigenvectors: the subspace converges
-    * at lambda2/lambda3 while the separation inside it is solved in
-    * closed form. Returns the 2-D corpus map (idCol, p1, p2), p1
-    * carrying the larger variance.
-    *
-    * Driver/dual fixed points per round, in order: r9 the v iterate,
-    * normalize; project the RAW u iterate onto the new v, subtract,
-    * r9, normalize — the SQL dual replays exactly this sequence.
+  /** Top-2 components via FUSED block subspace iteration
+    * ([[powerIterate]] with two directions): one aggregation job per
+    * round (15 jobs for 15 rounds instead of 30 plus a deflated-column
+    * build for extract-v1-then-deflate), and the v-side iterates equal
+    * the single-component run's, so pca1's fixed-point discipline
+    * carries over unchanged. The finish is the textbook Rayleigh-Ritz
+    * step — diagonalize the 2x2 covariance of the two projections and
+    * rotate the pair into its eigenbasis — which makes the output
+    * projections EXACTLY decorrelated (up to float) even when a small
+    * spectral gap leaves the individual directions short of their
+    * eigenvectors: the subspace converges at lambda2/lambda3 while the
+    * separation inside it is solved in closed form. Returns the 2-D
+    * corpus map (idCol, p1, p2), p1 carrying the larger variance.
     */
   def projectTop2(emb: DataFrame, idCol: String, vecCol: String,
                   dim: Int, iters: Int = 8): DataFrame = {
     val means = dimMeans(emb, vecCol, dim)
-    val nRows = emb.count().toDouble
-    val centered0 = emb
-      .select(zip_with(col(vecCol).cast("array<double>"),
-        typedLit(means.toSeq), (x, m) => x - m).as("__c"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var v1 = Array.fill(dim)(1.0 / math.sqrt(dim))
-    var v2 = Array.fill(dim)(1.0 / math.sqrt(dim))
-    try {
-      for (_ <- 0 until iters) {
-        val sums = centered0
-          .withColumn("__s1", Similarity.dot(col("__c"), typedLit(v1.toSeq)))
-          .withColumn("__s2", Similarity.dot(col("__c"), typedLit(v2.toSeq)))
-          .select(posexplode(arrays_zip(
-            transform(col("__c"), x => x * col("__s1")).as("x1"),
-            transform(col("__c"), x => x * col("__s2")).as("x2")))
-            .as(Seq("pos", "xs")))
-          .groupBy(col("pos"))
-          .agg(sum(col("xs.x1")).as("sx1"), sum(col("xs.x2")).as("sx2"))
-          .collect()
-        val acc1 = new Array[Double](dim)
-        val acc2 = new Array[Double](dim)
-        sums.foreach { r =>
-          acc1(r.getInt(0)) = r.getDouble(1)
-          acc2(r.getInt(0)) = r.getDouble(2)
-        }
-        // v side: identical to the single-component iteration
-        val cv1 = acc1.map(_ / nRows).map(r9)
-        val e1 = math.sqrt(cv1.map(x => x * x).sum)
-        v1 = if (e1 == 0.0) v1 else cv1.map(_ / e1)
-        // u side: Gram-Schmidt against the NEW v, then requantize
-        val cu0 = acc2.map(_ / nRows)
-        val proj = cu0.zip(v1).map(t => t._1 * t._2).sum
-        val cu = cu0.zip(v1).map(t => t._1 - proj * t._2).map(r9)
-        val e2 = math.sqrt(cu.map(x => x * x).sum)
-        v2 = if (e2 == 0.0) v2 else cu.map(_ / e2)
-      }
-    } finally centered0.unpersist()
-    def centered = zip_with(col(vecCol).cast("array<double>"),
-      typedLit(means.toSeq), (x, m) => x - m)
+    val (Seq(v1, v2), _) = powerIterate(emb, vecCol, dim, iters, means, 2)
+    val centered = centeredCol(vecCol, means)
     val raw = emb.select(col(idCol),
       Similarity.dot(centered, typedLit(v1.toSeq)).as("q1"),
       Similarity.dot(centered, typedLit(v2.toSeq)).as("q2"))

@@ -95,15 +95,6 @@ object Quantize {
     (emb.select(col(idCol), codes.as("qvec")), scale)
   }
 
-  /** Exact squared-L2 between an int-code array column and a constant
-    * centroid, in integer arithmetic (max 64 * 254^2 ~ 4.1e6 — far
-    * inside long range). Sequential fold => deterministic.
-    */
-  private def qdist2(qvec: Column, centroid: Seq[Int]): Column =
-    aggregate(
-      zip_with(qvec, typedLit(centroid), (x, y) => (x - y) * (x - y)),
-      lit(0L), (acc, d) => acc + d)
-
   /** Integer dot product of two int-code array columns — computed by
     * the fused native [[graft.functions.ArrayDot]] over exact double
     * casts (int8-code dots stay far inside 2^53, so the double is
@@ -117,60 +108,29 @@ object Quantize {
       .cast("bigint")
 
   /** Assign every quantized vector to its nearest centroid (exact
-    * integer L2^2, ties to the lowest centroid id). Centroids are plan
-    * literals — the corpus is scanned once, nothing shuffles; this is
-    * the IVF coarse-assignment shape of [[Similarity.buildIvfIndex]]
-    * moved into the exact integer domain.
-    *
-    * Two regimes, same semantics (ties to lowest cid in both):
-    *  - small k: a flat least() chain of k scored structs — fully
-    *    codegen'd, fastest per row;
-    *  - large k: ONE array-of-centroids literal + a constant-size
-    *    transform/array_min fold. The least() chain's PLAN grows with
-    *    k (at k=645 the probe measured codegen dominating the whole
-    *    job); the array form keeps the expression tree O(1) in k, so
-    *    k can be thousands without recompiling a k-wide tree. Past
-    *    ~10^5 centroids a literal stops being sensible at all — that
-    *    regime wants a broadcast-join assignment; documented, not
-    *    needed for the shipped k.
+    * integer L2^2, ties to the lowest centroid id). Centroids are ONE
+    * plan literal ([[Similarity.nearestCentroid]]) — the corpus is
+    * scanned once, nothing shuffles, and the expression stays the same
+    * size for any k; this is the IVF coarse-assignment shape of
+    * [[Similarity.buildIvfIndex]] moved into the exact integer domain.
+    * L2^2 = |v|^2 + (|c|^2 - 2 v.c) in double with the fused native
+    * ArrayDot: every term is integral and < 2^53, so the math is exact
+    * and the BIGINT cast loses nothing.
     *
     * Output: (id, qvec, cluster int, dist2 bigint).
     */
   def assignQ(
       quantized: DataFrame,
       idCol: String,
-      centroids: Seq[(Int, Seq[Int])],
-      literalChainMax: Int = 32): DataFrame = {
-    val best =
-      if (centroids.length <= literalChainMax) {
-        val scored = centroids.map { case (cid, c) =>
-          struct(qdist2(col("qvec"), c).as("d"), lit(cid).as("cid"))
-        }
-        if (scored.length == 1) scored.head else least(scored: _*)
-      } else {
-        // array_min on struct<d,cid> = (min dist, then min cid): the
-        // same tiebreak as the least() chain. Distance via
-        // |v|^2 + |c|^2 - 2 v.c with the fused native ArrayDot (HOF
-        // lambda bodies are interpreted — ArrayTransform is
-        // CodegenFallback — so the lambda's cost IS the dot; one
-        // fused loop beats zip_with's intermediate array by ~10x).
-        // All terms are integral and < 2^53, so the double math is
-        // exact and the BIGINT cast loses nothing.
-        val cids = typedLit(centroids.map(_._1))
-        val cvecsD = typedLit(centroids.map(_._2.map(_.toDouble)))
-        val cn2s = typedLit(centroids.map(
-          _._2.map(x => x.toDouble * x).sum))
-        val qd = col("qvec").cast("array<double>")
-        val vn2 = graft.functions.VectorFunctions.array_dot(qd, qd)
-        array_min(transform(cvecsD, (c, i) =>
-          struct(
-            (vn2 + element_at(cn2s, i + 1) -
-              lit(2.0) * graft.functions.VectorFunctions.array_dot(qd, c))
-              .cast("bigint").as("d"),
-            element_at(cids, i + 1).as("cid"))))
-      }
+      centroids: Seq[(Int, Seq[Int])]): DataFrame = {
+    val byId = centroids.sortBy(_._1)
+    val qd = col("qvec").cast("array<double>")
+    val best = Similarity.nearestCentroid(qd, byId.map(_._2.map(_.toDouble)))
     quantized.select(col(idCol), col("qvec"),
-      best.getField("cid").as("cluster"), best.getField("d").as("dist2"))
+      element_at(typedLit(byId.map(_._1)), best.getField("pos") + 1)
+        .as("cluster"),
+      (Similarity.dot(qd, qd) + best.getField("score")).cast("bigint")
+        .as("dist2"))
   }
 
   /** Lloyd k-means in the quantized integer domain: assignment is

@@ -14,8 +14,12 @@ import org.apache.spark.sql.functions._
   *    hash-bucket joins, turning O(N) per query into O(N/2^bits · T);
   *    recall is tuned with `tables` (multi-table OR-amplification).
   *
-  * All distance math is built-in higher-order functions (zip_with /
-  * aggregate) — codegen'd, no UDFs.
+  * Dot product and cosine are native codegen'd expressions
+  * ([[graft.functions.ArrayDot]], [[graft.functions.CosineSim]]); the
+  * rest is built-in (higher-order) functions — no UDFs. Query vectors
+  * and centroids are data the plan reads (a query frame, one array
+  * literal), never plan structure: the approximate searches take a
+  * frame of queries and rank every query in one pass.
   */
 object Similarity {
 
@@ -85,44 +89,58 @@ object Similarity {
       when(dot(vec, typedLit(p)) >= 0, lit(1L << i)).otherwise(lit(0L))
     }.reduce(_ + _)
 
-  /** LSH-bucketed approximate top-k: probe the query's bucket in each
-    * of `tables` hash tables, union candidates, rank exactly.
-    * At scale the bucketed DataFrame should be written bucketed/sorted
-    * by (table, bucket) so a probe is a partition-pruned scan.
+  /** LSH-bucketed approximate top-k for a frame of queries
+    * `(qidCol, qvecCol)`: a corpus row is a candidate for a query when
+    * they share a bucket in any of `tables` hash tables; candidates
+    * are ranked by exact cosine. Each side's bucket keys come from the
+    * same [[bucketExpr]], tagged with their table (`t << bits | bucket`)
+    * so one `arrays_overlap` tests every table at once: ONE corpus
+    * pass, a row matching several tables is still one candidate.
+    * Returns (qid, rank, id, sim) as [[batchTopK]] does.
     */
   def lshTopK(
-      emb: DataFrame,
+      queries: DataFrame,
+      corpus: DataFrame,
+      qidCol: String,
+      qvecCol: String,
       idCol: String,
       vecCol: String,
-      query: Seq[Float],
       k: Int,
       dim: Int = 64,
       bits: Int = 8,
       tables: Int = 4): DataFrame = {
-    val queryD = query.map(_.toDouble)
-    def bucketOf(planes: Seq[Seq[Double]]): Long =
-      planes.zipWithIndex.map { case (p, i) =>
-        val d = p.zip(queryD).map { case (w, x) => w * x }.sum
-        if (d >= 0) 1L << i else 0L
-      }.sum
-
-    // ONE scan with an OR-of-tables predicate (disjunction of `tables`
-    // bucket equalities, all codegen'd into a single pass over the
-    // vector) — not `tables` filtered scans unioned + dropDuplicates.
-    // A row matching several tables still passes the filter once, so
-    // the candidate set is the same multi-table union, dedup'd for
-    // free, with no shuffle before the final TakeOrdered.
-    val probe = (0 until tables).map { t =>
-      val planes = hyperplanes(dim, bits, t)
-      bucketExpr(col(vecCol), planes) === lit(bucketOf(planes))
-    }.reduce(_ || _)
-
-    emb.filter(probe)
-      .select(col(idCol),
-        cosine(col(vecCol), typedLit(query)).as("sim"))
-      .orderBy(col("sim").desc, col(idCol).asc)
-      .limit(k)
+    def keys(vec: Column): Column = array((0 until tables).map { t =>
+      lit(t.toLong << bits) + bucketExpr(vec, hyperplanes(dim, bits, t))
+    }: _*)
+    val q = queries.select(col(qidCol), col(qvecCol),
+      keys(col(qvecCol)).as("__qkeys"))
+    val scored = corpus
+      .select(col(idCol), col(vecCol), keys(col(vecCol)).as("__keys"))
+      .join(broadcast(q), arrays_overlap(col("__keys"), col("__qkeys")))
+      .select(col(qidCol), col(idCol),
+        cosine(col(vecCol), col(qvecCol)).as("sim"))
+    topPerQuery(scored, qidCol, idCol, "sim", k)
   }
+
+  /** The per-query ranking tail every top-k here shares: the `k`
+    * highest `scoreCol` rows of each query, ties to the lowest id,
+    * via a bounded heap per query ([[graft.functions.BoundedTopN]]) —
+    * the input is never globally sorted. Returns
+    * (qid, rank, id, score), rank from 1.
+    */
+  private def topPerQuery(
+      scored: DataFrame,
+      qidCol: String,
+      idCol: String,
+      scoreCol: String,
+      k: Int): DataFrame =
+    scored.groupBy(col(qidCol))
+      .agg(graft.functions.AggFunctions.bounded_topn(
+        struct((-col(scoreCol)).as("neg"), col(idCol), col(scoreCol)), k)
+        .as("top"))
+      .select(col(qidCol), posexplode(col("top")))
+      .select(col(qidCol), (col("pos") + 1).cast("int").as("rank"),
+        col(s"col.$idCol"), col(s"col.$scoreCol"))
 
   /** Exact top-k for a BATCH of query vectors in one corpus pass: the
     * realistic serving shape (score Q queries per corpus row against a
@@ -148,12 +166,7 @@ object Similarity {
       .crossJoin(broadcast(queries))
       .select(col(qidCol), col(idCol),
         cosine(col(vecCol), col(qvecCol)).as("sim"))
-    scored.groupBy(col(qidCol))
-      .agg(graft.functions.AggFunctions.bounded_topn(
-        struct((-col("sim")).as("negsim"), col(idCol), col("sim")), k).as("top"))
-      .select(col(qidCol), posexplode(col("top")))
-      .select(col(qidCol), (col("pos") + 1).cast("int").as("rank"),
-        col(s"col.$idCol"), col("col.sim"))
+    topPerQuery(scored, qidCol, idCol, "sim", k)
   }
 
   // ---- IVF (inverted-file) index: the k-means scale path ----
@@ -186,7 +199,10 @@ object Similarity {
 
     // assignment: argmin over lists of ||v - c||^2, equivalently
     // |c|^2 - 2 v.c (|v|^2 is constant per row) — nLists codegen'd
-    // ArrayDot evaluations + a least(struct) fold, all whole-stage
+    // ArrayDot evaluations + a least(struct) fold, all whole-stage.
+    // Kept unrolled, not [[nearestCentroid]]: the array form's
+    // transform lambda runs interpreted, and at nLists = 16 over
+    // 64-dim float vectors it measured ~3x the assignment's task time
     val scored = centroids.zipWithIndex.map { case (c, i) =>
       val c2 = c.map(x => x * x).sum
       struct((lit(c2) - lit(2.0) * dot(col(vecCol), typedLit(c.toSeq)))
@@ -199,6 +215,22 @@ object Similarity {
     val assigned = emb.select(col(idCol), col(vecCol),
       listExpr.as("list"))
     (assigned, centroids)
+  }
+
+  /** The nearest of a constant centroid set to `vec`, as
+    * struct(score, pos): the argmin over positions of |c|^2 - 2 v.c
+    * (squared L2 less the per-row constant |v|^2), ties to the lowest
+    * position. The centroids are ONE array literal folded by
+    * `array_min` over `transform`, so the expression is the same size
+    * for any number of centroids. Past ~10^5 centroids a literal stops
+    * being sensible; that regime wants a broadcast-join assignment.
+    */
+  private[graft] def nearestCentroid(
+      vec: Column, centroids: Seq[Seq[Double]]): Column = {
+    val norms = typedLit(centroids.map(c => c.map(x => x * x).sum))
+    array_min(transform(typedLit(centroids), (c, i) =>
+      struct((element_at(norms, i + 1) - lit(2.0) * dot(vec, c)).as("score"),
+        i.as("pos"))))
   }
 
   /** Seeded k-means++ init + Lloyd iterations over an in-memory
@@ -266,32 +298,34 @@ object Similarity {
     cs
   }
 
-  /** Probe the `nprobe` nearest centroid lists, rank candidates by
-    * exact cosine. Recall/cost knob: nprobe/nLists.
+  /** IVF top-k for a frame of queries `(qidCol, qvecCol)`: each query
+    * probes the `nprobe` lists whose centroids are most cosine-similar
+    * to it (ties to the lowest list), and the probed lists' vectors
+    * are ranked by exact cosine. Recall/cost knob: nprobe/nLists.
+    * Returns (qid, rank, id, sim) as [[batchTopK]] does.
     */
   def ivfTopK(
+      queries: DataFrame,
       indexed: DataFrame,
       centroids: Array[Array[Double]],
+      qidCol: String,
+      qvecCol: String,
       idCol: String,
       vecCol: String,
-      query: Seq[Float],
       k: Int,
       nprobe: Int = 4): DataFrame = {
-    val qd = query.map(_.toDouble).toArray
-    def cos(c: Array[Double]): Double = {
-      var dot = 0.0; var na = 0.0; var nb = 0.0
-      var i = 0
-      while (i < c.length) {
-        dot += c(i) * qd(i); na += c(i) * c(i); nb += qd(i) * qd(i); i += 1
-      }
-      dot / (math.sqrt(na) * math.sqrt(nb))
-    }
-    val probeLists = centroids.zipWithIndex
-      .sortBy { case (c, _) => -cos(c) }.take(nprobe).map(_._2)
-    indexed.filter(col("list").isin(probeLists.toSeq: _*))
-      .select(col(idCol), cosine(col(vecCol), typedLit(query)).as("sim"))
-      .orderBy(col("sim").desc, col(idCol).asc)
-      .limit(k)
+    // per query row: the nprobe smallest (-cosine, list) of an array
+    // over the centroid literal — a projection, no shuffle
+    val probes = queries.select(col(qidCol), col(qvecCol),
+      explode(slice(array_sort(transform(
+        typedLit(centroids.map(_.toSeq).toSeq), (c, i) =>
+          struct((-cosine(c, col(qvecCol))).as("neg"), i.as("list")))),
+        1, nprobe)).as("probe"))
+      .select(col(qidCol), col(qvecCol), col("probe.list").as("list"))
+    val scored = indexed.join(broadcast(probes), "list")
+      .select(col(qidCol), col(idCol),
+        cosine(col(vecCol), col(qvecCol)).as("sim"))
+    topPerQuery(scored, qidCol, idCol, "sim", k)
   }
 
   // ---- Product quantization (PQ): the memory-compression path ----
@@ -326,10 +360,8 @@ object Similarity {
     * representation that replaces the raw vector at rest. At 100 TB
     * this is THE reason PQ exists: a 64-dim float32 embedding is
     * 256 B; its 8 codes are 8 B — a 32x smaller scan for every
-    * query that doesn't need the exact vector. One pass, all
-    * codegen'd: per subspace an argmin over ksub of
-    * |c|^2 - 2<sub, c> (the [[buildIvfIndex]] least(struct) fold,
-    * once per subspace).
+    * query that doesn't need the exact vector. One pass: per subspace
+    * the [[nearestCentroid]] of the sub-vector among its codebook.
     *
     * Output: (id, codes array<int> of length m).
     */
@@ -339,62 +371,61 @@ object Similarity {
       vecCol: String,
       codebooks: Array[Array[Array[Double]]]): DataFrame = {
     val vecD = col(vecCol).cast("array<double>")
-    val codeCols = codebooks.zipWithIndex.map { case (cents, j) =>
+    val codes = codebooks.zipWithIndex.map { case (cents, j) =>
       val sub = cents.head.length
-      val subVec = slice(vecD, j * sub + 1, sub)
-      val scored = cents.zipWithIndex.map { case (c, i) =>
-        val c2 = c.map(x => x * x).sum
-        struct((lit(c2) - lit(2.0) * dot(subVec, typedLit(c.toSeq)))
-          .as("score"), lit(i).as("code"))
-      }
-      if (scored.length == 1) lit(0) else least(scored.toSeq: _*).getField("code")
+      nearestCentroid(slice(vecD, j * sub + 1, sub), cents.map(_.toSeq).toSeq)
+        .getField("pos")
     }
-    emb.select(col(idCol), array(codeCols.toSeq: _*).as("codes"))
+    emb.select(col(idCol), array(codes.toSeq: _*).as("codes"))
   }
 
-  /** Asymmetric-distance top-k over PQ codes with exact re-rank: the
-    * query's inner product against every codebook centroid is
-    * tabulated ONCE on the driver (m*ksub doubles) and shipped as a
-    * literal, so scoring a corpus row is m array lookups + adds
-    * (O(m)) instead of O(dim) multiply-adds over a 32x larger scan.
-    * The approximate-IP top `rerank` candidates then join back to the
-    * raw vectors BY ID for exact cosine — only `rerank` full vectors
-    * are ever read at query time. `rerank` is the recall/cost knob
-    * (rerank = corpus size degenerates to exact search; DedupSpec
-    * asserts that equivalence and a measured recall gate at the
-    * shipped setting).
+  /** Asymmetric-distance top-k over PQ codes with exact re-rank, for
+    * a frame of queries `(qidCol, qvecCol)`: each query's inner
+    * product with every codebook centroid is tabulated once per query
+    * in the plan (m*ksub dots of a sub-vector slice), so scoring a
+    * corpus row is m array lookups + adds (O(m)) instead of O(dim)
+    * multiply-adds over a 32x larger scan. Each query's top `rerank`
+    * approximate candidates then join back to the raw vectors BY ID
+    * for exact cosine — only those full vectors are read at query
+    * time. `rerank` is the recall/cost knob (rerank = corpus size
+    * degenerates to exact search; DedupSpec asserts that equivalence
+    * and a measured recall gate at the shipped setting).
+    * Returns (qid, rank, id, sim) as [[batchTopK]] does.
     */
   def pqTopK(
+      queries: DataFrame,
       encoded: DataFrame,
       emb: DataFrame,
       codebooks: Array[Array[Array[Double]]],
+      qidCol: String,
+      qvecCol: String,
       idCol: String,
       vecCol: String,
-      query: Seq[Float],
       k: Int,
       rerank: Int = 100): DataFrame = {
     val m = codebooks.length
     val ksub = codebooks.head.length
     val sub = codebooks.head.head.length
-    val qd = query.map(_.toDouble).toArray
-    val lut = Array.tabulate(m * ksub) { idx =>
-      val j = idx / ksub; val c = idx % ksub
-      var s = 0.0; var i = 0
-      while (i < sub) { s += qd(j * sub + i) * codebooks(j)(c)(i); i += 1 }
-      s
-    }
-    val lutCol = typedLit(lut.toSeq)
-    val approx = encoded.select(col(idCol),
-      aggregate(
-        zip_with(typedLit((0 until m).toList), col("codes"),
-          (j, c) => element_at(lutCol, j * lit(ksub) + c + lit(1))),
-        lit(0.0), (acc, x) => acc + x).as("approx_ip"))
-      .orderBy(col("approx_ip").desc, col(idCol).asc)
-      .limit(rerank)
-    approx.join(emb.select(col(idCol), col(vecCol)), Seq(idCol))
-      .select(col(idCol), cosine(col(vecCol), typedLit(query)).as("sim"))
-      .orderBy(col("sim").desc, col(idCol).asc)
-      .limit(k)
+    val q = queries.select(col(qidCol), col(qvecCol))
+    // lut[j * ksub + c] = <q's subspace-j slice, centroid c of book j>
+    val qd = col(qvecCol).cast("array<double>")
+    val lut = flatten(transform(
+      typedLit(codebooks.map(_.map(_.toSeq).toSeq).toSeq),
+      (cents, j) => transform(cents, c =>
+        dot(slice(qd, j * sub + 1, lit(sub)), c))))
+    val approx = encoded
+      .crossJoin(broadcast(q.select(col(qidCol), lut.as("__lut"))))
+      .select(col(qidCol), col(idCol),
+        aggregate(
+          zip_with(typedLit((0 until m).toList), col("codes"),
+            (j, c) => element_at(col("__lut"), j * lit(ksub) + c + lit(1))),
+          lit(0.0), (acc, x) => acc + x).as("approx_ip"))
+    val scored = topPerQuery(approx, qidCol, idCol, "approx_ip", rerank)
+      .join(emb.select(col(idCol), col(vecCol)), idCol)
+      .join(broadcast(q), qidCol)
+      .select(col(qidCol), col(idCol),
+        cosine(col(vecCol), col(qvecCol)).as("sim"))
+    topPerQuery(scored, qidCol, idCol, "sim", k)
   }
 
   /** Maximal-marginal-relevance rerank of a BOUNDED candidate set:

@@ -8,6 +8,11 @@ import graft.similarity.Similarity
 class DedupSpec extends SparkSpec {
   import spark.implicits._
 
+  /** The given embeddings as a query frame (qid, qvec). */
+  private def queryFrame(ids: Long*) =
+    Tables.embeddings(spark, sf).filter(col("vec_id").isin(ids: _*))
+      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
+
   private lazy val docs = Seq(
     (1L, "the quick brown fox jumps over the lazy dog again and again"),
     (2L, "the quick brown fox jumps over the lazy dog again and again"), // dup of 1
@@ -221,8 +226,8 @@ class DedupSpec extends SparkSpec {
       .head().getSeq[Float](1)
     val exact = Similarity.bruteForceTopK(emb, "vec_id", "embedding", q, 10)
       .select("vec_id").as[Long].collect().toSet
-    val approx = Similarity.lshTopK(emb, "vec_id", "embedding", q, 10,
-      bits = 4, tables = 8)
+    val approx = Similarity.lshTopK(queryFrame(0L), emb, "qid", "qvec",
+        "vec_id", "embedding", 10, bits = 4, tables = 8)
       .select("vec_id").as[Long].collect().toSet
     assert((exact intersect approx).size >= 5,
       s"recall too low: $exact vs $approx")
@@ -534,8 +539,8 @@ class DedupSpec extends SparkSpec {
       .select("vec_id").as[Long].collect().toSet
     val (indexed, centroids) =
       Similarity.buildIvfIndex(emb, "vec_id", "embedding", nLists = 16)
-    val approx = Similarity.ivfTopK(indexed, centroids, "vec_id",
-      "embedding", q, 10, nprobe = 8)
+    val approx = Similarity.ivfTopK(queryFrame(0L), indexed, centroids,
+        "qid", "qvec", "vec_id", "embedding", 10, nprobe = 8)
       .select("vec_id").as[Long].collect().toSet
     assert((exact intersect approx).size >= 4,
       s"ivf recall too low: $exact vs $approx")
@@ -552,18 +557,79 @@ class DedupSpec extends SparkSpec {
       emb, "vec_id", "embedding", dim = 64, m = 8, ksub = 32)
     val encoded = Similarity.pqEncode(emb, "vec_id", "embedding", books)
     // shipped setting (ann6): rerank=100 of ~500 — recall gate
-    val approx = Similarity.pqTopK(encoded, emb, books, "vec_id",
-        "embedding", q, k = 10, rerank = 100)
+    val approx = Similarity.pqTopK(queryFrame(0L), encoded, emb, books,
+        "qid", "qvec", "vec_id", "embedding", k = 10, rerank = 100)
       .select("vec_id").as[Long].collect().toSet
     val recall = (exact.toSet intersect approx).size
     assert(recall >= 8, s"pq recall too low: $exact vs $approx")
     // rerank covering the whole corpus must reproduce exact search
     // EXACTLY (candidate generation can no longer lose anything and
     // the re-rank IS brute force) — same ranks, same ids
-    val full = Similarity.pqTopK(encoded, emb, books, "vec_id",
-        "embedding", q, k = 10, rerank = emb.count().toInt)
-      .select("vec_id").as[Long].collect().toSeq
+    val full = Similarity.pqTopK(queryFrame(0L), encoded, emb, books,
+        "qid", "qvec", "vec_id", "embedding", k = 10,
+        rerank = emb.count().toInt)
+      .orderBy("rank").select("vec_id").as[Long].collect().toSeq
     assert(full === exact)
+  }
+
+  test("lsh, ivf and pq: a batch of ann7's 4 queries ranks each query " +
+      "exactly as its one-row run (ids and sims, per rank)") {
+    val qids = Seq(0L, 1L, 2L, 3L)
+    val corpus = Tables.embeddings(spark, sf)
+      .filter(!col("vec_id").isin(qids: _*))
+    val (indexed, centroids) =
+      Similarity.buildIvfIndex(corpus, "vec_id", "embedding", nLists = 16)
+    val books = Similarity.trainPqCodebooks(
+      corpus, "vec_id", "embedding", dim = 64, m = 8, ksub = 32)
+    val encoded = Similarity.pqEncode(corpus, "vec_id", "embedding", books)
+    val methods: Seq[(String, org.apache.spark.sql.DataFrame =>
+        org.apache.spark.sql.DataFrame)] = Seq(
+      "lsh" -> (qs => Similarity.lshTopK(qs, corpus, "qid", "qvec",
+        "vec_id", "embedding", k = 10, bits = 4, tables = 8)),
+      "ivf" -> (qs => Similarity.ivfTopK(qs, indexed, centroids, "qid",
+        "qvec", "vec_id", "embedding", k = 10, nprobe = 8)),
+      "pq" -> (qs => Similarity.pqTopK(qs, encoded, corpus, books, "qid",
+        "qvec", "vec_id", "embedding", k = 10, rerank = 100)))
+    def ranked(df: org.apache.spark.sql.DataFrame) =
+      df.select("qid", "rank", "vec_id", "sim").collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
+        .toSeq.sorted
+    methods.foreach { case (name, topK) =>
+      val batch = ranked(topK(queryFrame(qids: _*)))
+      assert(batch.map(_._1).distinct === qids, name)
+      qids.foreach { qid =>
+        assert(batch.filter(_._1 == qid) === ranked(topK(queryFrame(qid))),
+          s"$name qid=$qid")
+      }
+    }
+  }
+
+  test("pqEncode == driver-side argmin over each subspace's codebook, " +
+      "ties to the lowest code") {
+    val emb = Tables.embeddings(spark, sf)
+    val books = Similarity.trainPqCodebooks(
+      emb, "vec_id", "embedding", dim = 64, m = 8, ksub = 32)
+    // a duplicated centroid makes every vector nearest to it tie: the
+    // lower code must win
+    books(0)(5) = books(0)(2).clone()
+    val sub = 64 / 8
+    val expect = emb.select("vec_id", "embedding").collect().map { r =>
+      val v = r.getSeq[Float](1).map(_.toDouble)
+      r.getLong(0) -> books.indices.map { j =>
+        val x = v.slice(j * sub, (j + 1) * sub)
+        // |c|^2 - 2 x.c: squared L2 less the row constant |x|^2
+        books(j).indices.minBy { c =>
+          val cv = books(j)(c)
+          (cv.map(y => y * y).sum -
+            2.0 * x.zip(cv).map { case (a, b) => a * b }.sum, c)
+        }
+      }
+    }.toMap
+    val got = Similarity.pqEncode(emb, "vec_id", "embedding", books)
+      .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
+    assert(got.size === expect.size)
+    assert(got === expect)
+    assert(!got.values.exists(_.head == 5))
   }
 
   test("batchTopK equals per-query bruteForceTopK ranks") {

@@ -27,6 +27,13 @@ class PlanSpec extends SparkSpec {
     df.queryExecution.executedPlan.toString
   }
 
+  /** Expression nodes of the optimized plan, counted as perfbench's
+    * `queries.plan_expr_nodes` counts them.
+    */
+  private def exprNodes(df: DataFrame): Int =
+    df.queryExecution.optimizedPlan.collect { case n =>
+      n.expressions.map(_.collect { case e => e }.size).sum }.sum
+
   /** All plan nodes, descending THROUGH AQE stage boundaries
     * (materialized stages are leaves to TreeNode.collect).
     */
@@ -420,9 +427,7 @@ class PlanSpec extends SparkSpec {
       val plan = df.queryExecution.optimizedPlan
       // the unrolled form spelled every replicate out as its own
       // aggregate columns: thousands of nodes, growing with B
-      val exprNodes = plan.collect { case n =>
-        n.expressions.map(_.collect { case e => e }.size).sum }.sum
-      assert(exprNodes < 1000, plan)
+      assert(exprNodes(df) < 1000, plan)
       val byReplicate = plan.collect {
         case a: Aggregate if a.groupingExpressions.collect {
           case k: Attribute => k.name } == Seq("b") => a
@@ -431,6 +436,17 @@ class PlanSpec extends SparkSpec {
       assert(plan.collectLeaves().size == 1, plan)
       assert(plan.collect { case j: Join => j }.isEmpty, plan)
     }
+  }
+
+  test("ann6 and ann7: query vectors and centroids are data — ann6 under 1,000 expression nodes, ann7 under 2,000 with one approximate branch per method") {
+    import org.apache.spark.sql.catalyst.plans.logical.Union
+    val ann6 = graft.queries.Extensions.ann6Pq(spark, sf)
+    assert(exprNodes(ann6) < 1000, ann6.queryExecution.optimizedPlan)
+    val ann7 = graft.queries.Extensions.ann7RecallAudit(spark, sf)
+    val plan = ann7.queryExecution.optimizedPlan
+    assert(exprNodes(ann7) < 2000, plan)
+    val unions = plan.collect { case u: Union => u.children.size }
+    assert(unions == Seq(3), plan)
   }
 
   test("seq1 sequence mining: lead windows partition per user — no partition-less window") {

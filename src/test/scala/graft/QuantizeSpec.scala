@@ -82,18 +82,6 @@ class QuantizeSpec extends SparkSpec {
     }
   }
 
-  test("assignQ: the array-literal regime (large k) is row-identical " +
-      "to the least() chain, including ties") {
-    val init = initCentroids(8)
-    val chain = Quantize.assignQ(quantized, "vec_id", init)
-      .select("vec_id", "cluster", "dist2").collect().toSeq
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).sorted
-    val arr = Quantize.assignQ(quantized, "vec_id", init, literalChainMax = 0)
-      .select("vec_id", "cluster", "dist2").collect().toSeq
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).sorted
-    assert(chain === arr)
-  }
-
   test("lloydQ: total inertia never increases across iterations, " +
       "and the run is deterministic") {
     val init = initCentroids(8)
